@@ -133,6 +133,8 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
                 import numpy  # noqa: F401  — the encoder's imports
                 import pandas  # noqa: F401
 
+                import searty_spark  # noqa: F401  — lazy zip invalidation
+
                 yield from batches
 
             (

@@ -19,12 +19,20 @@ from pyspark.sql import SparkSession
 def _package_zip() -> str:
     """Zip searty_spark for shipping to executors (the programmatic
     twin of `spark-submit --py-files searty_spark.zip`). Without it,
-    Python workers whose cwd is not the repo can't unpickle our UDFs."""
+    Python workers whose cwd is not the repo can't unpickle our UDFs.
+    Written beside the target and renamed into place, so a concurrent
+    process never ships a half-written zip."""
     pkg_dir = Path(__file__).resolve().parent
     out = Path(tempfile.gettempdir()) / "searty_spark_pyfiles.zip"
-    with zipfile.ZipFile(out, "w") as z:
-        for f in sorted(pkg_dir.glob("*.py")):
-            z.write(f, f"searty_spark/{f.name}")
+    fd, tmp = tempfile.mkstemp(dir=out.parent, prefix=out.name, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for f in sorted(pkg_dir.glob("*.py")):
+                z.write(f, f"searty_spark/{f.name}")
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return str(out)
 
 
