@@ -12,8 +12,7 @@ the wall-clock consequence; output identity is asserted inside the
 run (v1 rows == v2 rows on the skew corpus, every rep).
 
 The v1 body below is a frozen copy of the pre-optimization
-implementation, kept ONLY for this measurement (same pattern as
-scripts/bench_concurrent_ab.py's r3-shape twin).
+implementation, kept ONLY for this measurement.
 
 Writes BENCH/excise_ab.json.
 Usage: python scripts/bench_excise_ab.py [n_docs] [reps]

@@ -363,11 +363,13 @@ def champion_theta(
 
 
 _VERIFY_CACHE: dict[tuple, bool] = {}
+_NAMES_CACHE: dict[tuple, frozenset[str]] = {}
 
 
 def _sidecar_state_key(index_dir: str) -> tuple:
     """Filesystem identity of (sidecar, segments) used to memoize the
-    fingerprint verification per process: one-shot paths (query_index
+    fingerprint verification and the championed term names per
+    process: one-shot paths (query_index
     constructs a ChampionClient per query) must not pay a scan per
     query. FILE mtimes are folded in alongside directory mtimes — an
     in-place part-file overwrite leaves its directory's mtime alone,
@@ -397,10 +399,12 @@ def _sidecar_state_key(index_dir: str) -> tuple:
 class ChampionClient:
     """Bounded per-query champion fetch + driver-side hot-term cache —
     the same deployment shape as wand.TermDfClient: the sidecar never
-    moves to the driver wholesale; each query pulls only its own terms
-    through a pushed-filter scan, repeats hit the cache."""
-
-    _ABSENT = object()
+    moves to the driver wholesale; each query pulls only its own
+    CHAMPIONED terms through a pushed-filter scan, repeats hit the
+    cache. The championed term names (at most write_champions'
+    ``max_terms`` strings, the bound head_terms fetches too) load once
+    per process per sidecar state, so a query whose terms have no list
+    starts no Spark job."""
 
     def __init__(self, spark: SparkSession, index_dir: str, verify: bool = True):
         """``verify=True`` (default) recomputes the segment fingerprint
@@ -411,41 +415,52 @@ class ChampionClient:
         client degrades to an EMPTY sidecar: every lookup returns {},
         champion_theta yields 0.0, pruning is off, results stay exact.
         Mirrors the stats.json format fail-fast policy, but soft: a
-        missing/stale sidecar is a performance state, not an error."""
+        missing/stale sidecar is a performance state, not an error.
+        Both the verdict and the term names are memoized per process
+        under _sidecar_state_key."""
         import threading
 
         p = Path(index_dir) / "champions"
-        self._df = spark.read.parquet(str(p)) if p.exists() else None
+        # the known schema spares the per-read schema-inference job
+        self._df = (
+            spark.read.schema(CHAMPION_SCHEMA).parquet(str(p)) if p.exists() else None
+        )
         self.stale = False
-        meta_p = Path(index_dir) / "champions_meta.json"
-        if self._df is not None and verify:
-            if not meta_p.exists():
-                self._df, self.stale = None, True  # pre-stamp sidecar: unprovable
+        self._names: frozenset[str] = frozenset()
+        if self._df is not None:
+            key = _sidecar_state_key(index_dir)
+            if verify and not self._verified(spark, index_dir, key):
+                self._df, self.stale = None, True
             else:
-                key = _sidecar_state_key(index_dir)
-                ok = _VERIFY_CACHE.get(key)
-                if ok is None:
-                    meta = json.loads(meta_p.read_text())
-                    from searty_spark.index import load_segments
-
-                    ok = (
-                        meta.get("format") == CHAMPION_FORMAT
-                        and meta.get("fingerprint")
-                        == segment_fingerprint(load_segments(spark, index_dir))
-                        and meta.get("sidecar_fingerprint")
-                        == sidecar_fingerprint(self._df)
-                    )
-                    _VERIFY_CACHE[key] = ok
-                if not ok:
-                    self._df, self.stale = None, True
-        self._cache: dict[str, object] = {}
+                names = _NAMES_CACHE.get(key)
+                if names is None:
+                    names = frozenset(r["term"] for r in self._df.select("term").collect())
+                    _NAMES_CACHE[key] = names
+                self._names = names
+        self._cache: dict[str, tuple] = {}
         self._lock = threading.Lock()
 
+    def _verified(self, spark: SparkSession, index_dir: str, key: tuple) -> bool:
+        meta_p = Path(index_dir) / "champions_meta.json"
+        if not meta_p.exists():
+            return False  # pre-stamp sidecar: unprovable
+        ok = _VERIFY_CACHE.get(key)
+        if ok is None:
+            meta = json.loads(meta_p.read_text())
+            from searty_spark.index import load_segments
+
+            ok = (
+                meta.get("format") == CHAMPION_FORMAT
+                and meta.get("fingerprint")
+                == segment_fingerprint(load_segments(spark, index_dir))
+                and meta.get("sidecar_fingerprint") == sidecar_fingerprint(self._df)
+            )
+            _VERIFY_CACHE[key] = ok
+        return ok
+
     def lookup(self, terms) -> dict[str, tuple]:
-        if self._df is None:
-            return {}
         with self._lock:
-            missing = [t for t in terms if t not in self._cache]
+            missing = [t for t in terms if t in self._names and t not in self._cache]
         if missing:
             rows = self._df.filter(F.col("term").isin(missing)).collect()
             with self._lock:
@@ -455,9 +470,5 @@ class ChampionClient:
                         np.asarray(r["tfs"], dtype=np.int64),
                         np.asarray(r["dls"], dtype=np.int64),
                     )
-                for t in missing:
-                    self._cache.setdefault(t, self._ABSENT)
         with self._lock:
-            return {
-                t: v for t in terms if (v := self._cache.get(t)) is not self._ABSENT
-            }
+            return {t: self._cache[t] for t in terms if t in self._cache}

@@ -114,121 +114,40 @@ def cmd_serve(args) -> None:
 
     Request syntax: a plain line is a BM25 top-k; `:phrase <q>` ranks
     a positional phrase; `:regex <pat>` needs a --store-docs index;
-    `:batch ["q1", "q2", ...]` answers MANY BM25 queries in ONE
-    segment scan (wand_topk_batch: each term decodes once per shard
-    and is shared across the batch — measured ~3x the per-query
-    throughput of answering them one job each); `:quit` exits.
-    Responses: {"query":..., "mode":..., "results":[[doc_id,
-    score]...], "wall_sec":...} — for :batch, "results" is a list of
-    per-query result lists aligned with the request array — or
-    {"error": ...}.
+    `:batch ["q1", "q2", ...]` answers many BM25 queries in one
+    request; `:quit` exits. Responses: {"seq":..., "query":...,
+    "mode":..., "results":[[doc_id, score]...], "batched":...,
+    "wall_sec":...} — for :batch, "results" is a list of per-query
+    result lists aligned with the request array — or {"seq":...,
+    "query":..., "error": ...}. Every request gets exactly one
+    response line, tagged with its arrival ``seq`` number.
 
-    ``--threads N`` answers up to N requests concurrently (the shape
-    the interleaved A/B in BENCH/concurrent_ab.json measured at
-    ~1.5x sequential throughput on the no-exchange path): response
-    lines then arrive in COMPLETION order, each tagged with its
-    request ``seq`` number so a pipelining client can reorder."""
+    Batching: the stdin loop only parses lines onto a queue; one
+    answering thread takes the first queued request plus every further
+    request ALREADY queued, up to ``--threads N`` of them (no timer),
+    and answers all their BM25, :phrase and :batch queries with ONE
+    Spark job (wand.serve_topk: one df fetch, one champion fetch, one
+    segment scan). ``"batched"`` is the number of requests that job
+    answered. :regex requests are answered one by one after it, on the
+    same thread. If a batch's job fails, each of its requests is
+    re-run alone, so one bad request never fails its neighbours.
+    ``--threads 1`` is strictly sequential; with N > 1 responses of a
+    batch may arrive out of request order — a pipelining client
+    reorders by ``seq``."""
+    import queue
     import threading
 
-    from searty_spark.champions import champion_theta
-    from searty_spark.phrase_seg import phrase_bm25_topk_segments
     from searty_spark.session import get_spark
-    from searty_spark.tokenize import tokenize
-    from searty_spark.wand import wand_topk
 
     spark = get_spark(cpus=args.cpus, app_name="searty-serve")
-    stats, seg, dic, champs = _warm_server(spark, args.index)
-    docs = None
-    docs_path = Path(args.index) / "documents"
-    if docs_path.exists():
-        docs = spark.read.parquet(str(docs_path)).cache()
-        docs.count()
-    threads = getattr(args, "threads", 1)
-    print(json.dumps({"ready": True, "n_docs": stats["n_docs"],
+    srv = _Server(spark, args.index, args.k)
+    threads = max(getattr(args, "threads", 1), 1)
+    print(json.dumps({"ready": True, "n_docs": srv.stats["n_docs"],
                       "index": args.index, "threads": threads}), flush=True)
-    out_lock = threading.Lock()
-
-    def answer(seq: int, mode: str, arg: str) -> None:
-        t0 = time.perf_counter()
-        try:
-            if mode == "bm25":
-                terms = sorted(set(tokenize(arg)))
-                dfl = dic.lookup(terms)
-                rows = wand_topk(
-                    seg, None, arg, k=args.k,
-                    n_docs=stats["n_docs"], avgdl=stats["avgdl"],
-                    n_shards=stats["n_shards"], df_lookup=dfl,
-                    theta0=champion_theta(
-                        champs.lookup(terms), dfl, args.k,
-                        stats["n_docs"], stats["avgdl"],
-                    ),
-                    pre_partitioned=True,
-                ).collect()
-                res = [[r["doc_id"], r["score"]] for r in rows]
-            elif mode == "phrase":
-                rows = phrase_bm25_topk_segments(
-                    seg, arg, k=args.k,
-                    n_docs=stats["n_docs"], avgdl=stats["avgdl"],
-                    n_shards=stats["n_shards"],
-                    df_lookup=dic.lookup(sorted(set(tokenize(arg)))),
-                    pre_partitioned=True,
-                ).collect()
-                res = [[r["doc_id"], r["score"]] for r in rows]
-            elif mode == "batch":
-                from searty_spark.wand import wand_topk_batch
-
-                qs = json.loads(arg)
-                if not isinstance(qs, list) or not all(
-                    isinstance(x, str) for x in qs
-                ):
-                    raise ValueError(
-                        ':batch expects a JSON array of query strings, e.g. '
-                        ':batch ["foo", "bar baz"]'
-                    )
-                qmap = {str(i): q for i, q in enumerate(qs)}
-                all_terms = sorted({t for q in qs for t in tokenize(q)})
-                rows = wand_topk_batch(
-                    seg, qmap, k=args.k,
-                    n_docs=stats["n_docs"], avgdl=stats["avgdl"],
-                    n_shards=stats["n_shards"],
-                    df_lookup=dic.lookup(all_terms),
-                    pre_partitioned=True,
-                ).collect()
-                by_q: dict[str, list] = {}
-                for r in rows:
-                    by_q.setdefault(r["query_id"], []).append(
-                        [r["doc_id"], r["score"]]
-                    )
-                res = [by_q.get(str(i), []) for i in range(len(qs))]
-            elif mode == "regex":
-                if docs is None:
-                    raise ValueError(":regex needs a --store-docs index")
-                from searty_spark.query import regex_search_segments
-
-                rows = regex_search_segments(
-                    docs, seg, arg, n_shards=stats["n_shards"]
-                ).collect()
-                res = [[r["doc_id"]] for r in rows]
-            else:
-                raise ValueError(f"unknown mode {mode!r} (bm25|phrase|regex|batch)")
-            line = json.dumps({
-                "seq": seq, "query": arg, "mode": mode, "results": res,
-                "wall_sec": round(time.perf_counter() - t0, 4),
-            })
-        # catch EVERYTHING, not just ValueError: a malformed :regex
-        # raises re.error (literal extraction) or Py4JJavaError (JVM
-        # rlike at collect) — an escaping exception would kill the
-        # worker thread silently and break the every-request-answered-
-        # exactly-once contract a pipelining client relies on
-        except Exception as err:  # noqa: BLE001
-            line = json.dumps({"seq": seq, "query": arg, "error": str(err)})
-        with out_lock:
-            print(line, flush=True)
-
-    import concurrent.futures as cf
-
-    pending: list = []
-    with cf.ThreadPoolExecutor(max_workers=max(threads, 1)) as ex:
+    requests: queue.Queue = queue.Queue()
+    answering = threading.Thread(target=srv.run, args=(requests, threads))
+    answering.start()
+    try:
         seq = 0
         for line in sys.stdin:
             q = line.strip()
@@ -240,13 +159,148 @@ def cmd_serve(args) -> None:
             if q.startswith(":"):
                 head, _, rest = q.partition(" ")
                 mode, arg = head[1:], rest
-            if threads > 1:
-                pending.append(ex.submit(answer, seq, mode, arg))
-            else:
-                answer(seq, mode, arg)
+            requests.put((seq, mode, arg))
             seq += 1
-        for f in pending:
-            f.result()
+    finally:
+        requests.put(None)  # answer what is queued, then stop
+        answering.join()
+
+
+class _Server:
+    """cmd_serve's warm state and its answering loop."""
+
+    def __init__(self, spark, index_dir: str, k: int):
+        self.k = k
+        self.stats, self.seg, self.dic, self.champs = _warm_server(spark, index_dir)
+        self.docs = None
+        docs_path = Path(index_dir) / "documents"
+        if docs_path.exists():
+            self.docs = spark.read.parquet(str(docs_path)).cache()
+            self.docs.count()
+
+    def run(self, requests, max_batch: int) -> None:
+        """Answer ``(seq, mode, arg)`` items from the queue until a
+        None: each batch is the first waiting item plus every further
+        one already queued, up to ``max_batch``."""
+        import queue
+
+        while (item := requests.get()) is not None:
+            batch = [item]
+            while len(batch) < max_batch:
+                try:
+                    item = requests.get_nowait()
+                except queue.Empty:
+                    break
+                if item is None:
+                    self.answer(batch)
+                    return
+                batch.append(item)
+            self.answer(batch)
+
+    def answer(self, batch: list[tuple[int, str, str]]) -> None:
+        reqs = []
+        for seq, mode, arg in batch:
+            if mode == "regex":
+                continue
+            try:
+                reqs.append((seq, mode, arg, self._parse(mode, arg)))
+            except ValueError as err:  # unknown mode, malformed :batch array
+                _emit({"seq": seq, "query": arg, "error": str(err)})
+        if reqs:
+            self._search(reqs)
+        for seq, mode, arg in batch:
+            if mode == "regex":
+                self._regex(seq, arg)
+
+    @staticmethod
+    def _parse(mode: str, arg: str) -> list[tuple[str, list[str]]]:
+        """A request's queries as (kind, tokens): BM25 terms (sorted,
+        distinct) or a phrase's trigram sequence."""
+        from searty_spark.tokenize import tokenize
+
+        if mode == "bm25":
+            return [("bm25", sorted(set(tokenize(arg))))]
+        if mode == "phrase":
+            return [("phrase", tokenize(arg))]
+        if mode == "batch":
+            qs = json.loads(arg)
+            if not isinstance(qs, list) or not all(isinstance(x, str) for x in qs):
+                raise ValueError(
+                    ':batch expects a JSON array of query strings, e.g. '
+                    ':batch ["foo", "bar baz"]'
+                )
+            return [("bm25", sorted(set(tokenize(q)))) for q in qs]
+        raise ValueError(f"unknown mode {mode!r} (bm25|phrase|regex|batch)")
+
+    def _search(self, reqs: list[tuple[int, str, str, list]]) -> None:
+        """One Spark job for every query of ``reqs``; on failure each
+        request is re-run alone, and a lone failure is its error line."""
+        from searty_spark.champions import champion_theta
+        from searty_spark.wand import serve_topk
+
+        t0 = time.perf_counter()
+        queries = [q for r in reqs for q in r[3]]
+        st = self.stats
+        try:
+            dfl = self.dic.lookup(sorted({t for _, toks in queries for t in toks}))
+            champs = self.champs.lookup(
+                sorted({t for kind, toks in queries if kind == "bm25" for t in toks})
+            )
+            batch = []
+            for kind, toks in queries:
+                theta0 = 0.0
+                if kind == "bm25":
+                    theta0 = champion_theta(
+                        {t: champs[t] for t in toks if t in champs}, dfl,
+                        self.k, st["n_docs"], st["avgdl"],
+                    )
+                batch.append((kind, toks, theta0))
+            found = iter(
+                serve_topk(self.seg, batch, self.k, st["n_docs"], st["avgdl"], dfl)
+            )
+        # catch EVERYTHING: a failing job raises Py4JJavaError or
+        # PythonException, and every request must still be answered
+        except Exception as err:  # noqa: BLE001
+            if len(reqs) > 1:
+                for r in reqs:
+                    self._search([r])
+            else:
+                seq, _, arg, _ = reqs[0]
+                _emit({"seq": seq, "query": arg, "error": str(err)})
+            return
+        wall = round(time.perf_counter() - t0, 4)
+        for seq, mode, arg, qs in reqs:
+            res = [next(found) for _ in qs]
+            _emit({
+                "seq": seq, "query": arg, "mode": mode,
+                "results": res if mode == "batch" else res[0],
+                "batched": len(reqs), "wall_sec": wall,
+            })
+
+    def _regex(self, seq: int, arg: str) -> None:
+        t0 = time.perf_counter()
+        try:
+            if self.docs is None:
+                raise ValueError(":regex needs a --store-docs index")
+            from searty_spark.query import regex_search_segments
+
+            rows = regex_search_segments(
+                self.docs, self.seg, arg, n_shards=self.stats["n_shards"]
+            ).collect()
+            line = {
+                "seq": seq, "query": arg, "mode": "regex",
+                "results": [[r["doc_id"]] for r in rows], "batched": 1,
+                "wall_sec": round(time.perf_counter() - t0, 4),
+            }
+        # a malformed :regex raises re.error (literal extraction) or
+        # Py4JJavaError (JVM rlike at collect), not only ValueError
+        except Exception as err:  # noqa: BLE001
+            line = {"seq": seq, "query": arg, "error": str(err)}
+        _emit(line)
+
+
+def _emit(line: dict) -> None:
+    print(json.dumps(line), flush=True)
 
 
 def cmd_upgrade(args) -> None:
@@ -619,8 +673,8 @@ def main(argv=None) -> None:
     sv.add_argument("--index", required=True)
     sv.add_argument("-k", type=int, default=10)
     sv.add_argument("--threads", type=int, default=1,
-                    help="answer up to N requests concurrently "
-                         "(responses in completion order, tagged seq)")
+                    help="answer at most N queued requests per Spark job "
+                         "(1 = strictly sequential; responses tagged seq)")
     sv.set_defaults(fn=cmd_serve)
 
     up = sub.add_parser("upgrade")

@@ -502,9 +502,6 @@ def write_index(
     # the token stream — the second tokenize pass the old design needed is
     # gone entirely.
     done = _done_units(out_dir) if resume else set()
-    need_dict = "dictionary" not in done
-    need_champ = "champions" not in done
-    seg_fp: int | None = None
 
     def run_dictionary() -> int:
         from pyspark.sql import Observation
@@ -555,27 +552,17 @@ def write_index(
         )
         _commit(out_dir, "champions", wall_sec=time.perf_counter() - t0, rows=n_ch)
 
-    if need_dict and need_champ:
-        # Both stages derive independently from the WRITTEN segments
-        # (head selection can sum per-shard df from the segment rows
-        # directly — the same df_global the dictionary materializes —
-        # and the champion meta stamp recomputes the segment
-        # fingerprint in its own thread), so they overlap (guide §2.6).
-        # nb: write_champions flips AQE/shuffle-partition conf around
-        # its bounded write; the dictionary job is a small aggregation
-        # for which those settings are immaterial either way.
-        with cf.ThreadPoolExecutor(max_workers=2) as pool:
-            f_dict = pool.submit(run_dictionary)
-            f_champ = pool.submit(run_champions, None, None)
-            f_champ.result()
-            seg_fp = f_dict.result()
+    # champions run AFTER the dictionary, never beside it: head
+    # selection reads the written dictionary and the sidecar stamp
+    # reuses the fingerprint the dictionary job observed (no segment
+    # re-aggregation, no fingerprint rescan), and write_champions'
+    # session-wide AQE/shuffle-partition flip races no other job
+    if "dictionary" not in done:
+        seg_fp = run_dictionary()
     else:
-        if need_dict:
-            seg_fp = run_dictionary()
-        elif resume:
-            seg_fp = _unit_metric(out_dir, "dictionary", "segment_fp")
-        if need_champ:
-            run_champions(spark.read.parquet(str(out / "dictionary")), seg_fp)
+        seg_fp = _unit_metric(out_dir, "dictionary", "segment_fp")
+    if "champions" not in done:
+        run_champions(spark.read.parquet(str(out / "dictionary")), seg_fp)
     return {"stats": stats, "units": metrics}
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from searty_spark import NGRAM_N
 from searty_spark.segments import decode_segment_positions, decode_segment_scores
 from searty_spark.tokenize import tokenize
-from searty_spark.wand import SCORE_COLS
+from searty_spark.wand import SCORE_COLS, _rows_by_term, _shard_rows
 
 # phrase matching additionally reads the position streams; cf/bucket
 # still never cross the exchange (mapInPandas consumes its child's
@@ -168,21 +168,8 @@ def phrase_ranges_segments(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        by_shard: dict[int, dict[str, dict]] = {}
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                shard_rows = by_shard.setdefault(int(rec["shard"]), {})
-                if rec["term"] in shard_rows:
-                    # >1 segment row per (shard, term) means unmerged
-                    # partial indexes — silently keeping one would drop
-                    # postings; merge_indexes first
-                    raise ValueError(
-                        f"duplicate segment row for (shard={rec['shard']}, "
-                        f"term={rec['term']!r}); merge partial indexes before querying"
-                    )
-                shard_rows[rec["term"]] = rec
-        for shard, rows in by_shard.items():
-            yield _shard_phrase(rows, toks, width)
+        for rows in _shard_rows(batches).values():
+            yield _shard_phrase(_rows_by_term(rows), toks, width)
 
     if pre_partitioned:
         rep = pruned
@@ -218,18 +205,8 @@ def docs_with_all_terms_segments(
     pruned = segments.filter(F.col("term").isin(terms)).select(*SCORE_COLS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        by_shard: dict[int, dict[str, dict]] = {}
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                shard_rows = by_shard.setdefault(int(rec["shard"]), {})
-                if rec["term"] in shard_rows:
-                    raise ValueError(
-                        f"duplicate segment row for (shard={rec['shard']}, "
-                        f"term={rec['term']!r}); merge partial indexes before querying"
-                    )
-                shard_rows[rec["term"]] = rec
-        for shard, rows in by_shard.items():
-            common = _shard_docs_with_all(rows, terms)
+        for rows in _shard_rows(batches).values():
+            common = _shard_docs_with_all(_rows_by_term(rows), terms)
             if common is not None:
                 yield pd.DataFrame({"doc_id": common})
 
@@ -311,18 +288,8 @@ def phrase_bm25_topk_segments(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        by_shard: dict[int, dict[str, dict]] = {}
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                shard_rows = by_shard.setdefault(int(rec["shard"]), {})
-                if rec["term"] in shard_rows:
-                    raise ValueError(
-                        f"duplicate segment row for (shard={rec['shard']}, "
-                        f"term={rec['term']!r}); merge partial indexes before querying"
-                    )
-                shard_rows[rec["term"]] = rec
-        for shard, rows in by_shard.items():
-            yield _shard_phrase_bm25(rows, toks, n_docs, avgdl)
+        for rows in _shard_rows(batches).values():
+            yield _shard_phrase_bm25(_rows_by_term(rows), toks, n_docs, avgdl)
 
     if pre_partitioned:
         rep = pruned

@@ -117,6 +117,33 @@ def _check_duplicate_term_rows(rows: list[dict]) -> None:
             )
 
 
+def _shard_rows(batches: Iterator[pd.DataFrame]) -> dict[int, list[dict]]:
+    """A mapInPandas input (segment rows, whole shards per partition)
+    -> shard -> that shard's row dicts."""
+    by_shard: dict[int, list[dict]] = {}
+    for pdf in batches:
+        for rec in pdf.to_dict("records"):
+            by_shard.setdefault(int(rec["shard"]), []).append(rec)
+    return by_shard
+
+
+def _rows_by_term(rows: list[dict]) -> dict[str, dict]:
+    """term -> the shard's one row for it. >1 row per (shard, term)
+    means unmerged partial indexes: keeping one would silently drop
+    postings, so the term-keyed kernels (phrase, batch) raise — merge
+    the partial indexes first (shard_topk's list form accepts disjoint
+    duplicates instead)."""
+    out: dict[str, dict] = {}
+    for rec in rows:
+        if rec["term"] in out:
+            raise ValueError(
+                f"duplicate segment row for (shard={rec['shard']}, "
+                f"term={rec['term']!r}); merge partial indexes before querying"
+            )
+        out[rec["term"]] = rec
+    return out
+
+
 def _gather_add(
     r: dict,
     blocks: list[int],
@@ -443,11 +470,7 @@ def wand_topk(
     withg = _with_df_global(pruned, terms, df_lookup)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        by_shard: dict[int, list[dict]] = {}
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                by_shard.setdefault(int(rec["shard"]), []).append(rec)
-        for shard, rows in by_shard.items():
+        for rows in _shard_rows(batches).values():
             yield shard_topk(rows, n_docs, avgdl, k, theta0)
 
     if pre_partitioned:
@@ -500,21 +523,8 @@ def wand_topk_batch(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        by_shard: dict[int, dict[str, dict]] = {}
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                shard_rows = by_shard.setdefault(int(rec["shard"]), {})
-                if rec["term"] in shard_rows:
-                    # >1 row per (shard, term) = unmerged partial
-                    # indexes; overwriting would silently drop postings
-                    # (the single-query list path handles them — this
-                    # batch path keys by term and cannot)
-                    raise ValueError(
-                        f"duplicate segment row for (shard={rec['shard']}, "
-                        f"term={rec['term']!r}); merge partial indexes before querying"
-                    )
-                shard_rows[rec["term"]] = rec
-        for shard, rows in by_shard.items():
+        for shard_rows in _shard_rows(batches).values():
+            rows = _rows_by_term(shard_rows)
             # decode every needed term once, share across queries
             cache: dict[str, tuple] = {}
             for qid, terms in q_terms.items():
@@ -561,3 +571,66 @@ def shard_topk_cached(
     scores = np.zeros(docs.size, dtype=np.float64)
     np.add.at(scores, inv, all_sc)
     return _topk_frame(docs, scores, k)
+
+
+def serve_topk(
+    segments: DataFrame,
+    requests: list[tuple[str, list[str], float]],
+    k: int,
+    n_docs: int,
+    avgdl: float,
+    df_lookup: dict[str, int],
+) -> list[list[list]]:
+    """Exact top-k for MANY requests — BM25 and ranked phrase mixed —
+    in ONE Spark job: the query server's batch (cli serve).
+
+    Each request is ``(mode, toks, theta0)``: mode "bm25" with its
+    distinct terms and its champion theta0 (wand_topk's semantics), or
+    "phrase" with the phrase's trigram sequence (phrase_bm25_topk_
+    segments' semantics; theta0 unused). Returns, aligned with
+    ``requests``, each one's ``[doc_id, score]`` list — identical to
+    what the single-request functions return.
+
+    ``segments`` must be shard-partitioned (wand_topk's
+    pre_partitioned contract, e.g. cli._warm_server's cached frame):
+    the job is one stage of one task per partition — term filter,
+    projection (position streams only when a phrase request is in the
+    batch), literal df_global map, then per shard and per request
+    shard_topk or _shard_phrase_bm25 cut to a local top-k. No
+    orderBy/limit, window or exchange: the driver keeps the first k
+    per request under (score DESC, doc_id ASC), exact because every
+    doc lives in one shard. ``df_lookup`` is a dict covering the
+    union of the requests' terms (TermDfClient.lookup)."""
+    from searty_spark.phrase_seg import PHRASE_COLS, _shard_phrase_bm25
+
+    out: list[list[list]] = [[] for _ in requests]
+    terms = sorted({t for _, toks, _ in requests for t in toks})
+    if not terms:
+        return out
+    cols = PHRASE_COLS if any(m == "phrase" for m, _, _ in requests) else SCORE_COLS
+    pruned = _with_df_global(
+        segments.filter(F.col("term").isin(terms)).select(*cols), terms, df_lookup
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for rows in _shard_rows(batches).values():
+            for i, (mode, toks, theta0) in enumerate(requests):
+                want = set(toks)
+                sub = [r for r in rows if r["term"] in want]
+                if not sub:
+                    continue
+                if mode == "phrase":
+                    frame = _shard_phrase_bm25(
+                        _rows_by_term(sub), toks, n_docs, avgdl
+                    ).sort_values(["score", "doc_id"], ascending=[False, True])
+                    frame = frame.head(k)[["doc_id", "score"]]
+                else:
+                    frame = shard_topk(sub, n_docs, avgdl, k, theta0)
+                if len(frame):
+                    yield frame.assign(req=i)
+
+    rows = pruned.mapInPandas(run, "doc_id long, score double, req long").collect()
+    for r in sorted(rows, key=lambda r: (r["req"], -r["score"], r["doc_id"])):
+        if len(out[r["req"]]) < k:
+            out[r["req"]].append([r["doc_id"], r["score"]])
+    return out

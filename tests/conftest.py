@@ -31,3 +31,23 @@ def oracle_index(small_corpus):
 
     docs = {r["doc_id"]: r["text"] for r in small_corpus.select("doc_id", "text").collect()}
     return build_index(docs)
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> the number of Spark jobs ``fn()`` starts on
+    the calling thread (a fresh job group, read from statusTracker)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -138,7 +138,7 @@ def test_theta0_is_lower_bound(spark, small_corpus, seg, corpus_stats):
 
 
 def test_write_index_emits_champions_and_query_identity(
-    spark, small_corpus, tmp_path
+    spark, small_corpus, tmp_path, jobs_of
 ):
     """write_index persists the sidecar; query_index (champion-seeded)
     equals wand_topk over the same segments without a seed."""
@@ -186,6 +186,24 @@ def test_write_index_emits_champions_and_query_identity(
     assert meta["sidecar_fingerprint"] == sidecar_fingerprint(
         spark.read.parquet(f"{d}/champions")
     )
+
+    # a term without a list starts NO Spark job (the championed names
+    # load once per process and sidecar state), and lookups return
+    # exactly the sidecar's rows for the championed terms
+    side = {
+        r["term"]: (list(r["doc_ids"]), list(r["tfs"]), list(r["dls"]))
+        for r in spark.read.parquet(f"{d}/champions").collect()
+    }
+    dic = spark.read.parquet(f"{d}/dictionary")
+    cold = sorted(r["term"] for r in dic.filter("df_global < 2").limit(3).collect())
+    assert cold and not set(cold) & set(side)
+    cc = ChampionClient(spark, d)
+    assert jobs_of(lambda: cc.lookup(cold)) == 0
+    assert cc.lookup(cold) == {}
+    hot = sorted(side)[:2]
+    got = cc.lookup(cold + hot)
+    assert {t: tuple(map(list, v)) for t, v in got.items()} == {t: side[t] for t in hot}
+    assert jobs_of(lambda: ChampionClient(spark, d).lookup(cold)) == 0
 
 
 def test_stale_sidecar_degrades_to_no_pruning(spark, small_corpus, tmp_path):

@@ -1,21 +1,57 @@
 """The stdin query-server loop (cli serve): request/response contract
 driven in-process against a real index — plain BM25 line, :phrase,
-:regex (store-docs), error handling, :quit termination. The BM25
-results must equal the one-shot query_index path (the warm server is
-a deployment shape, never a different engine)."""
+:regex (store-docs), error handling, :quit termination, and the
+batching rule (every queued BM25/phrase/:batch request of a batch is
+answered by ONE Spark job). Results must equal the one-shot paths
+(query_index, wand_topk, phrase_bm25_topk_segments): the warm server is
+a deployment shape, never a different engine."""
 
 import argparse
 import io
 import json
+import queue
+
+import pytest
 
 from searty_spark.index import query_index, write_index
 
 
-def test_serve_loop_contract(spark, small_corpus, tmp_path, monkeypatch, capsys):
+@pytest.fixture(scope="module")
+def served(spark, small_corpus, tmp_path_factory):
+    """store-docs index with a DENSE champion sidecar (min_df=2), so
+    head queries are theta0-seeded."""
+    from searty_spark.champions import write_champions
+    from searty_spark.index import load_segments, load_stats
+
+    d = str(tmp_path_factory.mktemp("serve") / "idx")
+    write_index(small_corpus, d, n_shards=2, n_buckets=4, store_docs=True)
+    st = load_stats(d)
+    write_champions(
+        load_segments(spark, d), d, st["n_docs"], st["avgdl"], min_df=2,
+        max_terms=10**6,
+    )
+    return d
+
+
+def _run(srv, items, max_batch) -> None:
+    q: queue.Queue = queue.Queue()
+    for seq, (mode, arg) in enumerate(items):
+        q.put((seq, mode, arg))
+    q.put(None)
+    srv.run(q, max_batch)
+
+
+def _replies(capsys) -> dict[int, dict]:
+    lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+    got = {r["seq"]: r for r in lines}
+    assert len(got) == len(lines)  # each request answered exactly once
+    return got
+
+
+def test_serve_loop_contract(spark, served, monkeypatch, capsys):
     from searty_spark import cli
 
-    d = str(tmp_path / "idx")
-    write_index(small_corpus, d, n_shards=2, n_buckets=4, store_docs=True)
+    d = served
 
     monkeypatch.setattr(
         "sys.stdin",
@@ -34,7 +70,7 @@ def test_serve_loop_contract(spark, small_corpus, tmp_path, monkeypatch, capsys)
 
     assert lines[0]["ready"] is True
     bm25 = lines[1]
-    assert bm25["mode"] == "bm25"
+    assert bm25["mode"] == "bm25" and bm25["batched"] == 1
     want = [
         [r["doc_id"], r["score"]] for r in query_index(spark, d, "shared", k=5).collect()
     ]
@@ -50,9 +86,9 @@ def test_serve_loop_contract(spark, small_corpus, tmp_path, monkeypatch, capsys)
     # :quit stopped the loop before the trailing line
     assert len(lines) == 5
 
-    # :batch answers many BM25 queries in ONE segment scan; results
-    # must equal the sequential per-query answers, aligned with the
-    # request array (including a no-hit query -> empty list)
+    # :batch answers many BM25 queries in one request; results must
+    # equal the sequential per-query answers, aligned with the request
+    # array (including a no-hit query -> empty list)
     monkeypatch.setattr(
         "sys.stdin",
         io.StringIO(
@@ -70,7 +106,7 @@ def test_serve_loop_contract(spark, small_corpus, tmp_path, monkeypatch, capsys)
 
     # a malformed regex raises re.error / Py4JJavaError, NOT ValueError
     # — the server must still answer that seq with an error line (and
-    # with --threads the worker must not die silently)
+    # the answering thread must not die silently)
     monkeypatch.setattr("sys.stdin", io.StringIO(":regex ([unclosed\nshared\n:quit\n"))
     cli.cmd_serve(argparse.Namespace(cpus=4, index=d, k=5, threads=2))
     elines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
@@ -78,8 +114,8 @@ def test_serve_loop_contract(spark, small_corpus, tmp_path, monkeypatch, capsys)
     assert sorted(got_e) == [0, 1]
     assert "error" in got_e[0] and "results" in got_e[1]
 
-    # --threads: responses arrive in completion order, tagged with seq;
-    # every request is answered exactly once and bm25 results match
+    # --threads: responses are tagged with seq; every request is
+    # answered exactly once and bm25 results match
     monkeypatch.setattr(
         "sys.stdin", io.StringIO("shared\nmodule\nquery\nshared\n:quit\n")
     )
@@ -89,6 +125,101 @@ def test_serve_loop_contract(spark, small_corpus, tmp_path, monkeypatch, capsys)
     got = {r["seq"]: r for r in clines[1:]}
     assert sorted(got) == [0, 1, 2, 3]
     assert got[0]["results"] == want and got[3]["results"] == want
+
+
+def test_serve_batch_is_one_job_and_matches_single_requests(
+    spark, served, jobs_of, capsys
+):
+    """A mixed batch — BM25, phrase, a repeated query, a no-hit query,
+    a theta0-seeded head query and a :batch — queued before the loop
+    starts is answered by exactly ONE Spark job at max_batch = N, and
+    every answer equals its single-request function's."""
+    from searty_spark import cli
+    from searty_spark.champions import champion_theta
+    from searty_spark.index import load_segments, load_stats
+    from searty_spark.phrase_seg import phrase_bm25_topk_segments
+    from searty_spark.tokenize import tokenize
+    from searty_spark.wand import wand_topk
+
+    d, k = served, 5
+    st = load_stats(d)
+    srv = cli._Server(spark, d, k)
+    items = [
+        ("bm25", "shared"),
+        ("phrase", "shared phrase"),
+        ("bm25", "module query"),
+        ("bm25", "shared"),
+        ("bm25", "@@"),
+        ("phrase", "spark"),
+        ("batch", '["module", "@@", "the shared"]'),
+    ]
+    head = sorted(set(tokenize("shared")))
+    assert champion_theta(
+        srv.champs.lookup(head), srv.dic.lookup(head), k, st["n_docs"], st["avgdl"]
+    ) > 0.0  # "shared" is a theta0-seeded head query
+
+    _run(srv, items, len(items))  # warm the df and champion caches
+    capsys.readouterr()
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 1
+    got = _replies(capsys)
+
+    seg = load_segments(spark, d)
+    dic = spark.read.parquet(f"{d}/dictionary")
+
+    def bm25(q):
+        return [[r["doc_id"], r["score"]] for r in wand_topk(
+            seg, None, q, k=k, n_docs=st["n_docs"], avgdl=st["avgdl"],
+            n_shards=st["n_shards"], df_lookup=dic,
+        ).collect()]
+
+    def phrase(q):
+        return [[r["doc_id"], r["score"]] for r in phrase_bm25_topk_segments(
+            seg, q, k=k, n_docs=st["n_docs"], avgdl=st["avgdl"],
+            n_shards=st["n_shards"], df_lookup=dic,
+        ).collect()]
+
+    assert sorted(got) == list(range(len(items)))
+    for seq, (mode, arg) in enumerate(items):
+        r = got[seq]
+        assert r["mode"] == mode and r["batched"] == len(items), r
+        if mode == "batch":
+            assert r["results"] == [bm25(q) for q in json.loads(arg)]
+        else:
+            assert r["results"] == (phrase(arg) if mode == "phrase" else bm25(arg))
+    assert got[0]["results"] and got[1]["results"] and got[4]["results"] == []
+    assert got[0]["results"] == got[3]["results"]
+
+    # --threads 1 stays one request per job
+    assert jobs_of(lambda: _run(srv, items[:3], 1)) == 3
+    assert {r["batched"] for r in _replies(capsys).values()} == {1}
+
+
+def test_serve_batch_failure_is_isolated(spark, served, monkeypatch, capsys):
+    """A request whose job fails gets an error line; its neighbours in
+    the batch are re-run alone and still get their results."""
+    from searty_spark import cli
+    from searty_spark.tokenize import tokenize
+    from searty_spark.wand import TermDfClient
+
+    srv = cli._Server(spark, served, 5)
+    _run(srv, [("bm25", "shared"), ("bm25", "module")], 2)
+    want = _replies(capsys)
+
+    # a df lookup that misses an indexed term makes the scoring kernel
+    # raise inside the Spark job for any request using that term
+    bad = set(tokenize("query"))
+    real = TermDfClient.lookup
+    monkeypatch.setattr(
+        TermDfClient, "lookup",
+        lambda self, terms: {t: v for t, v in real(self, terms).items() if t not in bad},
+    )
+    _run(srv, [("bm25", "shared"), ("bm25", "query"), ("bm25", "module")], 3)
+    got = _replies(capsys)
+    assert sorted(got) == [0, 1, 2]
+    assert "df_lookup has no entry" in got[1]["error"]
+    assert got[0]["results"] == want[0]["results"]
+    assert got[2]["results"] == want[1]["results"]
+    assert got[0]["batched"] == got[2]["batched"] == 1
 
 
 def test_clean_subcommand_end_to_end(spark, tmp_path, capsys):

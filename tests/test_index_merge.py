@@ -353,3 +353,35 @@ def test_upgrade_format1_index(spark, corpus, tmp_path_factory):
     # upgrading a current-format index is refused
     with pytest.raises(ValueError, match="already format"):
         upgrade_index(spark, fresh_dir, str(base / "nope"))
+
+
+def _dir_bytes(d: Path) -> list[bytes]:
+    """A written table's content: its part files' bytes, name-independent
+    (part file names carry a per-write UUID)."""
+    return sorted(f.read_bytes() for f in d.glob("part-*"))
+
+
+def test_build_is_deterministic_and_stamps_without_rescan(
+    spark, tmp_path, monkeypatch
+):
+    """Champions run after the dictionary and reuse the segment
+    fingerprint its job observed: write_index never calls
+    segment_fingerprint. Two builds of one corpus write byte-identical
+    dictionary and champion sidecars (300 docs, so the default min_df
+    of 256 leaves real head terms)."""
+    import searty_spark.champions as champions
+
+    def no_rescan(_segments):
+        raise AssertionError("write_index rescanned the segments for the fingerprint")
+
+    monkeypatch.setattr(champions, "segment_fingerprint", no_rescan)
+    docs = synth_corpus(spark, 300, seed=7).cache()
+    a, b = tmp_path / "a", tmp_path / "b"
+    for d in (a, b):
+        write_index(docs, str(d), n_shards=2, n_buckets=4)
+    assert spark.read.parquet(str(a / "champions")).count() > 0
+    for sub in ("dictionary", "champions"):
+        assert _dir_bytes(a / sub) == _dir_bytes(b / sub), sub
+    assert (a / "champions_meta.json").read_text() == (
+        b / "champions_meta.json"
+    ).read_text()
