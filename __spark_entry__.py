@@ -624,7 +624,13 @@ def _ann_index_dir(spark, sf, residual: bool = True) -> str:
     scheme-relative (CLAUDE.md), so a gate whose DuckDB twin replays
     flat PQ must query a flat artifact — cross-scheme "identity" via
     the refine re-rank holds only while both refine sets happen to
-    contain the same top-k, and it measurably breaks at sf0.1."""
+    contain the same top-k, and it measurably breaks at sf0.1.
+
+    The cache dir is named after the sf dir's basename only, so
+    ``source.json`` records which embeddings file the artifact was
+    built from (resolved path, size, mtime_ns): an sf dir of the same
+    basename elsewhere, or a regenerated file, rebuilds instead of
+    reusing a foreign artifact."""
     import tempfile
     from pathlib import Path
 
@@ -634,22 +640,29 @@ def _ann_index_dir(spark, sf, residual: bool = True) -> str:
 
     tag = f"c{IVF_CELLS}i{IVF_ITER}m{PQ_M}k{PQ_K}" + ("" if residual else "flat")
     d = Path(tempfile.gettempdir()) / f"searty_ann_gate_{Path(sf).name}_{tag}"
-    stats_p = d / "ann_stats.json"
+    emb_p = Path(sf, "embeddings.parquet").resolve()
+    emb_st = emb_p.stat()
+    source = {"path": str(emb_p), "size": emb_st.st_size, "mtime_ns": emb_st.st_mtime_ns}
+    stats_p, source_p = d / "ann_stats.json", d / "source.json"
     fresh = False
-    if stats_p.exists():
+    if stats_p.exists() and source_p.exists():
         try:
             st = json.loads(stats_p.read_text())
             fresh = (
                 st.get("format") == ann_index.ANN_FORMAT
                 and st.get("residual") == residual
+                and json.loads(source_p.read_text()) == source
             )
         except ValueError:
             fresh = False  # truncated/corrupt leftover: rebuild, don't crash
-    if not fresh:  # absent OR a stale-format leftover from a prior build
+    if not fresh:  # absent, stale-format, or built from other embeddings
+        # unstamp first: a build that dies midway must not look fresh
+        source_p.unlink(missing_ok=True)
         ann_index.write_ann_index(
             _emb(spark, sf), str(d), n_cells=IVF_CELLS, n_iter=IVF_ITER,
             sample=IVF_SAMPLE, m=PQ_M, pq_k=PQ_K, residual=residual,
         )
+        source_p.write_text(json.dumps(source))
     return str(d)
 
 

@@ -180,7 +180,7 @@ def main():
     extra["regex_seg_warm"] = round(t, 4)
 
     # --- warm lisp-analyzer path (kind-composite BM25 over the fixture
-    # index — the same shape cli.py bench-queries --mode lisp serves)
+    # index — the same shape index.query_index_lisp answers)
     import __spark_entry__ as _entry
     from searty_spark.index import lisp_term
 

@@ -68,7 +68,7 @@ def main():
     # per level; all samples are recorded.
     import statistics
 
-    results = {low: {"samples": [], "query": None}, high: {"samples": [], "query": None}}
+    results = {low: {"samples": []}, high: {"samples": []}}
     for r in range(repeats):
         for cpus in (low, high):
             idx = str(work / f"idx_{cpus}")
@@ -76,23 +76,6 @@ def main():
             results[cpus]["samples"].append(out["wall_sec"])
             print(f"[rep {r}] local[{cpus}]: {out['wall_sec']:.1f}s build, "
                   f"{n_docs / out['wall_sec']:.0f} docs/s")
-            if r == repeats - 1:
-                # query-side latency at this parallelism, warmed index
-                import os
-
-                env = dict(os.environ)
-                env["PYTHONPATH"] = str(REPO)
-                env["PYSPARK_PYTHON"] = sys.executable
-                q = subprocess.run(
-                    [sys.executable, "-m", "searty_spark.cli", "--cpus", str(cpus),
-                     "bench-queries", "--index", idx, "--repeat", "5",
-                     "the", "and", "ing", "qu", "abcdef"],
-                    capture_output=True, text=True, cwd=str(REPO), timeout=1200, env=env,
-                )
-                if q.returncode == 0:
-                    qj = [l for l in q.stdout.splitlines() if l.startswith("{")]
-                    if qj:
-                        results[cpus]["query"] = json.loads(qj[-1])
 
     for cpus in (low, high):
         s = results[cpus]["samples"]

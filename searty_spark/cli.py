@@ -170,8 +170,23 @@ class _Server:
     """cmd_serve's warm state and its answering loop."""
 
     def __init__(self, spark, index_dir: str, k: int):
+        """Shard-partitioned cached segments (the pre_partitioned fast
+        path's contract), bounded term->df client, champion client:
+        startup is O(1) in vocabulary size."""
+        from searty_spark.champions import ChampionClient
+        from searty_spark.index import load_segments, load_stats
+        from searty_spark.wand import TermDfClient
+
         self.k = k
-        self.stats, self.seg, self.dic, self.champs = _warm_server(spark, index_dir)
+        self.stats = load_stats(index_dir)
+        self.seg = (
+            load_segments(spark, index_dir)
+            .repartition(self.stats["n_shards"], "shard")
+            .cache()
+        )
+        self.seg.count()
+        self.dic = TermDfClient(spark, index_dir)
+        self.champs = ChampionClient(spark, index_dir)
         self.docs = None
         docs_path = Path(index_dir) / "documents"
         if docs_path.exists():
@@ -301,19 +316,6 @@ class _Server:
 
 def _emit(line: dict) -> None:
     print(json.dumps(line), flush=True)
-
-
-def cmd_upgrade(args) -> None:
-    """Format-1 -> format-2 re-encode without the source corpus
-    (index.upgrade_index): merge-of-one over the old segments,
-    sidecars re-derived/copied."""
-    from searty_spark.index import upgrade_index
-    from searty_spark.session import get_spark
-
-    spark = get_spark(cpus=args.cpus, app_name="searty-upgrade")
-    t0 = time.perf_counter()
-    stats = upgrade_index(spark, args.index, args.out)
-    print(json.dumps({"wall_sec": time.perf_counter() - t0, **stats}))
 
 
 def cmd_merge(args) -> None:
@@ -476,152 +478,6 @@ def cmd_describe(args) -> None:
         print(f"term={r['term']!r} df={r['df']}")
 
 
-def _warm_server(spark, index_dir: str, full_driver_dict: bool = False):
-    """The query-server warm state shared by bench-queries and serve:
-    shard-partitioned cached segments (the pre_partitioned fast path's
-    contract), bounded term->df client, champion client. Startup is
-    O(1) in vocabulary size unless full_driver_dict."""
-    from searty_spark.champions import ChampionClient
-    from searty_spark.index import load_segments, load_stats
-    from searty_spark.wand import TermDfClient
-
-    stats = load_stats(index_dir)
-    seg = (
-        load_segments(spark, index_dir)
-        .repartition(stats["n_shards"], "shard")
-        .cache()
-    )
-    seg.count()
-    dic = TermDfClient(spark, index_dir)
-    if full_driver_dict:
-        dic._cache = {
-            r["term"]: int(r["df_global"]) for r in dic._df.collect()
-        }
-    champs = ChampionClient(spark, index_dir)
-    return stats, seg, dic, champs
-
-
-def cmd_bench_queries(args) -> None:
-    """Repeated warmed top-k queries -> one JSON line of latencies.
-
-    The term->df dictionary is fetched per query through TermDfClient
-    (pushed-filter scan of only the query's terms + a driver-side
-    hot-term cache) — never a full-dictionary collect, so the server
-    starts in O(1) regardless of vocabulary size. --full-driver-dict
-    restores the old load-everything behavior for small indexes."""
-    from searty_spark.champions import champion_theta
-    from searty_spark.session import get_spark
-    from searty_spark.tokenize import tokenize
-    from searty_spark.wand import wand_topk
-
-    spark = get_spark(cpus=args.cpus, app_name="searty-bench-queries")
-    stats, seg, dic, champs = _warm_server(
-        spark, args.index, full_driver_dict=args.full_driver_dict
-    )
-
-    docs = None
-    if args.mode == "regex":
-        from pathlib import Path
-
-        docs_path = Path(args.index) / "documents"
-        if not docs_path.exists():
-            raise SystemExit("--mode regex needs a --store-docs index")
-        docs = spark.read.parquet(str(docs_path)).cache()
-        docs.count()
-
-    def one(q: str) -> float:
-        t0 = time.perf_counter()
-        if args.mode == "lisp":
-            # kind-filtered composite terms, same warm path as
-            # index.query_index_lisp but against the cached segments
-            from searty_spark.index import lisp_term
-            from searty_spark.lisp_tokenizer import lisp_tokenize
-
-            terms = sorted(
-                {lisp_term(args.kind, t) for t, _, kd in lisp_tokenize(q) if kd == args.kind}
-            )
-            dfl = dic.lookup(terms)
-            wand_topk(
-                seg, None, "", k=args.k,
-                n_docs=stats["n_docs"], avgdl=stats["avgdl"],
-                n_shards=stats["n_shards"],
-                df_lookup=dfl, terms=terms,
-                theta0=champion_theta(
-                    champs.lookup(terms), dfl, args.k,
-                    stats["n_docs"], stats["avgdl"],
-                ),
-                pre_partitioned=True,
-            ).collect()
-        elif args.mode == "phrase":
-            from searty_spark.phrase_seg import phrase_bm25_topk_segments
-
-            phrase_bm25_topk_segments(
-                seg, q, k=args.k,
-                n_docs=stats["n_docs"], avgdl=stats["avgdl"],
-                n_shards=stats["n_shards"],
-                df_lookup=dic.lookup(sorted(set(tokenize(q)))),
-                pre_partitioned=True,
-            ).collect()
-        elif args.mode == "regex":
-            from searty_spark.query import regex_search_segments
-
-            regex_search_segments(
-                docs, seg, q, n_shards=stats["n_shards"]
-            ).collect()
-        else:
-            terms = sorted(set(tokenize(q)))
-            dfl = dic.lookup(terms)
-            wand_topk(
-                seg, None, q, k=args.k,
-                n_docs=stats["n_docs"], avgdl=stats["avgdl"],
-                n_shards=stats["n_shards"],
-                df_lookup=dfl,
-                theta0=champion_theta(
-                    champs.lookup(terms), dfl, args.k,
-                    stats["n_docs"], stats["avgdl"],
-                ),
-                pre_partitioned=True,
-            ).collect()
-        return time.perf_counter() - t0
-
-    lats = []
-    if args.threads > 1:
-        # query-server shape: concurrent requests against one warmed
-        # session (Spark schedules the jobs FIFO across its cores)
-        import concurrent.futures as cf
-
-        with cf.ThreadPoolExecutor(max_workers=args.threads) as ex:
-            list(ex.map(one, args.queries))  # warmup, untimed
-            t_all0 = time.perf_counter()
-            for _ in range(args.repeat - 1):
-                lats.extend(ex.map(one, args.queries))
-            wall = time.perf_counter() - t_all0
-    else:
-        for q in args.queries:  # warmup, untimed
-            one(q)
-        t_all0 = time.perf_counter()
-        for _ in range(args.repeat - 1):
-            for q in args.queries:
-                lats.append(one(q))
-        wall = time.perf_counter() - t_all0
-    lats.sort()
-    print(
-        json.dumps(
-            {
-                "n": len(lats),
-                "mode": args.mode,
-                "threads": args.threads,
-                "p50": lats[len(lats) // 2],
-                "p95": lats[int(len(lats) * 0.95)],
-                # honest aggregate throughput: completed timed requests
-                # over the timed wall (warmup excluded)
-                "qps": len(lats) / wall,
-                "wall_sec": wall,
-            }
-        )
-    )
-
-
 def main(argv=None) -> None:
     p = argparse.ArgumentParser(prog="searty_spark")
     p.add_argument("--cpus", type=int, default=None)
@@ -677,11 +533,6 @@ def main(argv=None) -> None:
                          "(1 = strictly sequential; responses tagged seq)")
     sv.set_defaults(fn=cmd_serve)
 
-    up = sub.add_parser("upgrade")
-    up.add_argument("--index", required=True, help="format-1 index dir")
-    up.add_argument("--out", required=True)
-    up.set_defaults(fn=cmd_upgrade)
-
     q = sub.add_parser("query")
     q.add_argument("--index", required=True)
     q.add_argument("-k", type=int, default=10)
@@ -729,33 +580,6 @@ def main(argv=None) -> None:
     qa.add_argument("--refine", type=int, default=50)
     qa.add_argument("vec_ids", nargs="+")
     qa.set_defaults(fn=cmd_query_ann)
-
-    bq = sub.add_parser("bench-queries")
-    bq.add_argument("--index", required=True)
-    bq.add_argument("-k", type=int, default=10)
-    def _repeat(v: str) -> int:
-        n = int(v)
-        if n < 2:  # iteration 0 is warmup; latencies need >= 1 timed run
-            raise argparse.ArgumentTypeError("--repeat must be >= 2 (first run is warmup)")
-        return n
-
-    bq.add_argument("--repeat", type=_repeat, default=5)
-    bq.add_argument("--threads", type=int, default=1,
-                    help="concurrent request threads (query-server shape)")
-    bq.add_argument("--mode", default="trigram",
-                    choices=["trigram", "lisp", "phrase", "regex"],
-                    help="warm query path to exercise: trigram BM25 top-k "
-                         "(default), kind-filtered lisp BM25, ranked phrase "
-                         "(segments), or trigram-accelerated regex (needs a "
-                         "--store-docs index)")
-    bq.add_argument("--kind", default="SYMBOL",
-                    help="token kind for --mode lisp")
-    bq.add_argument("--full-driver-dict", action="store_true",
-                    help="preload the ENTIRE term->df dictionary to the driver "
-                         "(bounded only for small vocabularies; default is the "
-                         "per-query pushed-filter fetch + hot-term cache)")
-    bq.add_argument("queries", nargs="+")
-    bq.set_defaults(fn=cmd_bench_queries)
 
     args = p.parse_args(argv)
     args.fn(args)

@@ -37,7 +37,6 @@ import json
 import time
 from pathlib import Path
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -379,10 +378,9 @@ def write_index(
     # Web text compresses ~10x in parquet and explodes ~3x at tokenize
     # time, so input splits sized for scan parallelism are far too
     # coarse for the tokenize stages — spread the corpus first.
-    target = spark.sparkContext.defaultParallelism
-    src = corpus
-    if corpus.rdd.getNumPartitions() < target:
-        src = corpus.repartition(target)
+    from searty_spark.session import spread_input
+
+    src = spread_input(corpus)
 
     def tokens_with_len():
         if analyzer == "lisp":
@@ -580,86 +578,6 @@ def load_stats(index_dir: str) -> dict:
             "its sources); resuming a foreign-format checkpoint is unsafe"
         )
     return stats
-
-
-def upgrade_index(spark: SparkSession, old_dir: str, out_dir: str) -> dict:
-    """Re-encode a format-1 index (round-1 layout: df_global +
-    block_max_impact baked into segment rows) as a current format-2
-    index, without the corpus — the alternative to load_stats'
-    fail-fast-and-rebuild when the source documents are gone.
-
-    The posting BLOBS are layout-identical across the two formats
-    (``n, doc_delta*n, tf*n, doc_len*n`` score stream + the positions
-    stream); only the row metadata changed. Each (shard, bucket) group
-    therefore runs the MERGE kernel as a merge-of-one
-    (merge.merge_segment_group): decode once, re-encode stats-free —
-    the baked-in columns are simply not re-emitted, block_min_dl is
-    computed from the decoded doc_lens. Deterministic encode order
-    makes the result byte-identical to a fresh format-2 build of the
-    same corpus (tested). Dictionary and champion sidecar re-derive
-    exactly as write_index's stage 3/4 do; docstats and the symbol
-    sidecar (if any) copy through unchanged.
-    """
-    import shutil
-
-    old = Path(old_dir)
-    out = Path(out_dir)
-    stats = json.loads((old / "stats.json").read_text())
-    fmt = stats.get("format", 1)
-    if fmt == INDEX_FORMAT:
-        raise ValueError(f"{old_dir} is already format {INDEX_FORMAT}")
-    if fmt != 1:
-        raise ValueError(f"{old_dir} is format {fmt}; upgrade reads format 1 only")
-
-    from searty_spark.merge import merge_segment_group
-    from searty_spark.segments import SEGMENT_SCHEMA
-
-    segs = spark.read.parquet(str(old / "segments"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return merge_segment_group(pdf)
-
-    out.mkdir(parents=True, exist_ok=True)
-    upgraded = segs.groupBy("shard", "bucket").applyInPandas(run, SEGMENT_SCHEMA)
-    upgraded.write.partitionBy("shard", "bucket").mode("overwrite").parquet(
-        str(out / "segments")
-    )
-
-    new_stats = {
-        "format": INDEX_FORMAT,
-        # format 1 predates the Lisp analyzer: trigram is the only
-        # tokenizer that ever wrote it
-        "analyzer": stats.get("analyzer", "trigram"),
-        "n_docs": stats["n_docs"],
-        "sum_dl": stats["sum_dl"],
-        "avgdl": stats["avgdl"],
-        "n_shards": stats["n_shards"],
-        "n_buckets": stats["n_buckets"],
-    }
-    (out / "stats.json").write_text(json.dumps(new_stats))
-
-    # sidecars that don't depend on the segment layout: copy through
-    for name in ("docstats", "documents", "symbols", "packages",
-                 "symbol_definitions", "package_definitions"):
-        if (old / name).exists() and not (out / name).exists():
-            shutil.copytree(old / name, out / name)
-
-    # derived tables: same derivations as write_index stages 3-4
-    d = (
-        load_segments(spark, str(out))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df_global"))
-        .select("term", F.xxhash64("term").alias("token_id"), "df_global")
-    )
-    d.write.mode("overwrite").parquet(str(out / "dictionary"))
-    from searty_spark.champions import write_champions
-
-    write_champions(
-        load_segments(spark, str(out)), str(out),
-        new_stats["n_docs"], new_stats["avgdl"],
-        dictionary=spark.read.parquet(str(out / "dictionary")),
-    )
-    return new_stats
 
 
 def query_symbols(spark: SparkSession, index_dir: str, query: str) -> DataFrame:

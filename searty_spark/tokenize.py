@@ -14,8 +14,8 @@ Two implementations:
 - :func:`tokenize` — pure Python, the golden/oracle version.
 - :func:`trigrams_col` — a JVM-side Spark SQL expression
   (sequence+transform+substring), so the hot indexing path runs fully
-  inside whole-stage codegen with NO Python at all. A pandas-UDF
-  variant exists only to prove parity in tests.
+  inside whole-stage codegen with NO Python at all; tests prove it
+  agrees with :func:`tokenize` row by row.
 """
 
 from __future__ import annotations
@@ -62,32 +62,4 @@ def trigrams_col(text: Column | str, n: int = NGRAM_N) -> Column:
     # ladder's otherwise-branch did
     return F.when(c.rlike(r"[\x{10000}-\x{10FFFF}]"), slow).otherwise(
         F.coalesce(fast, F.array().cast("array<string>"))
-    )
-
-
-def trigrams_pandas_udf(n: int = NGRAM_N):
-    """Arrow-batched pandas-UDF tokenizer — exists to PROVE parity with
-    the SQL-native :func:`trigrams_col` (tests/test_tokenize_parity);
-    the SQL version is the hot path (whole-stage codegen, no Python)."""
-    import pandas  # noqa: F401 — must be a resolvable global for the hint
-
-    from pyspark.sql import types as T
-
-    globals()["pandas"] = pandas
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(text: "pandas.Series") -> "pandas.Series":
-        return text.map(lambda t: tokenize(t, n))
-
-    return _udf
-
-
-def duckdb_tokens_cte(table: str = "documents", n: int = NGRAM_N) -> str:
-    """DuckDB CTE body producing (doc_id, term, pos) — the oracle-side
-    twin of :func:`trigrams_col` + posexplode. ``substring`` is
-    1-indexed and character-based in DuckDB too, so the two agree on
-    multibyte text."""
-    return (
-        f"SELECT doc_id, substring(text, i, {n}) AS term, i - 1 AS pos "
-        f"FROM {table}, generate_series(1, greatest(length(text) - {n - 1}, 0)) AS g(i)"
     )

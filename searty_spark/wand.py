@@ -336,11 +336,10 @@ class TermDfClient:
             "term", "df_global"
         )
         self._cache: dict[str, object] = {}
-        # lookup() is called from concurrent query-server threads
-        # (cli.py bench-queries --threads is the in-repo instance of the
-        # deployment shape); the lock makes read-check-fetch-update
-        # explicitly safe rather than relying on the GIL, and bounds the
-        # worst case to one fetch per cold term instead of duplicates
+        # lookup() may be called from concurrent threads sharing one
+        # session; the lock makes read-check-fetch-update explicitly
+        # safe rather than relying on the GIL, and bounds the worst
+        # case to one fetch per cold term instead of duplicates
         self._lock = threading.Lock()
 
     def lookup(self, terms) -> dict[str, int]:
@@ -419,7 +418,7 @@ def wand_topk(
     ``pre_partitioned=True`` is the warm-server fast path: the CALLER
     asserts ``segments`` is already hash-partitioned by ``shard``
     (e.g. ``.repartition(n_shards, "shard").cache()`` done once at
-    startup — cmd_bench_queries does exactly this). The per-query
+    startup — cli serve does exactly this). The per-query
     repartition exchange is then skipped entirely: term filter,
     projection and df_global attach are narrow, so the query runs as
     ONE stage (mapInPandas over the cached partitions) plus the
@@ -506,7 +505,7 @@ def wand_topk_batch(
     ``pre_partitioned=True`` skips the repartition — the same warm-
     server contract as wand_topk: the caller guarantees no shard's rows
     are split across partitions (the cached shard-partitioned segments
-    of cli._warm_server). Whole shards sharing a partition is fine:
+    of cli._Server). Whole shards sharing a partition is fine:
     the kernel keys its state by shard."""
     from pyspark.sql import Window
 
@@ -592,7 +591,7 @@ def serve_topk(
     what the single-request functions return.
 
     ``segments`` must be shard-partitioned (wand_topk's
-    pre_partitioned contract, e.g. cli._warm_server's cached frame):
+    pre_partitioned contract, e.g. cli._Server's cached frame):
     the job is one stage of one task per partition — term filter,
     projection (position streams only when a phrase request is in the
     batch), literal df_global map, then per shard and per request

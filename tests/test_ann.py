@@ -241,6 +241,38 @@ def test_flat_stored_matches_flat_recompute(emb, tmp_path):
     assert got == want
 
 
+def test_ann_gate_cache_is_keyed_on_its_embeddings(spark, tmp_path, monkeypatch):
+    """The stored-path gates cache their artifact in a temp dir named
+    after the sf dir's basename. Two sf dirs of one basename must not
+    share it: the second call rebuilds from its own embeddings, and a
+    repeat call with an unchanged file reuses the artifact."""
+    import json
+    import tempfile
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    rng = np.random.default_rng(7)
+    for parent, n in (("a", 40), ("b", 48)):
+        sf = tmp_path / parent / "sf_same"
+        sf.mkdir(parents=True)
+        v = rng.standard_normal((n, 16)).astype(np.float32)
+        pq.write_table(pa.table({
+            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
+            "embedding": pa.array(list(v), type=pa.list_(pa.float32())),
+        }), sf / "embeddings.parquet")
+        stats_p = Path(entry._ann_index_dir(spark, str(sf))) / "ann_stats.json"
+        assert json.loads(stats_p.read_text())["n_vectors"] == n
+    built = stats_p.stat().st_mtime_ns
+    entry._ann_index_dir(spark, str(sf))
+    assert stats_p.stat().st_mtime_ns == built
+
+
 def _vec_rows(spark, d):
     return {
         (r["vec_id"], r["cell"], tuple(r["codes"]))

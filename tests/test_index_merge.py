@@ -281,80 +281,6 @@ def test_merge_rejects_mismatched_docstats_schemas(spark, corpus, tmp_path_facto
         merge_indexes(spark, [d1, d2], str(base / "m2"), dedup_docs=True)
 
 
-def test_upgrade_format1_index(spark, corpus, tmp_path_factory):
-    """cli upgrade path (index.upgrade_index): a format-1 index —
-    fabricated in the documented round-1 schema (df_global +
-    block_max_impact columns, no block_min_dl, stats.json without a
-    format key) from a fresh build, since the format-1 writer no
-    longer exists — re-encodes to a format-2 index byte-identical to
-    building the same corpus fresh. The baked-in format-1 columns are
-    ignored by the upgrade (their values never reach the output)."""
-    from searty_spark.index import load_stats, query_index, upgrade_index
-
-    base = tmp_path_factory.mktemp("idx_upgrade")
-    fresh_dir, old_dir, up_dir = (str(base / x) for x in ("fresh", "old", "up"))
-    # store_docs: format 1 had the documents table too, and for the
-    # upgrade's stated use (the source corpus is gone) the stored copy
-    # is the ONLY copy — it must ride through
-    write_index(corpus, fresh_dir, n_shards=2, n_buckets=4, store_docs=True)
-
-    # fabricate the format-1 on-disk shape
-    seg = load_segments(spark, fresh_dir)
-    dct = spark.read.parquet(fresh_dir + "/dictionary").select("term", "df_global")
-    f1 = seg.join(dct, "term").select(
-        "shard", "bucket", "term", "df", "df_global", "cf", "blob", "pos_blob",
-        "block_last_doc", "block_max_tf",
-        F.expr("transform(block_max_tf, x -> cast(x as double))").alias(
-            "block_max_impact"
-        ),
-        "block_offset", "pos_block_offset",
-    )
-    Path(old_dir).mkdir(parents=True)
-    f1.write.partitionBy("shard", "bucket").parquet(old_dir + "/segments")
-    st = json.loads((Path(fresh_dir) / "stats.json").read_text())
-    (Path(old_dir) / "stats.json").write_text(json.dumps({
-        k: st[k] for k in ("n_docs", "sum_dl", "avgdl", "n_shards", "n_buckets")
-    }))
-    shutil.copytree(Path(fresh_dir) / "docstats", Path(old_dir) / "docstats")
-    shutil.copytree(Path(fresh_dir) / "documents", Path(old_dir) / "documents")
-
-    # fail-fast still guards the normal read path
-    with pytest.raises(ValueError, match="format 1"):
-        load_stats(old_dir)
-
-    stats = upgrade_index(spark, old_dir, up_dir)
-    assert stats == load_stats(fresh_dir)
-    assert _index_content(spark, up_dir) == _index_content(spark, fresh_dir)
-    dd = {
-        (r["term"], r["df_global"])
-        for r in spark.read.parquet(up_dir + "/dictionary").collect()
-    }
-    df = {
-        (r["term"], r["df_global"])
-        for r in spark.read.parquet(fresh_dir + "/dictionary").collect()
-    }
-    assert dd == df
-    assert (Path(up_dir) / "champions_meta.json").read_text() == (
-        Path(fresh_dir) / "champions_meta.json"
-    ).read_text()
-    # stored documents survive the upgrade (sorted rows equal)
-    got_docs = sorted(
-        map(tuple, spark.read.parquet(up_dir + "/documents").collect())
-    )
-    want_docs = sorted(
-        map(tuple, spark.read.parquet(fresh_dir + "/documents").collect())
-    )
-    assert got_docs == want_docs
-    for q in ["the", "shared phrase"]:
-        got = [tuple(r) for r in query_index(spark, up_dir, q, k=10).collect()]
-        want = [tuple(r) for r in query_index(spark, fresh_dir, q, k=10).collect()]
-        assert got == want, q
-
-    # upgrading a current-format index is refused
-    with pytest.raises(ValueError, match="already format"):
-        upgrade_index(spark, fresh_dir, str(base / "nope"))
-
-
 def _dir_bytes(d: Path) -> list[bytes]:
     """A written table's content: its part files' bytes, name-independent
     (part file names carry a per-write UUID)."""

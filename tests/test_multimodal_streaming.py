@@ -1,96 +1,12 @@
-"""Multimodal plumbing (binary columns, Arrow-batched extraction,
-frame-sample plan) and the streaming twin of windowed counts."""
+"""Streaming twins of the batch operators: windowed counts, the
+stateful sessionizer and incremental ANN ingest, each checked against
+its batch result."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from searty_spark.multimodal import (
-    MEDIA_SCHEMA,
-    extract_features,
-    frame_sample_plan,
-    synth_media,
-)
 from searty_spark.streaming import (
     read_event_stream,
     run_stream_to_memory,
     windowed_counts_stream,
 )
-
-
-def test_extract_features_deterministic_and_payload_free(spark):
-    media = synth_media(spark, 30)
-    feats = extract_features(media)
-    assert "payload" not in feats.columns
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == 8 and r["ok"] for r in rows.values())
-    assert all(0.0 <= x <= 1.0 for r in rows.values() for x in r["feature"])
-    # deterministic across runs/partitionings
-    rows2 = {r["media_id"]: r for r in extract_features(synth_media(spark, 30)).collect()}
-    assert all(rows[m]["sha1"] == rows2[m]["sha1"] for m in rows)
-    assert all(rows[m]["feature"] == rows2[m]["feature"] for m in rows)
-
-
-def test_extract_features_real_decode_raises_without_codecs(spark):
-    # synth media includes video, for which no real codec exists in any
-    # environment (needs ffmpeg) -> the real path must raise, never
-    # silently fake
-    media = synth_media(spark, 3)
-    with pytest.raises(Exception, match="NotImplementedError|needs"):
-        extract_features(media, deterministic_fake=False).collect()
-
-
-def test_extract_features_auto_codec_runs_everywhere(spark):
-    """codec="auto" resolves to real when PIL+soundfile are installed
-    and fake otherwise — same test passes in both environments (the
-    synth payloads are random bytes, so the real branch yields
-    ok=False decode failures rather than crashing)."""
-    from searty_spark.multimodal import codecs_available
-
-    media = synth_media(spark, 12).filter("kind != 'video'")
-    rows = {r["media_id"]: r for r in extract_features(media, codec="auto").collect()}
-    assert len(rows) == 8
-    assert all(r["n_bytes"] > 0 and len(r["sha1"]) == 40 for r in rows.values())
-    if codecs_available():
-        assert all(not r["ok"] and r["feature"] is None for r in rows.values())
-    else:
-        assert all(r["ok"] and len(r["feature"]) == 8 for r in rows.values())
-    rows2 = {
-        r["media_id"]: r for r in extract_features(media, codec="auto").collect()
-    }
-    assert {m: (r["ok"], r["feature"]) for m, r in rows.items()} == {
-        m: (r["ok"], r["feature"]) for m, r in rows2.items()
-    }
-
-
-def test_extract_features_real_codec_on_valid_media(spark):
-    """Exercises the REAL decode branch — skipped where PIL/soundfile
-    are absent (this container); runs wherever they are installed."""
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (10, 4), color=(255, 0, 0)).save(buf, format="PNG")
-    png = buf.getvalue()
-    media = spark.createDataFrame(
-        [(0, "image", png, ("image/png", 10, 4, None)), (1, "image", b"junk", ("image/png", 1, 1, None))],
-        MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, codec="real").collect()}
-    assert rows[0]["ok"] and rows[0]["feature"][:2] == [10.0, 4.0]
-    assert rows[0]["feature"][2] == 255.0  # mean red channel
-    assert not rows[1]["ok"] and rows[1]["feature"] is None
-
-
-def test_frame_sample_plan(spark):
-    media = synth_media(spark, 30)
-    plan = frame_sample_plan(media, every_ms=500)
-    rows = plan.collect()
-    assert all(r["frame_ts_ms"] in (0, 500) for r in rows)
-    n_videos = media.filter(F.col("kind") == "video").count()
-    assert len(rows) == 2 * n_videos  # duration 1000ms -> ts 0 and 500
 
 
 def test_windowed_counts_stream_matches_batch(spark, tmp_path):
@@ -179,61 +95,6 @@ def test_sessionize_stream_stateful_matches_batch(spark, tmp_path):
             final[r["user_id"]] = (r["n_sessions"], r["n_events"])
     assert touched_twice > 0  # some user's state was updated in a later batch
     assert final == batch
-
-
-def test_audio_chunk_plan_and_resize(spark):
-    from searty_spark.multimodal import (
-        audio_chunk_plan,
-        media_exact_dups,
-        resize_plan,
-        synth_media,
-    )
-    import pytest as _pytest
-
-    media = synth_media(spark, 30).cache()
-    chunks = audio_chunk_plan(media, window_ms=1000, hop_ms=500).collect()
-    assert all(r["chunk_end_ms"] - r["chunk_start_ms"] == 1000 for r in chunks)
-    n_audio = media.filter("kind = 'audio'").count()
-    assert len(chunks) == n_audio * 2  # duration 1000ms, hop 500 -> starts 0, 500
-
-    rs = resize_plan(media, max_side=32).collect()
-    n_img = media.filter("kind = 'image'").count()
-    assert len(rs) == n_img
-    # synth meta is 64x64 -> aspect-preserved to 32x32, payload dropped
-    assert all(r["out_w"] == 32 and r["out_h"] == 32 and r["ok"] for r in rs)
-    assert all(r["n_bytes_out"] == 32 * 32 * 3 for r in rs)
-    from searty_spark.multimodal import codecs_available
-
-    if not codecs_available():
-        with _pytest.raises(Exception, match="NotImplementedError|PIL"):
-            resize_plan(media, max_side=32, deterministic_fake=False).collect()
-    else:
-        # random-byte payloads: the real branch flags them, never dies
-        rs_real = resize_plan(media, max_side=32, codec="real").collect()
-        assert all(not r["ok"] for r in rs_real)
-
-    # payloads are all distinct in synth_media -> every group size 1;
-    # duplicating the frame makes every group size 2
-    d1 = media_exact_dups(media).collect()
-    assert all(r["n_items"] == 1 for r in d1)
-    d2 = media_exact_dups(media.unionByName(media)).collect()
-    assert all(r["n_items"] == 2 for r in d2) and len(d2) == len(d1)
-
-
-def test_media_dedup_plan_is_jvm_side(spark):
-    """The sha1 dedup must stay whole-stage-codegen (no Python in the
-    plan) — media payloads never cross into Python for exact dedup."""
-    from searty_spark.multimodal import media_exact_dups, synth_media
-
-    media = synth_media(spark, 10)
-    q = media_exact_dups(media)
-    plan = q._sc._jvm.PythonSQLUtils.explainString(q._jdf.queryExecution(), "formatted")
-    # the synth source itself is mapInPandas; the dedup section must not
-    # add another Python eval on top of it (tree section lists each
-    # node once; detail sections repeat the name)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("MapInPandas") == 1  # only the synthetic source
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_streaming_ann_ingest_equals_batch_encode(spark, tmp_path):

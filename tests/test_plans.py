@@ -122,6 +122,24 @@ def test_segment_build_is_single_pass_no_join(spark, small_corpus):
     assert tree.count("Exchange") == 1
 
 
+def test_spread_input_only_spreads_narrow_input(spark, tmp_path):
+    """session.spread_input returns an input of >= defaultParallelism
+    partitions (a multi-file table) unchanged, and round-robins a
+    narrower one to exactly defaultParallelism partitions."""
+    from searty_spark.session import spread_input
+
+    target = spark.sparkContext.defaultParallelism
+    spark.range(0, 1000, numPartitions=target).write.parquet(str(tmp_path / "t"))
+    wide = spark.read.parquet(str(tmp_path / "t"))
+    assert wide.rdd.getNumPartitions() >= target
+    assert spread_input(wide) is wide
+
+    narrow = wide.coalesce(1)
+    spread = spread_input(narrow)
+    assert spread.rdd.getNumPartitions() == target
+    assert f"RoundRobinPartitioning({target})" in _plan(spread)
+
+
 def test_corpus_filter_pushdown(spark, disk_index):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     q = docs.filter(F.col("doc_id") < 10).select("doc_id", "n_chars")

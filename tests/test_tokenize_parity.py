@@ -1,20 +1,13 @@
-"""The three tokenizer implementations (pure Python golden, SQL-native
-column, Arrow pandas UDF) must agree on every corpus row — including
-multibyte 'ja' docs and the sub-trigram edge doc."""
+"""The SQL-native tokenizer column must agree with the pure-Python
+golden tokenizer on every corpus row — including multibyte 'ja' docs
+and the sub-trigram edge doc."""
 
-from pyspark.sql import functions as F
-
-from searty_spark.tokenize import trigrams_col, trigrams_pandas_udf
+from searty_spark.tokenize import tokenize, trigrams_col
 
 
 def test_sql_and_pandas_tokenizers_agree(small_corpus, oracle_index):
-    df = small_corpus.select(
-        "doc_id",
-        trigrams_col("text").alias("sql_toks"),
-        trigrams_pandas_udf()(F.col("text")).alias("udf_toks"),
-    )
-    mismatch = df.filter(F.col("sql_toks") != F.col("udf_toks")).count()
-    assert mismatch == 0
-    # and both agree with the pure-Python oracle on token counts
-    got = {r["doc_id"]: r["sql_toks"] for r in df.collect()}
-    assert {d: len(t) for d, t in got.items()} == oracle_index.doc_len
+    rows = small_corpus.select("doc_id", "text", trigrams_col("text").alias("toks")).collect()
+    mismatched = [r["doc_id"] for r in rows if list(r["toks"]) != tokenize(r["text"])]
+    assert mismatched == []
+    # and the token counts are the oracle index's doc lengths
+    assert {r["doc_id"]: len(r["toks"]) for r in rows} == oracle_index.doc_len
