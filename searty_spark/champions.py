@@ -285,6 +285,8 @@ def write_champions(
     write) instead of four."""
     from pyspark.sql import Observation
 
+    from searty_spark.index import write_term_sorted
+
     if min_df is None:
         min_df = default_min_df(n_docs)
     out = Path(out_dir) / "champions"
@@ -307,9 +309,7 @@ def write_champions(
     try:
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", "8")
-        ch.observe(obs, fingerprint_expr(_SIDECAR_FP_COLS)).coalesce(4).write.mode(
-            "overwrite"
-        ).parquet(str(out))
+        write_term_sorted(ch.observe(obs, fingerprint_expr(_SIDECAR_FP_COLS)), str(out))
     finally:
         conf.set("spark.sql.adaptive.enabled", prev_aqe)
         conf.set("spark.sql.shuffle.partitions", prev_sp)
@@ -397,14 +397,13 @@ def _sidecar_state_key(index_dir: str) -> tuple:
 
 
 class ChampionClient:
-    """Bounded per-query champion fetch + driver-side hot-term cache —
-    the same deployment shape as wand.TermDfClient: the sidecar never
-    moves to the driver wholesale; each query pulls only its own
-    CHAMPIONED terms through a pushed-filter scan, repeats hit the
-    cache. The championed term names (at most write_champions'
-    ``max_terms`` strings, the bound head_terms fetches too) load once
-    per process per sidecar state, so a query whose terms have no list
-    starts no Spark job."""
+    """Per-query champion fetch + driver-side hot-term cache — the same
+    deployment shape as wand.TermDfClient: a cold championed term is a
+    pyarrow point read of the term-sorted sidecar in the driver
+    (index.TermTable), no Spark job, and repeats hit the cache. The
+    championed term names (at most write_champions' ``max_terms``
+    strings) load once per process per sidecar state, so a query whose
+    terms have no list reads nothing."""
 
     def __init__(self, spark: SparkSession, index_dir: str, verify: bool = True):
         """``verify=True`` (default) recomputes the segment fingerprint
@@ -417,26 +416,29 @@ class ChampionClient:
         Mirrors the stats.json format fail-fast policy, but soft: a
         missing/stale sidecar is a performance state, not an error.
         Both the verdict and the term names are memoized per process
-        under _sidecar_state_key."""
+        under _sidecar_state_key; the verification runs on Spark (the
+        stamps are JVM xxhash64 sums), everything else in the driver."""
         import threading
 
+        import pyarrow.parquet as pq
+
+        from searty_spark.index import TermTable
+
         p = Path(index_dir) / "champions"
-        # the known schema spares the per-read schema-inference job
-        self._df = (
-            spark.read.schema(CHAMPION_SCHEMA).parquet(str(p)) if p.exists() else None
-        )
+        self._table = None
         self.stale = False
         self._names: frozenset[str] = frozenset()
-        if self._df is not None:
+        if p.exists():
             key = _sidecar_state_key(index_dir)
             if verify and not self._verified(spark, index_dir, key):
-                self._df, self.stale = None, True
+                self.stale = True
             else:
-                names = _NAMES_CACHE.get(key)
-                if names is None:
-                    names = frozenset(r["term"] for r in self._df.select("term").collect())
-                    _NAMES_CACHE[key] = names
-                self._names = names
+                self._table = TermTable(str(p), ["doc_ids", "tfs", "dls"])
+                if key not in _NAMES_CACHE:  # bounded: at most max_terms rows
+                    _NAMES_CACHE[key] = frozenset(
+                        pq.read_table(p, columns=["term"])["term"].to_pylist()
+                    )
+                self._names = _NAMES_CACHE[key]
         self._cache: dict[str, tuple] = {}
         self._lock = threading.Lock()
 
@@ -449,11 +451,15 @@ class ChampionClient:
             meta = json.loads(meta_p.read_text())
             from searty_spark.index import load_segments
 
+            # the known schema spares the schema-inference job
+            side = spark.read.schema(CHAMPION_SCHEMA).parquet(
+                str(Path(index_dir) / "champions")
+            )
             ok = (
                 meta.get("format") == CHAMPION_FORMAT
                 and meta.get("fingerprint")
                 == segment_fingerprint(load_segments(spark, index_dir))
-                and meta.get("sidecar_fingerprint") == sidecar_fingerprint(self._df)
+                and meta.get("sidecar_fingerprint") == sidecar_fingerprint(side)
             )
             _VERIFY_CACHE[key] = ok
         return ok
@@ -462,13 +468,9 @@ class ChampionClient:
         with self._lock:
             missing = [t for t in terms if t in self._names and t not in self._cache]
         if missing:
-            rows = self._df.filter(F.col("term").isin(missing)).collect()
+            rows = self._table.rows(missing)
             with self._lock:
-                for r in rows:
-                    self._cache[r["term"]] = (
-                        np.asarray(r["doc_ids"], dtype=np.int64),
-                        np.asarray(r["tfs"], dtype=np.int64),
-                        np.asarray(r["dls"], dtype=np.int64),
-                    )
+                for t, arrays in rows.items():
+                    self._cache[t] = tuple(np.asarray(a, dtype=np.int64) for a in arrays)
         with self._lock:
             return {t: self._cache[t] for t in terms if t in self._cache}

@@ -10,7 +10,9 @@ resumes from the last committed unit):
                               DERIVED from the segment rows after the
                               segment stage (segments are stats-free,
                               so no dictionary pre-pass exists and the
-                              whole build is ONE token pass)
+                              whole build is ONE token pass); one file
+                              sorted by term in small row groups, which
+                              TermTable point-reads in the driver
     <dir>/segments/shard=N/bucket=M/   segment rows parquet
                               (token rows shuffle straight from the
                               tokenizer into the segment encoder —
@@ -78,6 +80,103 @@ def term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> list[
         .distinct()
         .collect()
     ]
+
+
+# Rows per parquet row group of the term-sorted tables (dictionary,
+# champion sidecar): a point read decodes one group.
+TERM_ROW_GROUP_ROWS = 1024
+
+
+def write_term_sorted(df: DataFrame, path: str) -> None:
+    """Write ``df`` as ONE parquet file sorted by term, in row groups
+    of TERM_ROW_GROUP_ROWS rows: the layout TermTable point-reads.
+    Spark orders strings by unsigned UTF-8 bytes, the order of
+    parquet's min/max statistics, so groups hold disjoint term ranges.
+    One file needs no range exchange (whose sampling seed follows the
+    RDD id) and writes the same pages every time."""
+    df.coalesce(1).sortWithinPartitions("term").write.mode("overwrite").option(
+        "parquet.block.row.count.limit", TERM_ROW_GROUP_ROWS
+    ).parquet(path)
+
+
+def write_dictionary(segments: DataFrame, out: str) -> int:
+    """segment rows -> (term, token_id, df_global) at ``out``, term-
+    sorted; returns its row count (an observe metric: no read-back).
+    df_global is the sum of the term's per-shard dfs (doc sets are
+    disjoint); token_id is xxhash64(term), whose pmod by n_buckets is
+    the term's bucket."""
+    from pyspark.sql import Observation
+
+    obs = Observation("dict_rows")
+    d = (
+        segments.groupBy("term")
+        .agg(F.sum("df").cast("long").alias("df_global"))
+        .select("term", F.xxhash64("term").alias("token_id"), "df_global")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+    )
+    write_term_sorted(d, out)
+    return int(obs.get["n"])
+
+
+class TermTable:
+    """Driver-side point reads of a term-keyed parquet table (the
+    dictionary, the champion sidecar) with pyarrow: no Spark job. The
+    footers' per-row-group term min/max, read once here, pick the
+    groups a term can lie in; a read decodes only those, so memory
+    follows the groups a request touches, never the table. On
+    write_term_sorted's layout the ranges are disjoint and a term
+    touches at most one group. Any other layout (unsorted or multi-file,
+    from an older or foreign writer) stays exact and only loses that
+    bound; a group without term statistics is read for every term."""
+
+    def __init__(self, path: str, columns: list[str]):
+        import itertools
+
+        import pyarrow.parquet as pq
+
+        self._columns = columns
+        self._groups = []  # (lo, hi, file, footer, row group); hi None = unbounded
+        for f in sorted(Path(path).iterdir()):
+            if not f.is_file() or f.name.startswith(("_", ".")):
+                continue
+            md = pq.read_metadata(f)
+            col = md.schema.names.index("term")
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(col).statistics
+                ok = st is not None and st.has_min_max
+                self._groups.append((st.min if ok else "", st.max if ok else None, f, md, g))
+        self._groups.sort(key=lambda x: x[0])
+        # running max of the upper bounds: the walk down from a term's
+        # insertion point stops once no group below can reach the term
+        self._reach = list(itertools.accumulate(
+            (x[1] for x in self._groups),
+            lambda a, b: None if a is None or b is None else max(a, b),
+        ))
+
+    def rows(self, terms) -> dict[str, tuple]:
+        """term -> its ``columns`` values, for the terms in the table."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        want: dict[int, list[str]] = {}
+        for t in set(terms):
+            j = bisect.bisect_right(self._groups, t, key=lambda x: x[0]) - 1
+            while j >= 0 and (self._reach[j] is None or self._reach[j] >= t):
+                if self._groups[j][1] is None or self._groups[j][1] >= t:
+                    want.setdefault(j, []).append(t)
+                j -= 1
+        out: dict[str, tuple] = {}
+        for j, ts in sorted(want.items()):
+            _, _, f, md, g = self._groups[j]
+            with pq.ParquetFile(f, metadata=md) as pf:
+                tbl = pf.read_row_group(g, columns=["term", *self._columns])
+            tbl = tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(ts, pa.string())))
+            for r in tbl.to_pylist():
+                out[r["term"]] = tuple(r[c] for c in self._columns)
+        return out
 
 
 def _ckpt_path(out_dir: str) -> Path:
@@ -495,10 +594,7 @@ def write_index(
         run_segments(lambda: stats)
 
     # --- stage 3: dictionary, DERIVED from the segment rows ---------------
-    # global df of a term = sum of its per-shard dfs (doc sets disjoint);
-    # this aggregates the tiny (n_terms x n_shards) segment-row table, not
-    # the token stream — the second tokenize pass the old design needed is
-    # gone entirely.
+    # (the tiny n_terms x n_shards table, never the token stream)
     done = _done_units(out_dir) if resume else set()
 
     def run_dictionary() -> int:
@@ -511,27 +607,19 @@ def write_index(
         )
 
         t0 = time.perf_counter()
-        # observe metrics ride the single dictionary job: the SEGMENT
-        # fingerprint (stage 4's sidecar stamp — this job scans every
-        # segment row anyway) on the pre-agg rows, the term count on
-        # the post-agg rows. No read-back job, no second segment scan.
+        # the SEGMENT fingerprint (stage 4's sidecar stamp) rides the
+        # dictionary job as an observe metric on the pre-agg rows: this
+        # job scans every segment row anyway, so no second scan
         obs_fp = Observation("segment_fp")
-        obs_n = Observation("dict_rows")
-        d = (
-            load_segments(spark, out_dir)
-            .observe(obs_fp, fingerprint_expr(_SEGMENT_FP_COLS))
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df_global"))
-            .select("term", F.xxhash64("term").alias("token_id"), "df_global")
-            .observe(obs_n, F.count(F.lit(1)).alias("n"))
+        n = write_dictionary(
+            load_segments(spark, out_dir).observe(
+                obs_fp, fingerprint_expr(_SEGMENT_FP_COLS)
+            ),
+            str(out / "dictionary"),
         )
-        d.write.mode("overwrite").parquet(str(out / "dictionary"))
-        wall = time.perf_counter() - t0
         fp = _fp_mod(obs_fp.get["fp"])
-        _commit(
-            out_dir, "dictionary",
-            wall_sec=wall, rows=int(obs_n.get["n"]), segment_fp=fp,
-        )
+        _commit(out_dir, "dictionary", wall_sec=time.perf_counter() - t0, rows=n,
+                segment_fp=fp)
         return fp
 
     # --- stage 4: champion lists, DERIVED like the dictionary ------------
@@ -644,31 +732,31 @@ def query_index_lisp(
 def _query_terms(
     spark: SparkSession, index_dir: str, stats: dict, terms: list[str], k: int
 ) -> DataFrame:
+    """The scoring job is the only Spark job: df_global and buckets come
+    from driver point reads of the dictionary (token_id is
+    xxhash64(term), and Python's % is Spark's pmod; an absent term has
+    no segment rows, so it needs no bucket), champions from
+    ChampionClient."""
+    from searty_spark.segments import SEGMENT_SCHEMA
     from searty_spark.wand import wand_topk
 
-    seg = load_segments(spark, index_dir)
+    dic = TermTable(str(Path(index_dir) / "dictionary"), ["token_id", "df_global"])
+    found = dic.rows(terms)
+    dfs = {t: int(df) for t, (_, df) in found.items()}
+    # the known schema spares load_segments' schema-inference job
+    seg = spark.read.schema(SEGMENT_SCHEMA).parquet(str(Path(index_dir) / "segments"))
     theta0 = 0.0
     if terms:
-        buckets = term_buckets(spark, terms, stats["n_buckets"])
+        buckets = sorted({tid % stats["n_buckets"] for tid, _ in found.values()})
         seg = seg.filter(F.col("bucket").isin(buckets))
-        # champion-seeded theta: two bounded pushed-filter fetches
-        # (query terms only), then every shard kernel block-prunes its
+        # champion-seeded theta: every shard kernel block-prunes its
         # essential terms against it — results identical either way
         if (Path(index_dir) / "champions").exists():
             from searty_spark.champions import ChampionClient, champion_theta
 
             champs = ChampionClient(spark, index_dir).lookup(terms)
             if champs:
-                dfs = {
-                    r["term"]: int(r["df_global"])
-                    for r in spark.read.parquet(str(Path(index_dir) / "dictionary"))
-                    .filter(F.col("term").isin(list(champs)))
-                    .collect()
-                }
-                theta0 = champion_theta(
-                    champs, dfs, k, stats["n_docs"], stats["avgdl"]
-                )
-    dictionary = spark.read.parquet(str(Path(index_dir) / "dictionary"))
+                theta0 = champion_theta(champs, dfs, k, stats["n_docs"], stats["avgdl"])
     return wand_topk(
         seg,
         dstats=None,
@@ -677,7 +765,7 @@ def _query_terms(
         n_docs=stats["n_docs"],
         avgdl=stats["avgdl"],
         n_shards=stats["n_shards"],
-        df_lookup=dictionary,
+        df_lookup=dfs,
         terms=terms,
         theta0=theta0,
     )

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searty_spark.index import INDEX_FORMAT, load_segments, load_stats
+from searty_spark.index import INDEX_FORMAT, load_segments, load_stats, write_dictionary
 from searty_spark.segments import (
     SEGMENT_COLS,
     SEGMENT_SCHEMA,
@@ -71,6 +71,37 @@ def merge_segment_group(pdf: pd.DataFrame) -> pd.DataFrame:
     flat = pd.DataFrame({k: np.concatenate(v) for k, v in cols.items()})
     flat["positions"] = pd.Series(pos_col, dtype=object)
     return encode_segment_rows(flat)
+
+
+def _write_derived(
+    spark: SparkSession, out_dir: str, analyzer: str, n_docs: int, sum_dl: int,
+    n_shards: int, n_buckets: int, derive_champions: bool,
+) -> dict:
+    """stats.json, then the dictionary and the champion sidecar, both
+    derived from the tiny MERGED segment-row table on disk under the
+    merged stats: identical to a single-shot build's (the sidecar is a
+    pure function of segments + (n_docs, avgdl)). derive_champions=
+    False is for INTERMEDIATE compaction tiers (compact_partials),
+    whose sidecar the next merge would discard; such a tier has no
+    champions dir and ChampionClient degrades to theta0=0, still
+    exact."""
+    out = Path(out_dir)
+    stats = {
+        "format": INDEX_FORMAT, "analyzer": analyzer, "n_docs": n_docs,
+        "sum_dl": sum_dl, "avgdl": sum_dl / n_docs, "n_shards": n_shards,
+        "n_buckets": n_buckets,
+    }
+    (out / "stats.json").write_text(json.dumps(stats))
+    seg = load_segments(spark, out_dir)
+    write_dictionary(seg, str(out / "dictionary"))
+    if derive_champions:
+        from searty_spark.champions import write_champions
+
+        write_champions(
+            seg, out_dir, n_docs, stats["avgdl"],
+            dictionary=spark.read.parquet(str(out / "dictionary")),
+        )
+    return stats
 
 
 def _decoded_postings(spark: SparkSession, index_dirs: list[str]) -> DataFrame:
@@ -154,7 +185,6 @@ def merge_indexes(
         )
     n_docs = sum(s["n_docs"] for s in stats_list)
     sum_dl = sum(s["sum_dl"] for s in stats_list)
-    avgdl = sum_dl / n_docs
 
     # validate docstats schema compatibility BEFORE any expensive work
     # or writes: failing after the segment merge would leave a
@@ -186,44 +216,14 @@ def merge_indexes(
     merged.write.partitionBy("shard", "bucket").mode("overwrite").parquet(
         str(out / "segments")
     )
-    stats = {
-        "format": INDEX_FORMAT,
-        "analyzer": analyzer,
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,
-        "avgdl": avgdl,
-        "n_shards": n_shards,
-        "n_buckets": n_buckets,
-    }
-    (out / "stats.json").write_text(json.dumps(stats))
-
-    # docstats + dictionary follow by union / re-aggregation
+    # docstats by union; stats, dictionary and champions re-derive
     ds = None
     for d in index_dirs:
         x = parts[d]
         ds = x if ds is None else ds.unionByName(x)
     ds.write.mode("overwrite").parquet(str(out / "docstats"))
-    dct = segs.groupBy("term").agg(F.sum("df").cast("long").alias("df_global")).select(
-        "term", F.xxhash64("term").alias("token_id"), "df_global"
-    )
-    dct.write.mode("overwrite").parquet(str(out / "dictionary"))
-
-    # champion sidecar: re-derived from the MERGED segments under the
-    # merged stats — identical to a single-shot build's sidecar (the
-    # sidecar is a pure function of segments + (n_docs, avgdl)).
-    # derive_champions=False is for INTERMEDIATE compaction tiers
-    # (compact_partials): a tier's sidecar would be discarded by the
-    # next merge anyway, so skipping it removes a head-term decode skim
-    # per tier from the continuous-ingest path. A skipped tier simply
-    # has no champions dir — ChampionClient degrades to theta0=0 if
-    # queried directly, still exact.
-    if derive_champions:
-        from searty_spark.champions import write_champions
-
-        write_champions(
-            load_segments(spark, out_dir), out_dir, n_docs, avgdl,
-            dictionary=spark.read.parquet(str(out / "dictionary")),
-        )
+    stats = _write_derived(spark, out_dir, analyzer, n_docs, sum_dl, n_shards, n_buckets,
+                           derive_champions)
 
     # --- symbol/package metadata (ref merge.go:240-309, M4) -------------
     # Entity ids are content hashes (md5 of name), identical across
@@ -296,7 +296,6 @@ def _merge_dedup(
             "keys share a doc_id across the input indexes; re-key one side "
             "before a shared-identity merge"
         )
-    avgdl = sum_dl / n_docs
 
     # losers' postings are filtered in row space (keyed by provenance +
     # doc_id), then the survivors re-encode under the merged global
@@ -315,31 +314,9 @@ def _merge_dedup(
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     seg.write.partitionBy("shard", "bucket").mode("overwrite").parquet(str(out / "segments"))
-    stats = {
-        "format": INDEX_FORMAT,
-        "analyzer": analyzer,
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,
-        "avgdl": avgdl,
-        "n_shards": n_shards,
-        "n_buckets": n_buckets,
-    }
-    (out / "stats.json").write_text(json.dumps(stats))
     survivors.write.mode("overwrite").parquet(str(out / "docstats"))
-    # dictionary from the tiny MERGED segment-row table on disk — not
-    # from `flat`, which would re-run the whole decode pipeline
-    load_segments(spark, out_dir).groupBy("term").agg(
-        F.sum("df").cast("long").alias("df_global")
-    ).select(
-        "term", F.xxhash64("term").alias("token_id"), "df_global"
-    ).write.mode("overwrite").parquet(str(out / "dictionary"))
-    if derive_champions:
-        from searty_spark.champions import write_champions
-
-        write_champions(
-            load_segments(spark, out_dir), out_dir, n_docs, avgdl,
-            dictionary=spark.read.parquet(str(out / "dictionary")),
-        )
+    stats = _write_derived(spark, out_dir, analyzer, n_docs, sum_dl, n_shards, n_buckets,
+                           derive_champions)
 
     # sidecar: definitions are doc-keyed facts -> drop losers' rows;
     # entities re-derive from the surviving facts / surviving docs so

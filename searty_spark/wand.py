@@ -316,44 +316,42 @@ def _topk_frame(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
 
 
 class TermDfClient:
-    """Bounded per-query term->df_global fetch against the on-disk
-    dictionary, with a driver-side hot-term cache — the query-server
-    deployment shape. The full trigram dictionary never moves to the
-    driver (at web scale it's 10^8+ rows); each query fetches only its
-    own few terms via a pushed-filter parquet scan, and repeated terms
-    hit the cache, so a warmed server pays zero per-query fetch jobs.
+    """Per-query term->df_global fetch from the on-disk dictionary with
+    a driver-side hot-term cache — the query-server deployment shape. A
+    cold term is a pyarrow point read in the driver (index.TermTable:
+    the dictionary is term-sorted, and the footers' term ranges pick
+    the one small row group a term can lie in), so no lookup starts a
+    Spark job and the dictionary never moves to the driver whole.
     ``lookup(terms)`` returns a plain dict usable as ``df_lookup`` —
     terms absent from the dictionary are omitted, which is safe: the
     dictionary is derived from the segment rows, so an absent term has
-    no postings and never reaches the scoring kernel."""
+    no postings and never reaches the scoring kernel. ``spark`` is
+    unused; it stays for the callers' sake."""
 
     _ABSENT = object()
 
     def __init__(self, spark, index_dir: str):
         import threading
 
-        self._df = spark.read.parquet(f"{index_dir}/dictionary").select(
-            "term", "df_global"
-        )
+        from searty_spark.index import TermTable
+
+        self._table = TermTable(f"{index_dir}/dictionary", ["df_global"])
         self._cache: dict[str, object] = {}
-        # lookup() may be called from concurrent threads sharing one
-        # session; the lock makes read-check-fetch-update explicitly
-        # safe rather than relying on the GIL, and bounds the worst
-        # case to one fetch per cold term instead of duplicates
+        # lookup() may be called from concurrent threads; the lock makes
+        # read-check-fetch-update explicitly safe rather than relying on
+        # the GIL
         self._lock = threading.Lock()
 
     def lookup(self, terms) -> dict[str, int]:
         with self._lock:
             missing = [t for t in terms if t not in self._cache]
         if missing:
-            # the Spark collect runs OUTSIDE the lock (it can take
-            # hundreds of ms; serializing it would serialize the server)
-            rows = self._df.filter(F.col("term").isin(missing)).collect()
+            # the read runs OUTSIDE the lock, so concurrent callers
+            # with warm terms never wait on a cold read
+            rows = self._table.rows(missing)
             with self._lock:
-                for r in rows:
-                    self._cache[r["term"]] = int(r["df_global"])
                 for t in missing:
-                    self._cache.setdefault(t, self._ABSENT)
+                    self._cache.setdefault(t, int(rows[t][0]) if t in rows else self._ABSENT)
         with self._lock:
             return {
                 t: v for t in terms if (v := self._cache.get(t)) is not self._ABSENT
@@ -366,9 +364,8 @@ def _with_df_global(pruned: DataFrame, terms, df_lookup) -> DataFrame:
     ``df_lookup`` may be:
     - a plain ``dict[str, int]`` (term -> global df): the query-server
       fast path — injected as a literal map, ZERO extra plan nodes or
-      exchanges (a warmed server keeps the hot-term dictionary
-      driver-side; at full dictionary scale it would be an external KV
-      and still not a per-query Spark job);
+      exchanges (TermDfClient fills it from driver point reads of the
+      term-sorted dictionary, no Spark job);
     - a DataFrame (term, df_global), e.g. the on-disk dictionary: a
       tiny pushed-filter scan + broadcast join inside the same job;
     - None: df_global = sum of the term's per-shard ``df`` aggregated

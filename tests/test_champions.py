@@ -201,9 +201,28 @@ def test_write_index_emits_champions_and_query_identity(
     assert jobs_of(lambda: cc.lookup(cold)) == 0
     assert cc.lookup(cold) == {}
     hot = sorted(side)[:2]
+    # a cold championed term is a driver read of the sidecar: no job
+    # either, on this client or on a fresh one (verdict memoised)
+    assert jobs_of(lambda: cc.lookup(cold + hot)) == 0
     got = cc.lookup(cold + hot)
     assert {t: tuple(map(list, v)) for t, v in got.items()} == {t: side[t] for t in hot}
     assert jobs_of(lambda: ChampionClient(spark, d).lookup(cold)) == 0
+    fresh = sorted(side)[-2:]
+    assert jobs_of(lambda: ChampionClient(spark, d).lookup(fresh)) == 0
+    got = ChampionClient(spark, d).lookup(fresh)
+    assert {t: tuple(map(list, v)) for t, v in got.items()} == {t: side[t] for t in fresh}
+
+    # query_index starts only its scoring job: df, buckets and
+    # champions all come from driver reads (the call above was warm)
+    q = "module query"
+    assert jobs_of(lambda: query_index(spark, d, q, k=10)) == 0
+    got = [tuple(r) for r in query_index(spark, d, q, k=10).collect()]
+    want = [tuple(r) for r in wand_topk(
+        load_segments(spark, d), None, q, k=10,
+        n_docs=stats["n_docs"], avgdl=stats["avgdl"], n_shards=2,
+        df_lookup=spark.read.parquet(f"{d}/dictionary"),
+    ).collect()]
+    assert got and got == want
 
 
 def test_stale_sidecar_degrades_to_no_pruning(spark, small_corpus, tmp_path):

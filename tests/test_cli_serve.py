@@ -158,7 +158,9 @@ def test_serve_batch_is_one_job_and_matches_single_requests(
         srv.champs.lookup(head), srv.dic.lookup(head), k, st["n_docs"], st["avgdl"]
     ) > 0.0  # "shared" is a theta0-seeded head query
 
-    _run(srv, items, len(items))  # warm the df and champion caches
+    # cold df and champion caches fill from driver reads, so the
+    # first batch is one job too; the warm repeat is checked below
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 1
     capsys.readouterr()
     assert jobs_of(lambda: _run(srv, items, len(items))) == 1
     got = _replies(capsys)
@@ -192,6 +194,23 @@ def test_serve_batch_is_one_job_and_matches_single_requests(
     # --threads 1 stays one request per job
     assert jobs_of(lambda: _run(srv, items[:3], 1)) == 3
     assert {r["batched"] for r in _replies(capsys).values()} == {1}
+
+
+def test_cold_term_df_lookup_starts_no_job(spark, served, jobs_of):
+    """TermDfClient reads the term-sorted dictionary in the driver: a
+    cold lookup starts no Spark job and equals the dictionary's rows,
+    absent terms omitted."""
+    from pyspark.sql import functions as F
+
+    from searty_spark.wand import TermDfClient
+
+    dic = spark.read.parquet(f"{served}/dictionary")
+    terms = [r["term"] for r in dic.orderBy("df_global", "term").limit(5).collect()]
+    terms += ["zzzzz", "@@@", ""]
+    got = {}
+    assert jobs_of(lambda: got.update(TermDfClient(spark, served).lookup(terms))) == 0
+    want = {r["term"]: r["df_global"] for r in dic.filter(F.col("term").isin(terms)).collect()}
+    assert got == want and len(want) == 5
 
 
 def test_serve_batch_failure_is_isolated(spark, served, monkeypatch, capsys):

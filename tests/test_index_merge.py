@@ -148,6 +148,7 @@ def test_merge_dedup_shared_urls(spark, corpus, tmp_path_factory):
         got = sorted(map(tuple, spark.read.parquet(str(Path(dir_m) / t)).collect()))
         want = sorted(map(tuple, spark.read.parquet(str(Path(dir_ss) / t)).collect()))
         assert got == want, t
+    _assert_term_sorted(Path(dir_m))
 
     # sidecar parity: definitions and entities equal the single-shot set
     for t in ("symbol_definitions", "symbols", "packages", "package_definitions"):
@@ -287,6 +288,32 @@ def _dir_bytes(d: Path) -> list[bytes]:
     return sorted(f.read_bytes() for f in d.glob("part-*"))
 
 
+def _assert_term_sorted(d: Path) -> None:
+    """The dictionary's terms rise strictly across its files (in
+    file-name order) and row groups, and no group is larger than the
+    point-read bound: the layout index.TermTable reads one group per
+    term from. Checked on the pyarrow footers and the term column."""
+    import pyarrow.parquet as pq
+
+    from searty_spark.index import TERM_ROW_GROUP_ROWS
+
+    terms, n_groups = [], 0
+    for f in sorted((d / "dictionary").glob("part-*")):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(0).statistics
+            got = pq.ParquetFile(f).read_row_group(g, columns=["term"])["term"].to_pylist()
+            assert md.schema.column(0).name == "term" and st.has_min_max
+            assert (st.min, st.max) == (got[0], got[-1])
+            assert 0 < rg.num_rows <= TERM_ROW_GROUP_ROWS
+            terms += got
+            n_groups += 1
+    assert n_groups > 1, "expected a multi-group dictionary"
+    # str order is code point order, i.e. UTF-8 byte order
+    assert all(a < b for a, b in zip(terms, terms[1:]))
+
+
 def test_build_is_deterministic_and_stamps_without_rescan(
     spark, tmp_path, monkeypatch
 ):
@@ -294,7 +321,8 @@ def test_build_is_deterministic_and_stamps_without_rescan(
     fingerprint its job observed: write_index never calls
     segment_fingerprint. Two builds of one corpus write byte-identical
     dictionary and champion sidecars (300 docs, so the default min_df
-    of 256 leaves real head terms)."""
+    of 256 leaves real head terms), the dictionary term-sorted in small
+    row groups; so does a merge of the build."""
     import searty_spark.champions as champions
 
     def no_rescan(_segments):
@@ -311,3 +339,10 @@ def test_build_is_deterministic_and_stamps_without_rescan(
     assert (a / "champions_meta.json").read_text() == (
         b / "champions_meta.json"
     ).read_text()
+    _assert_term_sorted(a)
+    monkeypatch.undo()  # the merge re-derives its sidecar stamp
+    m = tmp_path / "m"
+    merge_indexes(spark, [str(a)], str(m))
+    _assert_term_sorted(m)
+    for sub in ("dictionary", "champions"):
+        assert _dir_bytes(a / sub) == _dir_bytes(m / sub), sub
