@@ -108,9 +108,9 @@ def cmd_serve(args) -> None:
     """Warm query server over stdin: one request per line, one JSON
     result line per request (flushed) — the deployment shape the
     reference's per-invocation CLI cannot offer, and the reason a
-    long-lived SparkSession pays off: the segments are cached
-    shard-partitioned once, every query is the no-exchange
-    pre_partitioned path with champion-seeded pruning.
+    long-lived SparkSession pays off: term lookups hit warm caches, and
+    every batch is one shard scatter-gather with champion-seeded
+    pruning that reads only its terms' segment rows.
 
     Request syntax: a plain line is a BM25 top-k; `:phrase <q>` ranks
     a positional phrase; `:regex <pat>` needs a --store-docs index;
@@ -126,8 +126,10 @@ def cmd_serve(args) -> None:
     answering thread takes the first queued request plus every further
     request ALREADY queued, up to ``--threads N`` of them (no timer),
     and answers all their BM25, :phrase and :batch queries with ONE
-    Spark job (wand.serve_topk: one df fetch, one champion fetch, one
-    segment scan). ``"batched"`` is the number of requests that job
+    Spark job (wand.serve_topk: one df fetch and one champion fetch in
+    the driver, then one task per shard that point-reads the batch's
+    terms' segment rows with pyarrow). ``"batched"`` is the number of
+    requests that job
     answered. :regex requests are answered one by one after it, on the
     same thread. If a batch's job fails, each of its requests is
     re-run alone, so one bad request never fails its neighbours.
@@ -170,24 +172,20 @@ class _Server:
     """cmd_serve's warm state and its answering loop."""
 
     def __init__(self, spark, index_dir: str, k: int):
-        """Shard-partitioned cached segments (the pre_partitioned fast
-        path's contract), bounded term->df client, champion client:
-        startup is O(1) in vocabulary size."""
+        """Bounded term->df client, champion client and the index path:
+        no segment row is read or cached at startup (each batch
+        point-reads the rows it needs), so startup and memory are O(1)
+        in index size."""
         from searty_spark.champions import ChampionClient
-        from searty_spark.index import load_segments, load_stats
+        from searty_spark.index import load_stats
         from searty_spark.wand import TermDfClient
 
-        self.k = k
+        self.spark, self.index_dir, self.k = spark, index_dir, k
         self.stats = load_stats(index_dir)
-        self.seg = (
-            load_segments(spark, index_dir)
-            .repartition(self.stats["n_shards"], "shard")
-            .cache()
-        )
-        self.seg.count()
         self.dic = TermDfClient(spark, index_dir)
         self.champs = ChampionClient(spark, index_dir)
         self.docs = None
+        self._seg = None  # :regex's cached segment frame, built on first use
         docs_path = Path(index_dir) / "documents"
         if docs_path.exists():
             self.docs = spark.read.parquet(str(docs_path)).cache()
@@ -256,8 +254,9 @@ class _Server:
         t0 = time.perf_counter()
         queries = [q for r in reqs for q in r[3]]
         st = self.stats
+        terms = sorted({t for _, toks in queries for t in toks})
         try:
-            dfl = self.dic.lookup(sorted({t for _, toks in queries for t in toks}))
+            dfl = self.dic.lookup(terms)
             champs = self.champs.lookup(
                 sorted({t for kind, toks in queries if kind == "bm25" for t in toks})
             )
@@ -270,9 +269,10 @@ class _Server:
                         self.k, st["n_docs"], st["avgdl"],
                     )
                 batch.append((kind, toks, theta0))
-            found = iter(
-                serve_topk(self.seg, batch, self.k, st["n_docs"], st["avgdl"], dfl)
-            )
+            found = iter(serve_topk(
+                self.spark, self.index_dir, st, batch, self.k, dfl,
+                self.dic.token_ids(terms),
+            ))
         # catch EVERYTHING: a failing job raises Py4JJavaError or
         # PythonException, and every request must still be answered
         except Exception as err:  # noqa: BLE001
@@ -297,10 +297,20 @@ class _Server:
         try:
             if self.docs is None:
                 raise ValueError(":regex needs a --store-docs index")
+            from searty_spark.index import load_segments
             from searty_spark.query import regex_search_segments
 
+            if self._seg is None:
+                # cached shard-partitioned, as the candidate step
+                # partitions it: later :regex requests skip the parquet
+                # scan and the exchange
+                self._seg = (
+                    load_segments(self.spark, self.index_dir)
+                    .repartition(self.stats["n_shards"], "shard")
+                    .cache()
+                )
             rows = regex_search_segments(
-                self.docs, self.seg, arg, n_shards=self.stats["n_shards"]
+                self.docs, self._seg, arg, n_shards=self.stats["n_shards"]
             ).collect()
             line = {
                 "seq": seq, "query": arg, "mode": "regex",

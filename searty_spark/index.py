@@ -35,6 +35,7 @@ reference's token_id PK index seek (ref lib/database/database.go:508-526).
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 from pathlib import Path
@@ -118,28 +119,43 @@ def write_dictionary(segments: DataFrame, out: str) -> int:
     return int(obs.get["n"])
 
 
+@functools.lru_cache(maxsize=1024)
+def _footer_at(path: str, mtime_ns: int, size: int):
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path)
+
+
+def _cached_footer(f: Path):
+    """A file's parquet footer, cached per process under its
+    (path, st_mtime_ns, st_size): a file rewritten in place is read
+    fresh, and the cache holds at most 1,024 footers."""
+    st = f.stat()
+    return _footer_at(str(f), st.st_mtime_ns, st.st_size)
+
+
 class TermTable:
-    """Driver-side point reads of a term-keyed parquet table (the
-    dictionary, the champion sidecar) with pyarrow: no Spark job. The
+    """Point reads of a term-keyed parquet table with pyarrow, no Spark
+    job: the dictionary and the champion sidecar in the driver, a
+    segment bucket directory in a serve task (read_segment_rows). The
     footers' per-row-group term min/max, read once here, pick the
     groups a term can lie in; a read decodes only those, so memory
     follows the groups a request touches, never the table. On
     write_term_sorted's layout the ranges are disjoint and a term
     touches at most one group. Any other layout (unsorted or multi-file,
     from an older or foreign writer) stays exact and only loses that
-    bound; a group without term statistics is read for every term."""
+    bound; a group without term statistics is read for every term.
+    Footers come from the per-process cache (_cached_footer)."""
 
     def __init__(self, path: str, columns: list[str]):
         import itertools
-
-        import pyarrow.parquet as pq
 
         self._columns = columns
         self._groups = []  # (lo, hi, file, footer, row group); hi None = unbounded
         for f in sorted(Path(path).iterdir()):
             if not f.is_file() or f.name.startswith(("_", ".")):
                 continue
-            md = pq.read_metadata(f)
+            md = _cached_footer(f)
             col = md.schema.names.index("term")
             for g in range(md.num_row_groups):
                 st = md.row_group(g).column(col).statistics
@@ -155,6 +171,15 @@ class TermTable:
 
     def rows(self, terms) -> dict[str, tuple]:
         """term -> its ``columns`` values, for the terms in the table."""
+        out: dict[str, tuple] = {}
+        for tbl in self.tables(terms):
+            for r in tbl.to_pylist():
+                out[r["term"]] = tuple(r[c] for c in self._columns)
+        return out
+
+    def tables(self, terms):
+        """Every row whose term is in ``terms`` (duplicates included),
+        as ("term", *columns) tables, one per row group read."""
         import bisect
 
         import pyarrow as pa
@@ -168,15 +193,51 @@ class TermTable:
                 if self._groups[j][1] is None or self._groups[j][1] >= t:
                     want.setdefault(j, []).append(t)
                 j -= 1
-        out: dict[str, tuple] = {}
         for j, ts in sorted(want.items()):
             _, _, f, md, g = self._groups[j]
             with pq.ParquetFile(f, metadata=md) as pf:
-                tbl = pf.read_row_group(g, columns=["term", *self._columns])
-            tbl = tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(ts, pa.string())))
+                # one small group: pyarrow's thread pool only adds CPU
+                tbl = pf.read_row_group(g, columns=["term", *self._columns],
+                                        use_threads=False)
+            yield tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(ts, pa.string())))
+
+
+def terms_by_bucket(token_ids: dict[str, int], n_buckets: int) -> dict[int, list[str]]:
+    """bucket -> its terms, sorted: a term's segment rows lie in bucket
+    ``token_id % n_buckets`` (token_id is xxhash64(term); Python's % is
+    segments.py's pmod). A term without a token_id is not in the
+    dictionary, which is derived from the segment rows, so it has no
+    rows and no bucket."""
+    out: dict[int, list[str]] = {}
+    for t, tid in sorted(token_ids.items()):
+        out.setdefault(tid % n_buckets, []).append(t)
+    return out
+
+
+def read_segment_rows(
+    index_dir: str, shard: int, token_ids: dict[str, int], n_buckets: int,
+    columns: list[str],
+) -> list[dict]:
+    """The segment rows of one shard for the terms of ``token_ids``,
+    read with pyarrow straight from ``segments/shard=S/bucket=B/`` (no
+    Spark): the serve path's worker-side point read. Only the terms'
+    bucket directories (terms_by_bucket) are listed. Row-group term
+    statistics skip groups as TermTable does, and footers are cached
+    per process. EVERY matching row comes back, including several rows
+    for one term from unmerged partial indexes, so the kernels'
+    duplicate checks still see them. Each row is a dict of ``columns``
+    (``shard`` from the directory)."""
+    cols = [c for c in columns if c not in ("shard", "term")]
+    rows = []
+    for b, terms in sorted(terms_by_bucket(token_ids, n_buckets).items()):
+        d = Path(index_dir) / "segments" / f"shard={shard}" / f"bucket={b}"
+        if not d.is_dir():
+            continue
+        for tbl in TermTable(str(d), cols).tables(terms):
             for r in tbl.to_pylist():
-                out[r["term"]] = tuple(r[c] for c in self._columns)
-        return out
+                r["shard"] = shard
+                rows.append(r)
+    return rows
 
 
 def _ckpt_path(out_dir: str) -> Path:
@@ -733,10 +794,8 @@ def _query_terms(
     spark: SparkSession, index_dir: str, stats: dict, terms: list[str], k: int
 ) -> DataFrame:
     """The scoring job is the only Spark job: df_global and buckets come
-    from driver point reads of the dictionary (token_id is
-    xxhash64(term), and Python's % is Spark's pmod; an absent term has
-    no segment rows, so it needs no bucket), champions from
-    ChampionClient."""
+    from driver point reads of the dictionary (terms_by_bucket),
+    champions from ChampionClient."""
     from searty_spark.segments import SEGMENT_SCHEMA
     from searty_spark.wand import wand_topk
 
@@ -747,7 +806,8 @@ def _query_terms(
     seg = spark.read.schema(SEGMENT_SCHEMA).parquet(str(Path(index_dir) / "segments"))
     theta0 = 0.0
     if terms:
-        buckets = sorted({tid % stats["n_buckets"] for tid, _ in found.values()})
+        tids = {t: int(tid) for t, (tid, _) in found.items()}
+        buckets = sorted(terms_by_bucket(tids, stats["n_buckets"]))
         seg = seg.filter(F.col("bucket").isin(buckets))
         # champion-seeded theta: every shard kernel block-prunes its
         # essential terms against it — results identical either way

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -325,8 +326,10 @@ class TermDfClient:
     ``lookup(terms)`` returns a plain dict usable as ``df_lookup`` —
     terms absent from the dictionary are omitted, which is safe: the
     dictionary is derived from the segment rows, so an absent term has
-    no postings and never reaches the scoring kernel. ``spark`` is
-    unused; it stays for the callers' sake."""
+    no postings and never reaches the scoring kernel.
+    ``token_ids(terms)`` answers from the same read and cache (the
+    buckets to read, index.terms_by_bucket). ``spark`` is unused; it
+    stays for the callers' sake."""
 
     _ABSENT = object()
 
@@ -335,7 +338,7 @@ class TermDfClient:
 
         from searty_spark.index import TermTable
 
-        self._table = TermTable(f"{index_dir}/dictionary", ["df_global"])
+        self._table = TermTable(f"{index_dir}/dictionary", ["df_global", "token_id"])
         self._cache: dict[str, object] = {}
         # lookup() may be called from concurrent threads; the lock makes
         # read-check-fetch-update explicitly safe rather than relying on
@@ -343,6 +346,12 @@ class TermDfClient:
         self._lock = threading.Lock()
 
     def lookup(self, terms) -> dict[str, int]:
+        return {t: df for t, (df, _) in self._fetch(terms).items()}
+
+    def token_ids(self, terms) -> dict[str, int]:
+        return {t: tid for t, (_, tid) in self._fetch(terms).items()}
+
+    def _fetch(self, terms) -> dict[str, tuple[int, int]]:
         with self._lock:
             missing = [t for t in terms if t not in self._cache]
         if missing:
@@ -351,7 +360,9 @@ class TermDfClient:
             rows = self._table.rows(missing)
             with self._lock:
                 for t in missing:
-                    self._cache.setdefault(t, int(rows[t][0]) if t in rows else self._ABSENT)
+                    self._cache.setdefault(
+                        t, tuple(map(int, rows[t])) if t in rows else self._ABSENT
+                    )
         with self._lock:
             return {
                 t: v for t in terms if (v := self._cache.get(t)) is not self._ABSENT
@@ -412,10 +423,10 @@ def wand_topk(
 ) -> DataFrame:
     """(doc_id, score) exact BM25 top-k from the segment table.
 
-    ``pre_partitioned=True`` is the warm-server fast path: the CALLER
+    ``pre_partitioned=True`` is the cached-frame fast path: the CALLER
     asserts ``segments`` is already hash-partitioned by ``shard``
-    (e.g. ``.repartition(n_shards, "shard").cache()`` done once at
-    startup — cli serve does exactly this). The per-query
+    (e.g. ``.repartition(n_shards, "shard").cache()`` done once, as
+    bench.py does; cli serve reads no frame, see serve_topk). The per-query
     repartition exchange is then skipped entirely: term filter,
     projection and df_global attach are narrow, so the query runs as
     ONE stage (mapInPandas over the cached partitions) plus the
@@ -499,11 +510,11 @@ def wand_topk_batch(
     sort). This is the batch-evaluation shape: at 10^12 docs the scan
     dominates, and it amortizes across the whole query set.
 
-    ``pre_partitioned=True`` skips the repartition — the same warm-
-    server contract as wand_topk: the caller guarantees no shard's rows
-    are split across partitions (the cached shard-partitioned segments
-    of cli._Server). Whole shards sharing a partition is fine:
-    the kernel keys its state by shard."""
+    ``pre_partitioned=True`` skips the repartition — the same contract
+    as wand_topk: the caller guarantees no shard's rows are split
+    across partitions (a cached shard-partitioned segment frame).
+    Whole shards sharing a partition is fine: the kernel keys its
+    state by shard."""
     from pyspark.sql import Window
 
     spark = segments.sparkSession
@@ -570,12 +581,13 @@ def shard_topk_cached(
 
 
 def serve_topk(
-    segments: DataFrame,
+    spark,
+    index_dir: str,
+    stats: dict,
     requests: list[tuple[str, list[str], float]],
     k: int,
-    n_docs: int,
-    avgdl: float,
     df_lookup: dict[str, int],
+    token_ids: dict[str, int],
 ) -> list[list[list]]:
     """Exact top-k for MANY requests — BM25 and ranked phrase mixed —
     in ONE Spark job: the query server's batch (cli serve).
@@ -587,16 +599,24 @@ def serve_topk(
     ``requests``, each one's ``[doc_id, score]`` list — identical to
     what the single-request functions return.
 
-    ``segments`` must be shard-partitioned (wand_topk's
-    pre_partitioned contract, e.g. cli._Server's cached frame):
-    the job is one stage of one task per partition — term filter,
-    projection (position streams only when a phrase request is in the
-    batch), literal df_global map, then per shard and per request
-    shard_topk or _shard_phrase_bm25 cut to a local top-k. No
-    orderBy/limit, window or exchange: the driver keeps the first k
-    per request under (score DESC, doc_id ASC), exact because every
-    doc lives in one shard. ``df_lookup`` is a dict covering the
-    union of the requests' terms (TermDfClient.lookup)."""
+    The job is a shard scatter-gather with no SQL plan: one RDD task
+    per shard of the index at ``index_dir`` (stats.json's ``stats``).
+    Each task point-reads its shard's rows of the batch's terms with
+    pyarrow (index.read_segment_rows: only the terms' bucket
+    directories; position streams only when a phrase request is in
+    the batch), attaches df_global from the pickled ``df_lookup``, and
+    runs shard_topk or _shard_phrase_bm25 per request, cut to a local
+    top-k. The driver keeps the first k per request under (score DESC,
+    doc_id ASC), exact because every doc lives in one shard.
+
+    ``df_lookup`` and ``token_ids`` map the requests' dictionary terms
+    to df_global and token_id (TermDfClient.lookup / .token_ids). The
+    dictionary must cover every term that has segment rows, as it does
+    by construction (write_dictionary derives it from them; _query_terms
+    relies on the same): a term without a token_id has no bucket, so
+    its rows are never read. A term with a token_id but no df_lookup
+    entry still has its rows read, and the kernel raises "df_lookup
+    has no entry" instead of scoring it with no df."""
     from searty_spark.phrase_seg import PHRASE_COLS, _shard_phrase_bm25
 
     out: list[list[list]] = [[] for _ in requests]
@@ -604,12 +624,17 @@ def serve_topk(
     if not terms:
         return out
     cols = PHRASE_COLS if any(m == "phrase" for m, _, _ in requests) else SCORE_COLS
-    pruned = _with_df_global(
-        segments.filter(F.col("term").isin(terms)).select(*cols), terms, df_lookup
-    )
+    tids = {t: token_ids[t] for t in terms if t in token_ids}
+    index_dir = str(Path(index_dir).resolve())
+    n_docs, avgdl, n_buckets = stats["n_docs"], stats["avgdl"], stats["n_buckets"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for rows in _shard_rows(batches).values():
+    def task(shards: Iterator[int]) -> Iterator[tuple[int, int, float]]:
+        from searty_spark.index import read_segment_rows
+
+        for shard in shards:
+            rows = read_segment_rows(index_dir, shard, tids, n_buckets, cols)
+            for r in rows:
+                r["df_global"] = df_lookup.get(r["term"])
             for i, (mode, toks, theta0) in enumerate(requests):
                 want = set(toks)
                 sub = [r for r in rows if r["term"] in want]
@@ -619,14 +644,15 @@ def serve_topk(
                     frame = _shard_phrase_bm25(
                         _rows_by_term(sub), toks, n_docs, avgdl
                     ).sort_values(["score", "doc_id"], ascending=[False, True])
-                    frame = frame.head(k)[["doc_id", "score"]]
+                    frame = frame.head(k)
                 else:
                     frame = shard_topk(sub, n_docs, avgdl, k, theta0)
-                if len(frame):
-                    yield frame.assign(req=i)
+                for d, sc in zip(frame["doc_id"].tolist(), frame["score"].tolist()):
+                    yield i, d, sc
 
-    rows = pruned.mapInPandas(run, "doc_id long, score double, req long").collect()
-    for r in sorted(rows, key=lambda r: (r["req"], -r["score"], r["doc_id"])):
-        if len(out[r["req"]]) < k:
-            out[r["req"]].append([r["doc_id"], r["score"]])
+    n = stats["n_shards"]
+    found = spark.sparkContext.parallelize(range(n), n).mapPartitions(task).collect()
+    for i, d, sc in sorted(found, key=lambda r: (r[0], -r[2], r[1])):
+        if len(out[i]) < k:
+            out[i].append([d, sc])
     return out

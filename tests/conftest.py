@@ -33,21 +33,55 @@ def oracle_index(small_corpus):
     return build_index(docs)
 
 
+def _job_ids(sc, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn()`` starts on the calling thread
+    (a fresh job group, read from statusTracker)."""
+    import uuid
+
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture
 def jobs_of(spark):
     """``jobs_of(fn)`` -> the number of Spark jobs ``fn()`` starts on
-    the calling thread (a fresh job group, read from statusTracker)."""
-    import uuid
+    the calling thread."""
+    return lambda fn: len(_job_ids(spark.sparkContext, fn))
 
+
+@pytest.fixture
+def tasks_of(spark):
+    """``tasks_of(fn)`` -> the task count of each Spark job ``fn()``
+    starts on the calling thread, in job order."""
     sc = spark.sparkContext
 
-    def count(fn) -> int:
-        group = f"jobs-of-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "count jobs")
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    def count(fn) -> list[int]:
+        st = sc.statusTracker()
+        return [
+            sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds)
+            for j in _job_ids(sc, fn)
+        ]
 
     return count
+
+
+@pytest.fixture
+def groups_read(monkeypatch):
+    """Counts parquet row groups decoded through
+    ParquetFile.read_row_group."""
+    import pyarrow.parquet as pq
+
+    n = [0]
+    real = pq.ParquetFile.read_row_group
+
+    def counting(self, i, *args, **kwargs):
+        n[0] += 1
+        return real(self, i, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
+    return n

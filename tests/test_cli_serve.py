@@ -10,6 +10,8 @@ import argparse
 import io
 import json
 import queue
+import shutil
+from pathlib import Path
 
 import pytest
 
@@ -128,7 +130,7 @@ def test_serve_loop_contract(spark, served, monkeypatch, capsys):
 
 
 def test_serve_batch_is_one_job_and_matches_single_requests(
-    spark, served, jobs_of, capsys
+    spark, served, jobs_of, tasks_of, capsys
 ):
     """A mixed batch — BM25, phrase, a repeated query, a no-hit query,
     a theta0-seeded head query and a :batch — queued before the loop
@@ -162,7 +164,8 @@ def test_serve_batch_is_one_job_and_matches_single_requests(
     # first batch is one job too; the warm repeat is checked below
     assert jobs_of(lambda: _run(srv, items, len(items))) == 1
     capsys.readouterr()
-    assert jobs_of(lambda: _run(srv, items, len(items))) == 1
+    # one job of one task per shard
+    assert tasks_of(lambda: _run(srv, items, len(items))) == [st["n_shards"]]
     got = _replies(capsys)
 
     seg = load_segments(spark, d)
@@ -239,6 +242,134 @@ def test_serve_batch_failure_is_isolated(spark, served, monkeypatch, capsys):
     assert got[0]["results"] == want[0]["results"]
     assert got[2]["results"] == want[1]["results"]
     assert got[0]["batched"] == got[2]["batched"] == 1
+
+
+def test_server_startup_reads_no_segments(spark, served, jobs_of):
+    """The server caches no segment frame: a warm start runs only the
+    jobs of the cached documents frame (schema, cache, count), and the
+    first :regex loads the segments (its results are pinned in
+    test_serve_loop_contract)."""
+    from searty_spark import cli
+
+    cli._Server(spark, served, 5)  # the champion check is memoized after this
+    assert jobs_of(lambda: cli._Server(spark, served, 5)) <= 3
+
+
+def _with_segments_of(dst: str, *srcs: str) -> None:
+    """Copy every segment file of the ``srcs`` indexes into ``dst``'s
+    bucket directories beside the files there: unmerged partials."""
+    for i, src in enumerate(srcs):
+        for f in Path(src, "segments").glob("shard=*/bucket=*/*.parquet"):
+            to = Path(dst, "segments", f.parent.parent.name, f.parent.name)
+            to.mkdir(parents=True, exist_ok=True)
+            shutil.copy(f, to / f"p{i}-{f.name}")
+
+
+@pytest.fixture(scope="module")
+def partials(spark, small_corpus, tmp_path_factory):
+    """Hand-built partial indexes, each holding two or more (shard,
+    term) rows for one term in a bucket directory.
+    - "disjoint": the segments of an index over the docs below 75 and
+      of one over the rest, side by side; dictionary and stats are
+      the union's.
+    - "overlapping": "disjoint" plus the segments of an index over doc
+      "x" alone, which "disjoint" already holds: x's terms have rows
+      that share a doc id. "bad" is a query made of x's trigrams;
+      "good" are two queries sharing no trigram with x."""
+    from pyspark.sql import functions as F
+
+    from searty_spark.index import load_segments, load_stats, write_dictionary
+    from searty_spark.tokenize import tokenize
+
+    base = tmp_path_factory.mktemp("partials")
+    docs = small_corpus.select("doc_id", "text", "lang").orderBy("doc_id").collect()
+    x = next(r for r in docs if r["doc_id"] < 75 and r["lang"] == "en"
+             and len(r["text"]) > 40)
+    parts = {}
+    for name, cond in [("lo", F.col("doc_id") < 75), ("hi", F.col("doc_id") >= 75),
+                       ("x", F.col("doc_id") == x["doc_id"])]:
+        parts[name] = str(base / name)
+        write_index(small_corpus.filter(cond), parts[name], n_shards=2, n_buckets=4)
+
+    disjoint = base / "disjoint"
+    disjoint.mkdir()
+    _with_segments_of(str(disjoint), parts["lo"], parts["hi"])
+    st = [load_stats(parts["lo"]), load_stats(parts["hi"])]
+    stats = dict(st[0], n_docs=st[0]["n_docs"] + st[1]["n_docs"],
+                 sum_dl=st[0]["sum_dl"] + st[1]["sum_dl"])
+    stats["avgdl"] = stats["sum_dl"] / stats["n_docs"]
+    (disjoint / "stats.json").write_text(json.dumps(stats))
+    write_dictionary(load_segments(spark, str(disjoint)), str(disjoint / "dictionary"))
+
+    overlapping = base / "overlapping"
+    shutil.copytree(disjoint, overlapping)
+    _with_segments_of(str(overlapping), parts["x"])
+
+    x_terms = set(tokenize(x["text"]))
+    words = sorted({w for r in docs if r["doc_id"] != x["doc_id"] and r["lang"] == "en"
+                    for w in r["text"].split() if len(w) > 4})
+    good = [w for w in words if not set(tokenize(w)) & x_terms][:2]
+    assert len(good) == 2
+    return {"disjoint": str(disjoint), "overlapping": str(overlapping),
+            "bad": next(w for w in x["text"].split() if len(w) > 3), "good": good}
+
+
+def test_serve_on_disjoint_partials_equals_wand_topk(spark, partials, tasks_of, capsys):
+    """Duplicate (shard, term) rows with disjoint doc sets: the batch
+    is still one job of one task per shard, and every answer equals
+    wand_topk's over the same segments."""
+    from pyspark.sql import functions as F
+
+    from searty_spark import cli
+    from searty_spark.index import load_segments, load_stats
+    from searty_spark.tokenize import tokenize
+    from searty_spark.wand import wand_topk
+
+    d, k = partials["disjoint"], 5
+    st = load_stats(d)
+    seg = load_segments(spark, d)
+    dups = seg.groupBy("shard", "term").count().filter(F.col("count") > 1)
+    assert dups.filter(F.col("term").isin(tokenize("shared"))).count() > 0
+
+    srv = cli._Server(spark, d, k)
+    items = [("bm25", "shared"), ("bm25", "module query"), ("bm25", "@@"),
+             ("bm25", partials["bad"]), ("batch", json.dumps(["the shared", *partials["good"]]))]
+    assert tasks_of(lambda: _run(srv, items, len(items))) == [st["n_shards"]]
+    got = _replies(capsys)
+    dic = spark.read.parquet(f"{d}/dictionary")
+
+    def bm25(q):
+        return [[r["doc_id"], r["score"]] for r in wand_topk(
+            seg, None, q, k=k, n_docs=st["n_docs"], avgdl=st["avgdl"],
+            n_shards=st["n_shards"], df_lookup=dic,
+        ).collect()]
+
+    for seq, (mode, arg) in enumerate(items):
+        r = got[seq]
+        assert r["batched"] == len(items), r
+        if mode == "batch":
+            assert r["results"] == [bm25(q) for q in json.loads(arg)]
+        else:
+            assert r["results"] == bm25(arg)
+    assert got[0]["results"] and got[3]["results"] and got[2]["results"] == []
+
+
+def test_serve_on_overlapping_partials_fails_only_that_request(spark, partials, capsys):
+    """Duplicate rows that share a doc id cannot be summed exactly: the
+    request using them gets an error line, and its batch neighbours
+    get the answers they get on the disjoint index."""
+    from searty_spark import cli
+
+    good = partials["good"]
+    _run(cli._Server(spark, partials["disjoint"], 5), [("bm25", q) for q in good], 1)
+    want = _replies(capsys)
+    srv = cli._Server(spark, partials["overlapping"], 5)
+    _run(srv, [("bm25", good[0]), ("bm25", partials["bad"]), ("bm25", good[1])], 3)
+    got = _replies(capsys)
+    assert sorted(got) == [0, 1, 2]
+    assert "share doc_ids" in got[1]["error"]
+    assert got[0]["results"] and got[0]["results"] == want[0]["results"]
+    assert got[2]["results"] and got[2]["results"] == want[1]["results"]
 
 
 def test_clean_subcommand_end_to_end(spark, tmp_path, capsys):

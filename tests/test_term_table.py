@@ -9,7 +9,6 @@ import random
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from searty_spark.champions import ChampionClient
 from searty_spark.wand import TermDfClient
@@ -31,20 +30,6 @@ def _dictionary(terms):
         "df_global": pa.array([len(t.encode()) * 7 + i for i, t in enumerate(terms)],
                               pa.int64()),
     })
-
-
-@pytest.fixture
-def groups_read(monkeypatch):
-    """Counts row groups decoded through ParquetFile.read_row_group."""
-    n = [0]
-    real = pq.ParquetFile.read_row_group
-
-    def counting(self, i, *args, **kwargs):
-        n[0] += 1
-        return real(self, i, *args, **kwargs)
-
-    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
-    return n
 
 
 def _full(table) -> dict[str, int]:
