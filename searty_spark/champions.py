@@ -174,11 +174,8 @@ def build_champions(
     # decode pass over a third of the dictionary.
     if heads is None:
         heads = head_terms(segments, min_df, max_terms)
-    # isin is a pushed filter (parquet row-group dictionary pruning).
-    # Deliberately NO bucket partition prune here, unlike wand_topk: a
-    # few-term query hits few buckets, but 100+ head terms hit
-    # essentially every bucket, so the prune would cost a driver-side
-    # hash job per build and skip nothing.
+    # isin is a pushed filter: the segment files' term statistics
+    # prune row groups, as for a query.
     rows = segments.filter(F.col("term").isin(heads)).select(
         "term", "blob", "block_offset", "block_max_tf", "block_min_dl"
     )

@@ -173,9 +173,10 @@ class _Server:
 
     def __init__(self, spark, index_dir: str, k: int):
         """Bounded term->df client, champion client and the index path:
-        no segment row is read or cached at startup (each batch
-        point-reads the rows it needs), so startup and memory are O(1)
-        in index size."""
+        no segment row or document is read or cached at startup (each
+        batch point-reads the rows it needs; the first :regex caches
+        the segments and documents it scans), so startup and memory are
+        O(1) in index size."""
         from searty_spark.champions import ChampionClient
         from searty_spark.index import load_stats
         from searty_spark.wand import TermDfClient
@@ -184,12 +185,8 @@ class _Server:
         self.stats = load_stats(index_dir)
         self.dic = TermDfClient(spark, index_dir)
         self.champs = ChampionClient(spark, index_dir)
-        self.docs = None
-        self._seg = None  # :regex's cached segment frame, built on first use
-        docs_path = Path(index_dir) / "documents"
-        if docs_path.exists():
-            self.docs = spark.read.parquet(str(docs_path)).cache()
-            self.docs.count()
+        # :regex's cached documents and segment frames, built on first use
+        self._docs = self._seg = None
 
     def run(self, requests, max_batch: int) -> None:
         """Answer ``(seq, mode, arg)`` items from the queue until a
@@ -269,10 +266,7 @@ class _Server:
                         self.k, st["n_docs"], st["avgdl"],
                     )
                 batch.append((kind, toks, theta0))
-            found = iter(serve_topk(
-                self.spark, self.index_dir, st, batch, self.k, dfl,
-                self.dic.token_ids(terms),
-            ))
+            found = iter(serve_topk(self.spark, self.index_dir, st, batch, self.k, dfl))
         # catch EVERYTHING: a failing job raises Py4JJavaError or
         # PythonException, and every request must still be answered
         except Exception as err:  # noqa: BLE001
@@ -295,12 +289,14 @@ class _Server:
     def _regex(self, seq: int, arg: str) -> None:
         t0 = time.perf_counter()
         try:
-            if self.docs is None:
+            docs_path = Path(self.index_dir) / "documents"
+            if not docs_path.exists():
                 raise ValueError(":regex needs a --store-docs index")
             from searty_spark.index import load_segments
             from searty_spark.query import regex_search_segments
 
             if self._seg is None:
+                self._docs = self.spark.read.parquet(str(docs_path)).cache()
                 # cached shard-partitioned, as the candidate step
                 # partitions it: later :regex requests skip the parquet
                 # scan and the exchange
@@ -310,7 +306,7 @@ class _Server:
                     .cache()
                 )
             rows = regex_search_segments(
-                self.docs, self._seg, arg, n_shards=self.stats["n_shards"]
+                self._docs, self._seg, arg, n_shards=self.stats["n_shards"]
             ).collect()
             line = {
                 "seq": seq, "query": arg, "mode": "regex",
@@ -465,7 +461,10 @@ def cmd_query_ann(args) -> None:
 
 def cmd_describe(args) -> None:
     """Index describe (ref lib/indexer/describe.go:11-29): global stats,
-    per-shard segment counts, heaviest terms."""
+    per-shard segment counts with the shard's parquet layout (files,
+    row groups and footer bytes, read from the footers with pyarrow),
+    heaviest terms."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from searty_spark.index import load_segments, load_stats
@@ -483,7 +482,13 @@ def cmd_describe(args) -> None:
     )
     print(json.dumps(stats))
     for r in shards:
-        print(f"shard={r['shard']} segments={r['segments']} postings={r['postings']}")
+        files = [f for f in (Path(args.index) / "segments" / f"shard={r['shard']}").iterdir()
+                 if f.is_file() and not f.name.startswith(("_", "."))]
+        mds = [pq.read_metadata(f) for f in files]
+        # a footer is its thrift metadata plus the 4-byte length and "PAR1"
+        print(f"shard={r['shard']} segments={r['segments']} postings={r['postings']} "
+              f"files={len(files)} row_groups={sum(m.num_row_groups for m in mds)} "
+              f"footer_bytes={sum(m.serialized_size + 8 for m in mds)}")
     for r in top:
         print(f"term={r['term']!r} df={r['df']}")
 

@@ -13,12 +13,16 @@ resumes from the last committed unit):
                               whole build is ONE token pass); one file
                               sorted by term in small row groups, which
                               TermTable point-reads in the driver
-    <dir>/segments/shard=N/bucket=M/   segment rows parquet
-                              (token rows shuffle straight from the
-                              tokenizer into the segment encoder —
-                              no postings intermediate; see
+    <dir>/segments/shard=N/   segment rows parquet: ONE file per
+                              shard, rows sorted by term in row groups
+                              of TERM_ROW_GROUP_ROWS, min/max statistics
+                              on term only (write_segments; token rows
+                              shuffle straight from the tokenizer into
+                              the segment encoder — no postings
+                              intermediate; see
                               segments.build_segments_from_tokens)
-    <dir>/stats.json          {n_docs, avgdl, sum_dl, n_shards, n_buckets}
+    <dir>/stats.json          {format, analyzer, n_docs, avgdl, sum_dl,
+                              n_shards, n_buckets}
     <dir>/checkpoint.jsonl    one line per committed unit + metrics
                               (stage, shard, wall_sec, rows, docs_per_sec)
 
@@ -28,9 +32,13 @@ so a crash between data-commit and checkpoint-append just redoes one
 unit. On a real deployment the checkpoint file would be an Iceberg
 table; the protocol is identical.
 
-The segment table is hive-partitioned by (shard, bucket) so query-term
-bucket pruning happens at file-listing time — the analogue of the
-reference's token_id PK index seek (ref lib/database/database.go:508-526).
+The segment table is hive-partitioned by shard only. A query term's
+rows are found by the term column's row-group statistics, which the
+parquet scan's pushed term filter (Spark) and TermTable (pyarrow, the
+serve path) both use to skip groups: the analogue of the reference's
+token_id PK index seek (ref lib/database/database.go:508-526). The
+``bucket`` column (pmod(xxhash64(term), n_buckets)) stays a stored
+column and the encode and merge grouping key, not a directory.
 """
 
 from __future__ import annotations
@@ -63,29 +71,28 @@ def lisp_term(kind: str, term: str) -> str:
 # segment/dictionary layout changes incompatibly (format 1 = round-1
 # indexes with df_global/block_max_impact baked into segments; format 2
 # = stats-free blocks with (block_max_tf, block_min_dl) and a post-hoc
-# dictionary). load_stats fails fast with a rebuild hint instead of
-# letting the query kernels die on a deep KeyError.
-INDEX_FORMAT = 2
+# dictionary, segments in shard=N/bucket=M directories; format 3 = one
+# term-sorted segment file per shard). load_stats fails fast with a
+# rebuild hint instead of letting the query kernels die on a deep
+# KeyError or read a layout they no longer list.
+INDEX_FORMAT = 3
 
 
-def term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> list[int]:
-    """Buckets of the given terms — computed with the SAME JVM xxhash64
-    used at write time (a driver-side reimplementation would risk
-    drift)."""
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    return [
-        r[0]
-        for r in df.select(
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
-
-
-# Rows per parquet row group of the term-sorted tables (dictionary,
-# champion sidecar): a point read decodes one group.
+# Rows per parquet row group of the term-sorted tables (segments,
+# dictionary, champion sidecar): a point read decodes one group.
 TERM_ROW_GROUP_ROWS = 1024
+
+
+def _term_sorted_writer(df: DataFrame):
+    """``df``'s overwrite writer with the term-sorted tables' parquet
+    options: row groups of TERM_ROW_GROUP_ROWS rows, and min/max
+    statistics on ``term`` only, the one column readers filter on."""
+    return (
+        df.write.mode("overwrite")
+        .option("parquet.block.row.count.limit", TERM_ROW_GROUP_ROWS)
+        .option("parquet.column.statistics.enabled", False)
+        .option("parquet.column.statistics.enabled#term", True)
+    )
 
 
 def write_term_sorted(df: DataFrame, path: str) -> None:
@@ -95,8 +102,20 @@ def write_term_sorted(df: DataFrame, path: str) -> None:
     parquet's min/max statistics, so groups hold disjoint term ranges.
     One file needs no range exchange (whose sampling seed follows the
     RDD id) and writes the same pages every time."""
-    df.coalesce(1).sortWithinPartitions("term").write.mode("overwrite").option(
-        "parquet.block.row.count.limit", TERM_ROW_GROUP_ROWS
+    _term_sorted_writer(df.coalesce(1).sortWithinPartitions("term")).parquet(path)
+
+
+def write_segments(seg: DataFrame, path: str, n_shards: int, dynamic: bool = False) -> None:
+    """Write segment rows as write_term_sorted's layout per shard: ONE
+    file per ``shard=S/`` directory, sorted by term. (shard, term) is
+    unique in a built or merged index, so the order is total and the
+    bytes repeat. ``dynamic`` replaces only the shard directories
+    ``seg`` holds (a shard-batch build's resume unit); otherwise the
+    whole table is replaced."""
+    _term_sorted_writer(
+        seg.repartition(n_shards, "shard").sortWithinPartitions("shard", "term")
+    ).partitionBy("shard").option(
+        "partitionOverwriteMode", "dynamic" if dynamic else "static"
     ).parquet(path)
 
 
@@ -137,7 +156,7 @@ def _cached_footer(f: Path):
 class TermTable:
     """Point reads of a term-keyed parquet table with pyarrow, no Spark
     job: the dictionary and the champion sidecar in the driver, a
-    segment bucket directory in a serve task (read_segment_rows). The
+    segment shard directory in a serve task (read_segment_rows). The
     footers' per-row-group term min/max, read once here, pick the
     groups a term can lie in; a read decodes only those, so memory
     follows the groups a request touches, never the table. On
@@ -202,41 +221,26 @@ class TermTable:
             yield tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(ts, pa.string())))
 
 
-def terms_by_bucket(token_ids: dict[str, int], n_buckets: int) -> dict[int, list[str]]:
-    """bucket -> its terms, sorted: a term's segment rows lie in bucket
-    ``token_id % n_buckets`` (token_id is xxhash64(term); Python's % is
-    segments.py's pmod). A term without a token_id is not in the
-    dictionary, which is derived from the segment rows, so it has no
-    rows and no bucket."""
-    out: dict[int, list[str]] = {}
-    for t, tid in sorted(token_ids.items()):
-        out.setdefault(tid % n_buckets, []).append(t)
-    return out
-
-
 def read_segment_rows(
-    index_dir: str, shard: int, token_ids: dict[str, int], n_buckets: int,
-    columns: list[str],
+    index_dir: str, shard: int, terms, columns: list[str]
 ) -> list[dict]:
-    """The segment rows of one shard for the terms of ``token_ids``,
-    read with pyarrow straight from ``segments/shard=S/bucket=B/`` (no
-    Spark): the serve path's worker-side point read. Only the terms'
-    bucket directories (terms_by_bucket) are listed. Row-group term
-    statistics skip groups as TermTable does, and footers are cached
-    per process. EVERY matching row comes back, including several rows
-    for one term from unmerged partial indexes, so the kernels'
+    """The segment rows of one shard for ``terms``, read with pyarrow
+    straight from ``segments/shard=S/`` (no Spark): the serve path's
+    worker-side point read. Row-group term statistics skip groups as
+    TermTable does, and footers are cached per process. EVERY matching
+    row comes back, including several rows for one term from unmerged
+    partial indexes copied in beside the shard's file, so the kernels'
     duplicate checks still see them. Each row is a dict of ``columns``
     (``shard`` from the directory)."""
+    d = Path(index_dir) / "segments" / f"shard={shard}"
+    if not d.is_dir():
+        return []
     cols = [c for c in columns if c not in ("shard", "term")]
     rows = []
-    for b, terms in sorted(terms_by_bucket(token_ids, n_buckets).items()):
-        d = Path(index_dir) / "segments" / f"shard={shard}" / f"bucket={b}"
-        if not d.is_dir():
-            continue
-        for tbl in TermTable(str(d), cols).tables(terms):
-            for r in tbl.to_pylist():
-                r["shard"] = shard
-                rows.append(r)
+    for tbl in TermTable(str(d), cols).tables(terms):
+        for r in tbl.to_pylist():
+            r["shard"] = shard
+            rows.append(r)
     return rows
 
 
@@ -566,8 +570,8 @@ def write_index(
         )
 
     # --- stage 3 body: segments, in resumable shard batches ---------------
-    # Default: ONE job covering every shard (dynamic partition
-    # overwrite makes the unit write idempotent). shard_batch < n_shards
+    # Default: ONE job covering every shard (write_segments' dynamic
+    # partition overwrite makes the unit write idempotent). shard_batch < n_shards
     # trades throughput for finer resume granularity — at 10^12 docs a
     # batch is the unit a preempted cluster re-runs. For the TRIGRAM
     # analyzer the token stream derives from the corpus alone (doc_len
@@ -595,9 +599,7 @@ def write_index(
                 n_shards=n_shards,
                 n_buckets=n_buckets,
             )
-            seg.write.partitionBy("shard", "bucket").mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(str(out / "segments"))
+            write_segments(seg, str(out / "segments"), n_shards, dynamic=True)
             wall = time.perf_counter() - t0
             # dense doc_ids spread uniformly over shards by pmod
             n_docs_part = get_stats()["n_docs"] * (hi - lo) // n_shards
@@ -752,7 +754,8 @@ def query_symbols(spark: SparkSession, index_dir: str, query: str) -> DataFrame:
 def query_index(
     spark: SparkSession, index_dir: str, query: str, k: int = 10
 ) -> DataFrame:
-    """Top-k BM25 via block-max MaxScore with bucket partition pruning."""
+    """Top-k BM25 via block-max MaxScore; the pushed term filter skips
+    segment row groups by their term statistics."""
     from searty_spark.tokenize import tokenize
 
     stats = load_stats(index_dir)
@@ -793,30 +796,26 @@ def query_index_lisp(
 def _query_terms(
     spark: SparkSession, index_dir: str, stats: dict, terms: list[str], k: int
 ) -> DataFrame:
-    """The scoring job is the only Spark job: df_global and buckets come
-    from driver point reads of the dictionary (terms_by_bucket),
-    champions from ChampionClient."""
+    """The scoring job is the only Spark job: df_global comes from a
+    driver point read of the dictionary, champions from
+    ChampionClient. The scan's pushed term filter prunes the segment
+    files' row groups by their term statistics."""
     from searty_spark.segments import SEGMENT_SCHEMA
     from searty_spark.wand import wand_topk
 
-    dic = TermTable(str(Path(index_dir) / "dictionary"), ["token_id", "df_global"])
-    found = dic.rows(terms)
-    dfs = {t: int(df) for t, (_, df) in found.items()}
+    dic = TermTable(str(Path(index_dir) / "dictionary"), ["df_global"])
+    dfs = {t: int(df) for t, (df,) in dic.rows(terms).items()}
     # the known schema spares load_segments' schema-inference job
     seg = spark.read.schema(SEGMENT_SCHEMA).parquet(str(Path(index_dir) / "segments"))
     theta0 = 0.0
-    if terms:
-        tids = {t: int(tid) for t, (tid, _) in found.items()}
-        buckets = sorted(terms_by_bucket(tids, stats["n_buckets"]))
-        seg = seg.filter(F.col("bucket").isin(buckets))
-        # champion-seeded theta: every shard kernel block-prunes its
-        # essential terms against it — results identical either way
-        if (Path(index_dir) / "champions").exists():
-            from searty_spark.champions import ChampionClient, champion_theta
+    # champion-seeded theta: every shard kernel block-prunes its
+    # essential terms against it — results identical either way
+    if terms and (Path(index_dir) / "champions").exists():
+        from searty_spark.champions import ChampionClient, champion_theta
 
-            champs = ChampionClient(spark, index_dir).lookup(terms)
-            if champs:
-                theta0 = champion_theta(champs, dfs, k, stats["n_docs"], stats["avgdl"])
+        champs = ChampionClient(spark, index_dir).lookup(terms)
+        if champs:
+            theta0 = champion_theta(champs, dfs, k, stats["n_docs"], stats["avgdl"])
     return wand_topk(
         seg,
         dstats=None,

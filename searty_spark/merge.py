@@ -33,7 +33,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searty_spark.index import INDEX_FORMAT, load_segments, load_stats, write_dictionary
+from searty_spark.index import (
+    INDEX_FORMAT,
+    load_segments,
+    load_stats,
+    write_dictionary,
+    write_segments,
+)
 from searty_spark.segments import (
     SEGMENT_COLS,
     SEGMENT_SCHEMA,
@@ -212,10 +218,7 @@ def merge_indexes(
 
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    # same hive layout write_index produces: segments/shard=N/bucket=M
-    merged.write.partitionBy("shard", "bucket").mode("overwrite").parquet(
-        str(out / "segments")
-    )
+    write_segments(merged, str(out / "segments"), n_shards)
     # docstats by union; stats, dictionary and champions re-derive
     ds = None
     for d in index_dirs:
@@ -313,7 +316,7 @@ def _merge_dedup(
     )
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    seg.write.partitionBy("shard", "bucket").mode("overwrite").parquet(str(out / "segments"))
+    write_segments(seg, str(out / "segments"), n_shards)
     survivors.write.mode("overwrite").parquet(str(out / "docstats"))
     stats = _write_derived(spark, out_dir, analyzer, n_docs, sum_dl, n_shards, n_buckets,
                            derive_champions)

@@ -9,9 +9,10 @@ at lib/indexer/indexer.go:46-52), re-architected for 10^12 docs:
   query side its parallelism: each shard computes an exact local
   top-k, the global top-k is their union (exact — a doc lives in
   exactly one shard).
-- **Bucketing**: ``bucket = pmod(xxhash64(term), n_buckets)`` is the
-  storage partition key (parquet analogue of an Iceberg bucket
-  transform); query terms prune to their buckets at scan time.
+- **Bucketing**: ``bucket = pmod(xxhash64(term), n_buckets)`` splits
+  each shard's terms into encode groups (and merge groups). It is a
+  stored column, not a directory: each shard is one term-sorted file
+  whose row-group term statistics prune a query's reads (index.py).
 - **Blocks**: postings are split into blocks of ``block_size`` docs.
   Two blobs per segment row:
 

@@ -6,8 +6,8 @@ brute-force oracle), structured like the query pipeline of SURVEY.md
 pruning the north rule adds where the reference does exhaustive
 intersection — Q4 hook):
 
-1. driver: tokenize query, prune the segment scan to the query terms'
-   buckets (partition pruning) + terms (predicate pushdown);
+1. driver: tokenize query, prune the segment scan to the query terms
+   (predicate pushdown: row groups skipped by their term statistics);
 2. per shard (mapInPandas over co-grouped segment rows): MaxScore —
    - seed the threshold from the highest-max-impact term's postings,
    - split terms into essential / non-essential by cumulative bound,
@@ -326,10 +326,8 @@ class TermDfClient:
     ``lookup(terms)`` returns a plain dict usable as ``df_lookup`` —
     terms absent from the dictionary are omitted, which is safe: the
     dictionary is derived from the segment rows, so an absent term has
-    no postings and never reaches the scoring kernel.
-    ``token_ids(terms)`` answers from the same read and cache (the
-    buckets to read, index.terms_by_bucket). ``spark`` is unused; it
-    stays for the callers' sake."""
+    no postings and never reaches the scoring kernel. ``spark`` is
+    unused; it stays for the callers' sake."""
 
     _ABSENT = object()
 
@@ -338,7 +336,7 @@ class TermDfClient:
 
         from searty_spark.index import TermTable
 
-        self._table = TermTable(f"{index_dir}/dictionary", ["df_global", "token_id"])
+        self._table = TermTable(f"{index_dir}/dictionary", ["df_global"])
         self._cache: dict[str, object] = {}
         # lookup() may be called from concurrent threads; the lock makes
         # read-check-fetch-update explicitly safe rather than relying on
@@ -346,12 +344,6 @@ class TermDfClient:
         self._lock = threading.Lock()
 
     def lookup(self, terms) -> dict[str, int]:
-        return {t: df for t, (df, _) in self._fetch(terms).items()}
-
-    def token_ids(self, terms) -> dict[str, int]:
-        return {t: tid for t, (_, tid) in self._fetch(terms).items()}
-
-    def _fetch(self, terms) -> dict[str, tuple[int, int]]:
         with self._lock:
             missing = [t for t in terms if t not in self._cache]
         if missing:
@@ -360,9 +352,7 @@ class TermDfClient:
             rows = self._table.rows(missing)
             with self._lock:
                 for t in missing:
-                    self._cache.setdefault(
-                        t, tuple(map(int, rows[t])) if t in rows else self._ABSENT
-                    )
+                    self._cache.setdefault(t, int(rows[t][0]) if t in rows else self._ABSENT)
         with self._lock:
             return {
                 t: v for t in terms if (v := self._cache.get(t)) is not self._ABSENT
@@ -414,7 +404,6 @@ def wand_topk(
     n: int = NGRAM_N,
     n_docs: int | None = None,
     avgdl: float | None = None,
-    n_buckets: int | None = None,
     n_shards: int | None = None,
     df_lookup=None,
     terms: list[str] | None = None,
@@ -457,15 +446,9 @@ def wand_topk(
         row = dstats.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
         n_docs, avgdl = int(row["n"]), float(row["a"])
 
+    # the term filter reaches the parquet scan, whose row-group term
+    # statistics skip the groups no query term can lie in (index.py)
     pruned = segments.filter(F.col("term").isin(terms))
-    if n_buckets is not None and "bucket" in segments.columns:
-        # partition pruning when the segment table is stored
-        # partitioned by bucket (see index.py for the hash helper)
-        from searty_spark.index import term_buckets
-
-        pruned = pruned.filter(
-            F.col("bucket").isin(term_buckets(spark, terms, n_buckets))
-        )
     # EXPLICIT column pruning: mapInPandas consumes its child's whole
     # schema, so Catalyst cannot prune for us — without this select the
     # repartition shuffles pos_blob (positions — often the LARGEST
@@ -587,7 +570,6 @@ def serve_topk(
     requests: list[tuple[str, list[str], float]],
     k: int,
     df_lookup: dict[str, int],
-    token_ids: dict[str, int],
 ) -> list[list[list]]:
     """Exact top-k for MANY requests — BM25 and ranked phrase mixed —
     in ONE Spark job: the query server's batch (cli serve).
@@ -602,21 +584,19 @@ def serve_topk(
     The job is a shard scatter-gather with no SQL plan: one RDD task
     per shard of the index at ``index_dir`` (stats.json's ``stats``).
     Each task point-reads its shard's rows of the batch's terms with
-    pyarrow (index.read_segment_rows: only the terms' bucket
-    directories; position streams only when a phrase request is in
-    the batch), attaches df_global from the pickled ``df_lookup``, and
-    runs shard_topk or _shard_phrase_bm25 per request, cut to a local
-    top-k. The driver keeps the first k per request under (score DESC,
-    doc_id ASC), exact because every doc lives in one shard.
+    pyarrow (index.read_segment_rows: only the row groups of the
+    shard's files whose term range can hold a term; position streams
+    only when a phrase request is in the batch), attaches df_global
+    from the pickled ``df_lookup``, and runs shard_topk or
+    _shard_phrase_bm25 per request, cut to a local top-k. The driver
+    keeps the first k per request under (score DESC, doc_id ASC),
+    exact because every doc lives in one shard.
 
-    ``df_lookup`` and ``token_ids`` map the requests' dictionary terms
-    to df_global and token_id (TermDfClient.lookup / .token_ids). The
-    dictionary must cover every term that has segment rows, as it does
-    by construction (write_dictionary derives it from them; _query_terms
-    relies on the same): a term without a token_id has no bucket, so
-    its rows are never read. A term with a token_id but no df_lookup
-    entry still has its rows read, and the kernel raises "df_lookup
-    has no entry" instead of scoring it with no df."""
+    ``df_lookup`` maps the requests' dictionary terms to df_global
+    (TermDfClient.lookup). Every query term's rows are read, whether
+    or not the dictionary has it, so a term with rows but no
+    df_lookup entry makes the kernel raise "df_lookup has no entry"
+    instead of scoring it with no df."""
     from searty_spark.phrase_seg import PHRASE_COLS, _shard_phrase_bm25
 
     out: list[list[list]] = [[] for _ in requests]
@@ -624,15 +604,14 @@ def serve_topk(
     if not terms:
         return out
     cols = PHRASE_COLS if any(m == "phrase" for m, _, _ in requests) else SCORE_COLS
-    tids = {t: token_ids[t] for t in terms if t in token_ids}
     index_dir = str(Path(index_dir).resolve())
-    n_docs, avgdl, n_buckets = stats["n_docs"], stats["avgdl"], stats["n_buckets"]
+    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
 
     def task(shards: Iterator[int]) -> Iterator[tuple[int, int, float]]:
         from searty_spark.index import read_segment_rows
 
         for shard in shards:
-            rows = read_segment_rows(index_dir, shard, tids, n_buckets, cols)
+            rows = read_segment_rows(index_dir, shard, terms, cols)
             for r in rows:
                 r["df_global"] = df_lookup.get(r["term"])
             for i, (mode, toks, theta0) in enumerate(requests):

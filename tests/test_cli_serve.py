@@ -245,22 +245,45 @@ def test_serve_batch_failure_is_isolated(spark, served, monkeypatch, capsys):
 
 
 def test_server_startup_reads_no_segments(spark, served, jobs_of):
-    """The server caches no segment frame: a warm start runs only the
-    jobs of the cached documents frame (schema, cache, count), and the
-    first :regex loads the segments (its results are pinned in
+    """The server caches neither a segment nor a documents frame: a
+    warm start on a --store-docs index runs no Spark job at all, and
+    the first :regex loads both (its results are pinned in
     test_serve_loop_contract)."""
     from searty_spark import cli
 
     cli._Server(spark, served, 5)  # the champion check is memoized after this
-    assert jobs_of(lambda: cli._Server(spark, served, 5)) <= 3
+    assert jobs_of(lambda: cli._Server(spark, served, 5)) == 0
+
+
+def test_describe_prints_each_shards_parquet_layout(spark, served, capsys):
+    """`cli describe` reports each shard's segment files, row groups and
+    footer bytes; a footer is the file's tail: its thrift metadata, the
+    4-byte length and the "PAR1" magic."""
+    import pyarrow.parquet as pq
+
+    from searty_spark import cli
+
+    cli.cmd_describe(argparse.Namespace(cpus=4, index=served, top=3))
+    lines = capsys.readouterr().out.strip().splitlines()
+    shards = [x for x in lines if x.startswith("shard=")]
+    assert len(shards) == 2
+    for s, line in enumerate(shards):
+        (f,) = Path(served, "segments", f"shard={s}").glob("part-*.parquet")
+        md = pq.read_metadata(f)
+        tail = f.read_bytes()[-8:]
+        assert tail[4:] == b"PAR1" and int.from_bytes(tail[:4], "little") == md.serialized_size
+        assert line.startswith(f"shard={s} segments={md.num_rows} ")
+        assert line.endswith(
+            f" files=1 row_groups={md.num_row_groups} footer_bytes={md.serialized_size + 8}"
+        )
 
 
 def _with_segments_of(dst: str, *srcs: str) -> None:
     """Copy every segment file of the ``srcs`` indexes into ``dst``'s
-    bucket directories beside the files there: unmerged partials."""
+    shard directories beside the files there: unmerged partials."""
     for i, src in enumerate(srcs):
-        for f in Path(src, "segments").glob("shard=*/bucket=*/*.parquet"):
-            to = Path(dst, "segments", f.parent.parent.name, f.parent.name)
+        for f in Path(src, "segments").glob("shard=*/*.parquet"):
+            to = Path(dst, "segments", f.parent.name)
             to.mkdir(parents=True, exist_ok=True)
             shutil.copy(f, to / f"p{i}-{f.name}")
 
@@ -268,7 +291,7 @@ def _with_segments_of(dst: str, *srcs: str) -> None:
 @pytest.fixture(scope="module")
 def partials(spark, small_corpus, tmp_path_factory):
     """Hand-built partial indexes, each holding two or more (shard,
-    term) rows for one term in a bucket directory.
+    term) rows for one term in a shard directory.
     - "disjoint": the segments of an index over the docs below 75 and
       of one over the rest, side by side; dictionary and stats are
       the union's.

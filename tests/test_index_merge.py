@@ -255,15 +255,19 @@ def test_compact_partials_rejects_fanin_below_two(spark, tmp_path_factory):
 
 
 def test_load_stats_rejects_foreign_format(tmp_path):
-    """A round-1 on-disk index (no format stamp) must fail fast with a
-    rebuild hint, not die on a deep KeyError in the Arrow kernel."""
+    """A round-1 on-disk index (no format stamp) and a format-2 index
+    (segments in shard=N/bucket=M directories) must fail fast with a
+    rebuild hint, not die on a deep KeyError in the Arrow kernel or
+    read a layout this build no longer lists."""
     from searty_spark.index import load_stats
 
-    (tmp_path / "stats.json").write_text(
-        json.dumps({"n_docs": 5, "sum_dl": 50, "avgdl": 10.0, "n_shards": 2, "n_buckets": 4})
-    )
-    with pytest.raises(ValueError, match="format 1"):
-        load_stats(str(tmp_path))
+    stats = {"n_docs": 5, "sum_dl": 50, "avgdl": 10.0, "n_shards": 2, "n_buckets": 4}
+    for fmt in (None, 2):
+        (tmp_path / "stats.json").write_text(
+            json.dumps(stats if fmt is None else {**stats, "format": fmt})
+        )
+        with pytest.raises(ValueError, match=f"format {fmt or 1}, .*rebuild"):
+            load_stats(str(tmp_path))
 
 
 def test_merge_rejects_mismatched_docstats_schemas(spark, corpus, tmp_path_factory):
@@ -314,15 +318,34 @@ def _assert_term_sorted(d: Path) -> None:
     assert all(a < b for a, b in zip(terms, terms[1:]))
 
 
+def _assert_one_file_per_shard(d: Path, n_shards: int) -> None:
+    """Each shard directory of the segments holds exactly one parquet
+    file, and no column but ``term`` carries min/max statistics."""
+    import pyarrow.parquet as pq
+
+    shards = sorted((d / "segments").glob("shard=*"))
+    assert [s.name for s in shards] == [f"shard={i}" for i in range(n_shards)]
+    for s in shards:
+        files = [f for f in s.iterdir() if not f.name.startswith(("_", "."))]
+        assert len(files) == 1 and files[0].name.startswith("part-"), files
+        md = pq.read_metadata(files[0])
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                st = md.row_group(g).column(c).statistics
+                has = st is not None and st.has_min_max
+                assert has == (md.schema.column(c).path == "term"), (s, g, c)
+
+
 def test_build_is_deterministic_and_stamps_without_rescan(
     spark, tmp_path, monkeypatch
 ):
     """Champions run after the dictionary and reuse the segment
     fingerprint its job observed: write_index never calls
     segment_fingerprint. Two builds of one corpus write byte-identical
-    dictionary and champion sidecars (300 docs, so the default min_df
-    of 256 leaves real head terms), the dictionary term-sorted in small
-    row groups; so does a merge of the build."""
+    segment files per shard, dictionary and champion sidecars (300
+    docs, so the default min_df of 256 leaves real head terms), one
+    segment file per shard with term statistics only, the dictionary
+    term-sorted in small row groups; so does a merge of the build."""
     import searty_spark.champions as champions
 
     def no_rescan(_segments):
@@ -334,15 +357,18 @@ def test_build_is_deterministic_and_stamps_without_rescan(
     for d in (a, b):
         write_index(docs, str(d), n_shards=2, n_buckets=4)
     assert spark.read.parquet(str(a / "champions")).count() > 0
-    for sub in ("dictionary", "champions"):
+    subs = ["dictionary", "champions", "segments/shard=0", "segments/shard=1"]
+    for sub in subs:
         assert _dir_bytes(a / sub) == _dir_bytes(b / sub), sub
     assert (a / "champions_meta.json").read_text() == (
         b / "champions_meta.json"
     ).read_text()
     _assert_term_sorted(a)
+    _assert_one_file_per_shard(a, 2)
     monkeypatch.undo()  # the merge re-derives its sidecar stamp
     m = tmp_path / "m"
     merge_indexes(spark, [str(a)], str(m))
     _assert_term_sorted(m)
-    for sub in ("dictionary", "champions"):
+    _assert_one_file_per_shard(m, 2)
+    for sub in subs:
         assert _dir_bytes(a / sub) == _dir_bytes(m / sub), sub

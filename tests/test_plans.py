@@ -3,7 +3,7 @@ actual plans (.explain) rather than trusted:
 
 - query terms reach the parquet scan as pushed filters (the analogue
   of the reference's SQL index seek, ref database.go:508-526);
-- bucket predicates prune partitions at file-listing time;
+- the term filter prunes segment row groups by their statistics;
 - per-term df / query-term joins broadcast, never shuffle the big side;
 - top-k is TakeOrderedAndProject, never a global sort;
 - column pruning keeps text/html out of scans that don't need them.
@@ -31,15 +31,41 @@ def disk_index(spark, small_corpus, tmp_path_factory):
     return d
 
 
-def test_segment_scan_pushes_term_and_bucket_filters(spark, disk_index):
-    from searty_spark.index import load_segments, term_buckets
+def _scan_rows(q) -> tuple[int, int]:
+    """Run ``q`` (a filter over one parquet scan, no exchange, so no
+    adaptive wrapper); return (rows out of the scan, rows returned)."""
+    n = len(q.collect())
+    scan = q._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
+    return int(scan.metrics().apply("numOutputRows").value()), n
 
-    seg = load_segments(spark, disk_index)
-    buckets = term_buckets(spark, ["abc"], 8)
-    q = seg.filter(F.col("term") == "abc").filter(F.col("bucket").isin(buckets))
-    plan = _plan(q)
-    assert "PushedFilters: [IsNotNull(term), EqualTo(term,abc)" in plan
-    assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters", 1)[1][:200]
+
+def test_segment_scan_prunes_term_row_groups(spark, small_corpus, tmp_path, monkeypatch):
+    """A pushed term filter skips the segment row groups whose term
+    range cannot hold the term: the scan returns fewer rows than the
+    table has. With parquet filter pushdown off it returns them all, so
+    the pruning is the pushdown's doing."""
+    import searty_spark.index as index
+    from searty_spark.index import load_segments, write_index
+
+    monkeypatch.setattr(index, "TERM_ROW_GROUP_ROWS", 64)
+    d = str(tmp_path / "idx")
+    write_index(small_corpus.filter(F.col("doc_id") < 40), d, n_shards=2, n_buckets=8)
+    seg = load_segments(spark, d)
+    total = seg.count()
+    term = seg.orderBy("term").select("term").first()["term"]
+    q = seg.filter(F.col("term") == term)
+    assert "PushedFilters: [IsNotNull(term), EqualTo(term," in _plan(q)
+    read, n = _scan_rows(q)
+    # one row per shard at most, read from one group of each shard file
+    assert 0 < n <= 2 and n <= read <= 2 * 64 < total
+    read, n_in = _scan_rows(seg.filter(F.col("term").isin([term, "abc", "the", "zzz"])))
+    assert n_in <= read < total
+    conf = "spark.sql.parquet.filterPushdown"
+    spark.conf.set(conf, "false")
+    try:
+        assert _scan_rows(seg.filter(F.col("term") == term)) == (total, n)
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_bm25_topk_is_take_ordered_with_broadcasts(spark, small_corpus):

@@ -1,9 +1,9 @@
 """The serve path's worker-side segment read (index.read_segment_rows),
 without Spark: for any term list it returns exactly the rows a full
-pyarrow read of the shard's asked-for bucket directories holds for
-those terms — duplicates from unmerged partial indexes included —
-skips row groups by their term statistics, and reads a file rewritten
-in place fresh despite the per-process footer cache."""
+pyarrow read of the shard's directory holds for those terms —
+duplicates from unmerged partial indexes included — skips row groups
+by their term statistics, and reads a file rewritten in place fresh
+despite the per-process footer cache."""
 
 import shutil
 
@@ -15,11 +15,7 @@ from searty_spark.index import _footer_at, read_segment_rows
 from searty_spark.phrase_seg import PHRASE_COLS
 from test_term_table import ABSENT, TERMS
 
-N_SHARDS, N_BUCKETS = 2, 3
-
-
-def _bucket(t: str) -> int:
-    return sum(t.encode()) % N_BUCKETS
+N_SHARDS = 3
 
 
 def _rows(terms, shard: int, tag: int) -> pa.Table:
@@ -27,6 +23,7 @@ def _rows(terms, shard: int, tag: int) -> pa.Table:
     so rows from different files differ."""
     n = len(terms)
     return pa.table({
+        "bucket": pa.array([sum(t.encode()) % 4 for t in terms], pa.int32()),
         "term": pa.array(terms, pa.string()),
         "df": pa.array([len(t) + tag for t in terms], pa.int64()),
         "cf": pa.array([7] * n, pa.int64()),
@@ -42,26 +39,25 @@ def _rows(terms, shard: int, tag: int) -> pa.Table:
 
 @pytest.fixture
 def index_dir(tmp_path):
-    """A hive-laid-out segments tree like a Spark write: per (shard,
-    bucket) one term-sorted file in small row groups. Shard 0's bucket
-    1 has a second, unsorted file repeating some of its terms (an
-    unmerged partial index); shard 1's bucket 2 is an empty directory;
-    every directory carries a _SUCCESS and a .crc file."""
+    """A shard-partitioned segments tree like a Spark write: per shard
+    one term-sorted file in small row groups. Shard 0 has a second file
+    in descending term order repeating some of its terms (an unmerged
+    partial index copied in beside it); shard 2 is an empty directory
+    and shard 3 has none; every directory carries a _SUCCESS and a
+    .crc file."""
     seg = tmp_path / "segments"
     for s in range(N_SHARDS):
-        for b in range(N_BUCKETS):
-            d = seg / f"shard={s}" / f"bucket={b}"
-            d.mkdir(parents=True)
-            (d / "_SUCCESS").write_bytes(b"")
-            (d / ".part-00000.parquet.crc").write_bytes(b"junk")
-            if (s, b) == (1, 2):
-                continue
-            mine = [t for t in TERMS if _bucket(t) == b and (sum(t.encode()) + s) % 5 != 0]
-            pq.write_table(_rows(mine, s, 0), d / "part-00000.parquet", row_group_size=2)
-            if (s, b) == (0, 1):
-                extra = mine[::-1][::2]
-                pq.write_table(_rows(extra, s, 1), d / "part-00001.parquet",
-                               row_group_size=2)
+        d = seg / f"shard={s}"
+        d.mkdir(parents=True)
+        (d / "_SUCCESS").write_bytes(b"")
+        (d / ".part-00000.parquet.crc").write_bytes(b"junk")
+        if s == 2:
+            continue
+        mine = [t for t in TERMS if (sum(t.encode()) + s) % 5 != 0]
+        pq.write_table(_rows(mine, s, 0), d / "part-00000.parquet", row_group_size=2)
+        if s == 0:
+            pq.write_table(_rows(mine[::-1][::2], s, 1), d / "part-00001.parquet",
+                           row_group_size=2)
     return tmp_path
 
 
@@ -72,23 +68,16 @@ def _key(r: dict) -> tuple:
 def _full(index_dir, shard: int, terms) -> list[tuple]:
     """Every row of the shard for ``terms`` from a whole-file read."""
     out = []
-    for b in {_bucket(t) for t in terms}:
-        d = index_dir / "segments" / f"shard={shard}" / f"bucket={b}"
-        for f in sorted(d.glob("part-*.parquet")):
-            for r in pq.read_table(f).to_pylist():
-                if r["term"] in terms:
-                    out.append(_key({c: r[c] for c in PHRASE_COLS if c != "shard"}
-                                    | {"shard": shard}))
+    for f in sorted((index_dir / "segments" / f"shard={shard}").glob("part-*.parquet")):
+        for r in pq.read_table(f).to_pylist():
+            if r["term"] in terms:
+                out.append(_key({c: r[c] for c in PHRASE_COLS if c != "shard"}
+                                | {"shard": shard}))
     return sorted(out)
 
 
-def _tids(terms) -> dict[str, int]:
-    """Stand-in token_ids whose bucket rule matches _bucket."""
-    return {t: sum(t.encode()) for t in terms}
-
-
 def _read(index_dir, shard: int, terms) -> list[tuple]:
-    got = read_segment_rows(str(index_dir), shard, _tids(terms), N_BUCKETS, PHRASE_COLS)
+    got = read_segment_rows(str(index_dir), shard, list(terms), PHRASE_COLS)
     return sorted(_key(r) for r in got)
 
 
@@ -96,36 +85,34 @@ def test_reader_equals_a_full_read(index_dir, groups_read):
     queries = [[], [TERMS[0]], [TERMS[-1]], ABSENT, TERMS, ["a,b", "@@!", "{}(", "..."],
                ["éte", "日本語", "\U0001f600ab", "本語の"], ["sha", "zzzz", "ét", "mod"]]
     queries += [[t] for t in TERMS + ABSENT]
-    for shard in range(N_SHARDS):
+    for shard in range(N_SHARDS + 1):
         for q in queries:
             before = groups_read[0]
             assert _read(index_dir, shard, q) == _full(index_dir, shard, set(q)), (shard, q)
             # sorted files: a term lies in at most one group per file,
             # and at most two files share a directory
             assert groups_read[0] - before <= 2 * len(set(q)), (shard, q)
-    assert read_segment_rows(str(index_dir), 0, {}, N_BUCKETS, PHRASE_COLS) == []
-    # a bucket with no directory at all reads nothing
-    assert read_segment_rows(str(index_dir), 0, {"aaa": N_BUCKETS + 5}, N_BUCKETS + 6,
-                             PHRASE_COLS) == []
+    assert read_segment_rows(str(index_dir), 0, [], PHRASE_COLS) == []
+    # a shard with no directory at all reads nothing
+    assert read_segment_rows(str(index_dir), N_SHARDS, TERMS, PHRASE_COLS) == []
 
 
 def test_empty_directory_and_stray_files(index_dir):
-    empty = [t for t in TERMS if _bucket(t) == 2]
-    assert empty and _read(index_dir, 1, empty) == []
+    assert _read(index_dir, 2, TERMS) == []
     # a directory holding only a _SUCCESS marker and a checksum
-    d = index_dir / "segments" / "shard=0" / "bucket=2"
+    d = index_dir / "segments" / "shard=0"
     for f in d.glob("part-*"):
         f.unlink()
-    assert _read(index_dir, 0, empty) == []
+    assert _read(index_dir, 0, TERMS) == []
 
 
 def test_duplicate_term_rows_all_come_back(index_dir):
-    d = index_dir / "segments" / "shard=0" / "bucket=1"
+    d = index_dir / "segments" / "shard=0"
     dup = set(pq.read_table(d / "part-00000.parquet")["term"].to_pylist()) & set(
         pq.read_table(d / "part-00001.parquet")["term"].to_pylist()
     )
     assert len(dup) >= 2
-    got = read_segment_rows(str(index_dir), 0, _tids(dup), N_BUCKETS, PHRASE_COLS)
+    got = read_segment_rows(str(index_dir), 0, sorted(dup), PHRASE_COLS)
     assert sorted(r["term"] for r in got) == sorted(list(dup) * 2)
     # the two rows of a term are the two files' rows, not one row twice
     assert {(r["term"], r["df"]) for r in got} == {
@@ -135,8 +122,8 @@ def test_duplicate_term_rows_all_come_back(index_dir):
 
 
 def test_rewritten_file_is_read_fresh(index_dir):
-    terms = [t for t in TERMS if _bucket(t) == 0]
-    f = index_dir / "segments" / "shard=0" / "bucket=0" / "part-00000.parquet"
+    terms = TERMS[::3]
+    f = index_dir / "segments" / "shard=0" / "part-00001.parquet"
     before = _read(index_dir, 0, terms)
     hits = _footer_at.cache_info().hits
     assert _read(index_dir, 0, terms) == before
@@ -145,8 +132,8 @@ def test_rewritten_file_is_read_fresh(index_dir):
     pq.write_table(_rows(terms[:3], 0, 2), f, row_group_size=1)
     got = _read(index_dir, 0, terms)
     assert got == _full(index_dir, 0, set(terms)) != before
-    assert sorted(dict(r)["term"] for r in got) == sorted(terms[:3])
+    assert {dict(r)["df"] - len(dict(r)["term"]) for r in got} == {0, 2}
     # and a file replaced by a copy of another one (new inode, new size)
-    shutil.copy(index_dir / "segments" / "shard=1" / "bucket=0" / "part-00000.parquet", f)
+    shutil.copy(index_dir / "segments" / "shard=1" / "part-00000.parquet", f)
     assert _read(index_dir, 0, terms) == _full(index_dir, 0, set(terms))
     assert {dict(r)["shard"] for r in _read(index_dir, 0, terms)} == {0}
