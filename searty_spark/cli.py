@@ -108,7 +108,7 @@ def cmd_serve(args) -> None:
     """Warm query server over stdin: one request per line, one JSON
     result line per request (flushed) — the deployment shape the
     reference's per-invocation CLI cannot offer, and the reason a
-    long-lived SparkSession pays off: term lookups hit warm caches, and
+    long-lived process pays off: term lookups hit warm caches, and
     every batch is one shard scatter-gather with champion-seeded
     pruning that reads only its terms' segment rows.
 
@@ -125,14 +125,14 @@ def cmd_serve(args) -> None:
     Batching: the stdin loop only parses lines onto a queue; one
     answering thread takes the first queued request plus every further
     request ALREADY queued, up to ``--threads N`` of them (no timer),
-    and answers all their BM25, :phrase and :batch queries with ONE
-    Spark job (wand.serve_topk: one df fetch and one champion fetch in
-    the driver, then one task per shard that point-reads the batch's
-    terms' segment rows with pyarrow). ``"batched"`` is the number of
-    requests that job
-    answered. :regex requests are answered one by one after it, on the
-    same thread. If a batch's job fails, each of its requests is
-    re-run alone, so one bad request never fails its neighbours.
+    and answers all their BM25, :phrase and :batch queries together in
+    the driver, with no Spark job (wand.serve_topk: one df fetch and
+    one champion fetch, then a loop over the shards that point-reads
+    the batch's terms' segment rows with pyarrow). ``"batched"`` is the
+    number of requests answered together. :regex requests are answered
+    one by one after them, on the same thread, with Spark. If a batch
+    fails, each of its requests is re-run alone, so one bad request
+    never fails its neighbours.
     ``--threads 1`` is strictly sequential; with N > 1 responses of a
     batch may arrive out of request order — a pipelining client
     reorders by ``seq``."""
@@ -243,8 +243,9 @@ class _Server:
         raise ValueError(f"unknown mode {mode!r} (bm25|phrase|regex|batch)")
 
     def _search(self, reqs: list[tuple[int, str, str, list]]) -> None:
-        """One Spark job for every query of ``reqs``; on failure each
-        request is re-run alone, and a lone failure is its error line."""
+        """Answer every query of ``reqs`` in one wand.serve_topk call; on
+        failure each request is re-run alone, and a lone failure is its
+        error line."""
         from searty_spark.champions import champion_theta
         from searty_spark.wand import serve_topk
 
@@ -266,9 +267,10 @@ class _Server:
                         self.k, st["n_docs"], st["avgdl"],
                     )
                 batch.append((kind, toks, theta0))
-            found = iter(serve_topk(self.spark, self.index_dir, st, batch, self.k, dfl))
-        # catch EVERYTHING: a failing job raises Py4JJavaError or
-        # PythonException, and every request must still be answered
+            found = iter(serve_topk(self.index_dir, st, batch, self.k, dfl))
+        # catch EVERYTHING: a failing kernel raises ValueError, but a
+        # corrupt or missing index file raises whatever pyarrow raises,
+        # and every request must still be answered
         except Exception as err:  # noqa: BLE001
             if len(reqs) > 1:
                 for r in reqs:

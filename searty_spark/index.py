@@ -155,9 +155,9 @@ def _cached_footer(f: Path):
 
 class TermTable:
     """Point reads of a term-keyed parquet table with pyarrow, no Spark
-    job: the dictionary and the champion sidecar in the driver, a
-    segment shard directory in a serve task (read_segment_rows). The
-    footers' per-row-group term min/max, read once here, pick the
+    job, all in the driver: the dictionary, the champion sidecar and a
+    segment shard directory (read_segment_rows, for wand.serve_topk).
+    The footers' per-row-group term min/max, read once here, pick the
     groups a term can lie in; a read decodes only those, so memory
     follows the groups a request touches, never the table. On
     write_term_sorted's layout the ranges are disjoint and a term
@@ -226,12 +226,12 @@ def read_segment_rows(
 ) -> list[dict]:
     """The segment rows of one shard for ``terms``, read with pyarrow
     straight from ``segments/shard=S/`` (no Spark): the serve path's
-    worker-side point read. Row-group term statistics skip groups as
-    TermTable does, and footers are cached per process. EVERY matching
-    row comes back, including several rows for one term from unmerged
-    partial indexes copied in beside the shard's file, so the kernels'
-    duplicate checks still see them. Each row is a dict of ``columns``
-    (``shard`` from the directory)."""
+    point read, run in the driver by wand.serve_topk. Row-group term
+    statistics skip groups as TermTable does, and footers are cached
+    per process. EVERY matching row comes back, including several rows
+    for one term from unmerged partial indexes copied in beside the
+    shard's file, so the kernels' duplicate checks still see them. Each
+    row is a dict of ``columns`` (``shard`` from the directory)."""
     d = Path(index_dir) / "segments" / f"shard={shard}"
     if not d.is_dir():
         return []

@@ -57,11 +57,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Spark keys its Python worker pools on the workers' environment,
-        # and its SQL UDF runners add this variable: with it set for
-        # every worker, RDD jobs (wand.serve_topk) reuse the warm UDF
-        # workers instead of forking a second pool of them
-        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )

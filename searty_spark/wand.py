@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -564,7 +563,6 @@ def shard_topk_cached(
 
 
 def serve_topk(
-    spark,
     index_dir: str,
     stats: dict,
     requests: list[tuple[str, list[str], float]],
@@ -572,7 +570,8 @@ def serve_topk(
     df_lookup: dict[str, int],
 ) -> list[list[list]]:
     """Exact top-k for MANY requests — BM25 and ranked phrase mixed —
-    in ONE Spark job: the query server's batch (cli serve).
+    answered in the driver with no Spark job: the query server's batch
+    (cli serve).
 
     Each request is ``(mode, toks, theta0)``: mode "bm25" with its
     distinct terms and its champion theta0 (wand_topk's semantics), or
@@ -581,22 +580,23 @@ def serve_topk(
     ``requests``, each one's ``[doc_id, score]`` list — identical to
     what the single-request functions return.
 
-    The job is a shard scatter-gather with no SQL plan: one RDD task
-    per shard of the index at ``index_dir`` (stats.json's ``stats``).
-    Each task point-reads its shard's rows of the batch's terms with
+    The batch is a shard scatter-gather run as a plain loop over the
+    shards of the index at ``index_dir`` (stats.json's ``stats``). For
+    each shard it point-reads the rows of the batch's terms with
     pyarrow (index.read_segment_rows: only the row groups of the
     shard's files whose term range can hold a term; position streams
     only when a phrase request is in the batch), attaches df_global
-    from the pickled ``df_lookup``, and runs shard_topk or
-    _shard_phrase_bm25 per request, cut to a local top-k. The driver
-    keeps the first k per request under (score DESC, doc_id ASC),
-    exact because every doc lives in one shard.
+    from ``df_lookup``, and runs shard_topk or _shard_phrase_bm25 per
+    request, cut to a local top-k. The first k per request under
+    (score DESC, doc_id ASC) are kept, exact because every doc lives
+    in one shard.
 
     ``df_lookup`` maps the requests' dictionary terms to df_global
     (TermDfClient.lookup). Every query term's rows are read, whether
     or not the dictionary has it, so a term with rows but no
     df_lookup entry makes the kernel raise "df_lookup has no entry"
     instead of scoring it with no df."""
+    from searty_spark.index import read_segment_rows
     from searty_spark.phrase_seg import PHRASE_COLS, _shard_phrase_bm25
 
     out: list[list[list]] = [[] for _ in requests]
@@ -604,33 +604,26 @@ def serve_topk(
     if not terms:
         return out
     cols = PHRASE_COLS if any(m == "phrase" for m, _, _ in requests) else SCORE_COLS
-    index_dir = str(Path(index_dir).resolve())
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-
-    def task(shards: Iterator[int]) -> Iterator[tuple[int, int, float]]:
-        from searty_spark.index import read_segment_rows
-
-        for shard in shards:
-            rows = read_segment_rows(index_dir, shard, terms, cols)
-            for r in rows:
-                r["df_global"] = df_lookup.get(r["term"])
-            for i, (mode, toks, theta0) in enumerate(requests):
-                want = set(toks)
-                sub = [r for r in rows if r["term"] in want]
-                if not sub:
-                    continue
-                if mode == "phrase":
-                    frame = _shard_phrase_bm25(
-                        _rows_by_term(sub), toks, n_docs, avgdl
-                    ).sort_values(["score", "doc_id"], ascending=[False, True])
-                    frame = frame.head(k)
-                else:
-                    frame = shard_topk(sub, n_docs, avgdl, k, theta0)
-                for d, sc in zip(frame["doc_id"].tolist(), frame["score"].tolist()):
-                    yield i, d, sc
-
-    n = stats["n_shards"]
-    found = spark.sparkContext.parallelize(range(n), n).mapPartitions(task).collect()
+    found: list[tuple[int, int, float]] = []
+    for shard in range(stats["n_shards"]):
+        rows = read_segment_rows(index_dir, shard, terms, cols)
+        for r in rows:
+            r["df_global"] = df_lookup.get(r["term"])
+        for i, (mode, toks, theta0) in enumerate(requests):
+            want = set(toks)
+            sub = [r for r in rows if r["term"] in want]
+            if not sub:
+                continue
+            if mode == "phrase":
+                frame = _shard_phrase_bm25(
+                    _rows_by_term(sub), toks, n_docs, avgdl
+                ).sort_values(["score", "doc_id"], ascending=[False, True])
+                frame = frame.head(k)
+            else:
+                frame = shard_topk(sub, n_docs, avgdl, k, theta0)
+            for d, sc in zip(frame["doc_id"].tolist(), frame["score"].tolist()):
+                found.append((i, d, sc))
     for i, d, sc in sorted(found, key=lambda r: (r[0], -r[2], r[1])):
         if len(out[i]) < k:
             out[i].append([d, sc])

@@ -55,22 +55,6 @@ def jobs_of(spark):
 
 
 @pytest.fixture
-def tasks_of(spark):
-    """``tasks_of(fn)`` -> the task count of each Spark job ``fn()``
-    starts on the calling thread, in job order."""
-    sc = spark.sparkContext
-
-    def count(fn) -> list[int]:
-        st = sc.statusTracker()
-        return [
-            sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds)
-            for j in _job_ids(sc, fn)
-        ]
-
-    return count
-
-
-@pytest.fixture
 def groups_read(monkeypatch):
     """Counts parquet row groups decoded through
     ParquetFile.read_row_group."""

@@ -2,9 +2,10 @@
 driven in-process against a real index — plain BM25 line, :phrase,
 :regex (store-docs), error handling, :quit termination, and the
 batching rule (every queued BM25/phrase/:batch request of a batch is
-answered by ONE Spark job). Results must equal the one-shot paths
-(query_index, wand_topk, phrase_bm25_topk_segments): the warm server is
-a deployment shape, never a different engine."""
+answered together, in the driver, with no Spark job). Results must
+equal the one-shot paths (query_index, wand_topk, phrase_bm25_topk_
+segments): the warm server is a deployment shape, never a different
+engine."""
 
 import argparse
 import io
@@ -129,13 +130,13 @@ def test_serve_loop_contract(spark, served, monkeypatch, capsys):
     assert got[0]["results"] == want and got[3]["results"] == want
 
 
-def test_serve_batch_is_one_job_and_matches_single_requests(
-    spark, served, jobs_of, tasks_of, capsys
+def test_serve_batch_starts_no_job_and_matches_single_requests(
+    spark, served, jobs_of, capsys
 ):
     """A mixed batch — BM25, phrase, a repeated query, a no-hit query,
     a theta0-seeded head query and a :batch — queued before the loop
-    starts is answered by exactly ONE Spark job at max_batch = N, and
-    every answer equals its single-request function's."""
+    starts is answered together at max_batch = N with no Spark job,
+    and every answer equals its single-request function's."""
     from searty_spark import cli
     from searty_spark.champions import champion_theta
     from searty_spark.index import load_segments, load_stats
@@ -161,11 +162,10 @@ def test_serve_batch_is_one_job_and_matches_single_requests(
     ) > 0.0  # "shared" is a theta0-seeded head query
 
     # cold df and champion caches fill from driver reads, so the
-    # first batch is one job too; the warm repeat is checked below
-    assert jobs_of(lambda: _run(srv, items, len(items))) == 1
+    # first batch starts no job either; the warm repeat is checked below
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 0
     capsys.readouterr()
-    # one job of one task per shard
-    assert tasks_of(lambda: _run(srv, items, len(items))) == [st["n_shards"]]
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 0
     got = _replies(capsys)
 
     seg = load_segments(spark, d)
@@ -194,8 +194,8 @@ def test_serve_batch_is_one_job_and_matches_single_requests(
     assert got[0]["results"] and got[1]["results"] and got[4]["results"] == []
     assert got[0]["results"] == got[3]["results"]
 
-    # --threads 1 stays one request per job
-    assert jobs_of(lambda: _run(srv, items[:3], 1)) == 3
+    # --threads 1 answers one request at a time, still with no job
+    assert jobs_of(lambda: _run(srv, items[:3], 1)) == 0
     assert {r["batched"] for r in _replies(capsys).values()} == {1}
 
 
@@ -217,7 +217,7 @@ def test_cold_term_df_lookup_starts_no_job(spark, served, jobs_of):
 
 
 def test_serve_batch_failure_is_isolated(spark, served, monkeypatch, capsys):
-    """A request whose job fails gets an error line; its neighbours in
+    """A request whose batch fails gets an error line; its neighbours in
     the batch are re-run alone and still get their results."""
     from searty_spark import cli
     from searty_spark.tokenize import tokenize
@@ -228,7 +228,7 @@ def test_serve_batch_failure_is_isolated(spark, served, monkeypatch, capsys):
     want = _replies(capsys)
 
     # a df lookup that misses an indexed term makes the scoring kernel
-    # raise inside the Spark job for any request using that term
+    # raise for any request using that term
     bad = set(tokenize("query"))
     real = TermDfClient.lookup
     monkeypatch.setattr(
@@ -337,10 +337,10 @@ def partials(spark, small_corpus, tmp_path_factory):
             "bad": next(w for w in x["text"].split() if len(w) > 3), "good": good}
 
 
-def test_serve_on_disjoint_partials_equals_wand_topk(spark, partials, tasks_of, capsys):
+def test_serve_on_disjoint_partials_equals_wand_topk(spark, partials, jobs_of, capsys):
     """Duplicate (shard, term) rows with disjoint doc sets: the batch
-    is still one job of one task per shard, and every answer equals
-    wand_topk's over the same segments."""
+    still starts no Spark job, and every answer equals wand_topk's over
+    the same segments."""
     from pyspark.sql import functions as F
 
     from searty_spark import cli
@@ -357,7 +357,7 @@ def test_serve_on_disjoint_partials_equals_wand_topk(spark, partials, tasks_of, 
     srv = cli._Server(spark, d, k)
     items = [("bm25", "shared"), ("bm25", "module query"), ("bm25", "@@"),
              ("bm25", partials["bad"]), ("batch", json.dumps(["the shared", *partials["good"]]))]
-    assert tasks_of(lambda: _run(srv, items, len(items))) == [st["n_shards"]]
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 0
     got = _replies(capsys)
     dic = spark.read.parquet(f"{d}/dictionary")
 

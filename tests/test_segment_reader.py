@@ -1,4 +1,4 @@
-"""The serve path's worker-side segment read (index.read_segment_rows),
+"""The serve path's segment read (index.read_segment_rows), run
 without Spark: for any term list it returns exactly the rows a full
 pyarrow read of the shard's directory holds for those terms —
 duplicates from unmerged partial indexes included — skips row groups
