@@ -16,20 +16,23 @@ Per shard, inside one Arrow batch:
 Duplicate query trigrams are deduped with all offsets kept — the
 defined semantics for the reference's panic case
 (phrase_searcher.go:26-32, SURVEY.md §2.5).
+
+Each entry runs its shard kernel through wand._per_shard, then its own
+global reduce.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from searty_spark import NGRAM_N
+from searty_spark import NGRAM_N, SCORE_NDIGITS
 from searty_spark.segments import decode_segment_positions, decode_segment_scores
 from searty_spark.tokenize import tokenize
-from searty_spark.wand import SCORE_COLS, _rows_by_term, _shard_rows
+from searty_spark.wand import SCORE_COLS, _impacts, _per_shard, _require_df
+from searty_spark.wand import _rows_by_term, _shard_request
 
 # phrase matching additionally reads the position streams; cf/bucket
 # still never cross the exchange (mapInPandas consumes its child's
@@ -154,32 +157,14 @@ def phrase_ranges_segments(
 ) -> DataFrame:
     """(doc_id, start, end) coalesced phrase match ranges — identical
     output to query.phrase_match_ranges, from the compressed index.
-
-    ``pre_partitioned``: same warm-server contract as
-    wand.wand_topk — the caller asserts ``segments`` is already
-    hash-partitioned by shard, and the per-query exchange is skipped."""
-    spark = segments.sparkSession
+    ``pre_partitioned`` is ignored, as in wand.wand_topk."""
     toks = tokenize(query, n)
-    if not toks:
-        return spark.createDataFrame([], "doc_id long, start int, end int")
     width = len(toks) - 1 + n
-    pruned = segments.filter(F.col("term").isin(sorted(set(toks)))).select(
-        *PHRASE_COLS
+    local = _per_shard(
+        segments, sorted(set(toks)), PHRASE_COLS,
+        lambda rows: _shard_phrase(_rows_by_term(rows), toks, width),
+        "doc_id long, start int, end int", n_shards,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for rows in _shard_rows(batches).values():
-            yield _shard_phrase(_rows_by_term(rows), toks, width)
-
-    if pre_partitioned:
-        rep = pruned
-    else:
-        rep = (
-            pruned.repartition(n_shards, "shard")
-            if n_shards
-            else pruned.repartition("shard")
-        )
-    local = rep.mapInPandas(run, "doc_id long, start int, end int")
     return local.orderBy("doc_id", "start")
 
 
@@ -196,24 +181,15 @@ def docs_with_all_terms_segments(
     rarest term first). The candidate-generation primitive behind the
     index-accelerated regex search; also useful standalone as a
     conjunctive boolean filter."""
-    spark = segments.sparkSession
-    if not terms:
-        return spark.createDataFrame([], "doc_id long")
     terms = sorted(set(terms))
+
+    def kernel(rows: list[dict]) -> pd.DataFrame | None:
+        common = _shard_docs_with_all(_rows_by_term(rows), terms)
+        return None if common is None else pd.DataFrame({"doc_id": common})
+
     # conjunction reads only the score blobs — the position streams
-    # stay on disk (SCORE_COLS projection, see wand.py)
-    pruned = segments.filter(F.col("term").isin(terms)).select(*SCORE_COLS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for rows in _shard_rows(batches).values():
-            common = _shard_docs_with_all(_rows_by_term(rows), terms)
-            if common is not None:
-                yield pd.DataFrame({"doc_id": common})
-
-    rep = (
-        pruned.repartition(n_shards, "shard") if n_shards else pruned.repartition("shard")
-    )
-    return rep.mapInPandas(run, "doc_id long")
+    # stay on disk
+    return _per_shard(segments, terms, SCORE_COLS, kernel, "doc_id long", n_shards)
 
 
 def _shard_phrase_bm25(
@@ -224,8 +200,6 @@ def _shard_phrase_bm25(
     doc contains every term (conjunctive match), so each term's impact
     is gathered by one searchsorted into its block-pruned decode — no
     per-doc Python."""
-    from searty_spark.wand import _impacts, _require_df
-
     empty = pd.DataFrame({"doc_id": [], "score": [], "n_matches": []})
     m = _shard_match_starts(rows, toks)
     if m is None:
@@ -250,7 +224,7 @@ def _shard_phrase_bm25(
     return pd.DataFrame(
         {
             "doc_id": mdocs,
-            "score": np.round(scores, 6),
+            "score": np.round(scores, SCORE_NDIGITS),
             "n_matches": counts.astype(np.int64),
         }
     )
@@ -270,34 +244,16 @@ def phrase_bm25_topk_segments(
     """(doc_id, score, n_matches) — ranked phrase search over the
     compressed segments: identical output to query.phrase_bm25_topk.
     The phrase intersection prunes to match docs first; BM25 impacts
-    then decode only the blocks holding those docs. df_global follows
-    the same lookup contract as wand_topk (dict / DataFrame / None);
-    ``pre_partitioned`` follows wand_topk's warm-server contract."""
-    from searty_spark.wand import _with_df_global
-
-    spark = segments.sparkSession
+    then decode only the blocks holding those docs. ``n_docs`` and
+    ``avgdl`` are required; ``df_lookup`` (a dict or None) and
+    ``n_shards`` are as in wand.wand_topk, and ``pre_partitioned`` is
+    ignored as there."""
+    if n_docs is None or avgdl is None:
+        raise ValueError("phrase_bm25_topk_segments needs n_docs and avgdl")
     toks = tokenize(query, n)
-    if not toks:
-        return spark.createDataFrame([], "doc_id long, score double, n_matches long")
-    assert n_docs is not None and avgdl is not None
-    terms = sorted(set(toks))
-    pruned = _with_df_global(
-        segments.filter(F.col("term").isin(terms)).select(*PHRASE_COLS),
-        terms,
-        df_lookup,
+    local = _per_shard(
+        segments, sorted(set(toks)), PHRASE_COLS,
+        lambda rows: _shard_request(rows, "phrase", toks, n_docs, avgdl, k),
+        "doc_id long, score double, n_matches long", n_shards, df_lookup,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for rows in _shard_rows(batches).values():
-            yield _shard_phrase_bm25(_rows_by_term(rows), toks, n_docs, avgdl)
-
-    if pre_partitioned:
-        rep = pruned
-    else:
-        rep = (
-            pruned.repartition(n_shards, "shard")
-            if n_shards
-            else pruned.repartition("shard")
-        )
-    local = rep.mapInPandas(run, "doc_id long, score double, n_matches long")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

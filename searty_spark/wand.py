@@ -8,14 +8,16 @@ intersection — Q4 hook):
 
 1. driver: tokenize query, prune the segment scan to the query terms
    (predicate pushdown: row groups skipped by their term statistics);
-2. per shard (mapInPandas over co-grouped segment rows): MaxScore —
+2. per shard (``_per_shard``: mapInPandas over the segment rows
+   repartitioned by shard, one kernel call per shard): MaxScore —
    - seed the threshold from the highest-max-impact term's postings,
    - split terms into essential / non-essential by cumulative bound,
    - TAAT-score essential terms vectorized (np.add.at),
    - candidates = docs whose essential score + Σ non-essential bounds
      clears the threshold; decode ONLY the non-essential blocks that
      can contain candidates (searchsorted on block_last_doc),
-   - exact rescore of candidates -> local top-k;
+   - exact rescore of candidates -> local top-k (``_shard_request``,
+     which ``serve_topk`` also runs);
 3. global top-k = orderBy(score desc, doc_id) + limit over the union
    of local top-ks (exact: each doc lives in one shard).
 
@@ -24,9 +26,9 @@ stats-free block metadata: bound = idf(df_global) * g(max_tf, min_dl),
 where idf is the term's positive scalar and g is increasing in tf /
 decreasing in dl — always >= every true impact in the block, so
 pruning never changes results. df_global itself is the sum of the
-term's per-shard ``df`` values: either joined in from the dictionary
-(``df_lookup``) or aggregated from the pruned segment rows inside the
-same query plan (no extra job either way).
+term's per-shard ``df`` values: either taken from the dictionary
+(``df_lookup``, a dict) or aggregated from the pruned segment rows
+inside the same query plan (no extra job either way).
 """
 
 from __future__ import annotations
@@ -115,16 +117,6 @@ def _check_duplicate_term_rows(rows: list[dict]) -> None:
                 f"duplicate segment rows for term {term!r} share doc_ids — "
                 "unmerged partial indexes overlap; merge them before querying"
             )
-
-
-def _shard_rows(batches: Iterator[pd.DataFrame]) -> dict[int, list[dict]]:
-    """A mapInPandas input (segment rows, whole shards per partition)
-    -> shard -> that shard's row dicts."""
-    by_shard: dict[int, list[dict]] = {}
-    for pdf in batches:
-        for rec in pdf.to_dict("records"):
-            by_shard.setdefault(int(rec["shard"]), []).append(rec)
-    return by_shard
 
 
 def _rows_by_term(rows: list[dict]) -> dict[str, dict]:
@@ -315,6 +307,23 @@ def _topk_frame(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
     return pd.DataFrame({"doc_id": docs[order].astype(np.int64), "score": r[order]})
 
 
+def _shard_request(
+    rows: list[dict], mode: str, toks: list[str], n_docs: int, avgdl: float,
+    k: int, theta0: float = 0.0,
+) -> pd.DataFrame:
+    """One request's local top-k on one shard, in (score DESC, doc_id
+    ASC) order: mode "bm25" is shard_topk over ``rows`` (theta0 as
+    there), mode "phrase" is _shard_phrase_bm25 over the trigram
+    sequence ``toks`` — (doc_id, score, n_matches) — cut to k. The
+    one-shot entries and serve_topk both answer through it."""
+    if mode != "phrase":
+        return shard_topk(rows, n_docs, avgdl, k, theta0)
+    from searty_spark.phrase_seg import _shard_phrase_bm25
+
+    f = _shard_phrase_bm25(_rows_by_term(rows), toks, n_docs, avgdl)
+    return f.iloc[np.lexsort((f["doc_id"].to_numpy(), -f["score"].to_numpy()))[:k]]
+
+
 class TermDfClient:
     """Per-query term->df_global fetch from the on-disk dictionary with
     a driver-side hot-term cache — the query-server deployment shape. A
@@ -359,40 +368,74 @@ class TermDfClient:
 
 
 def _with_df_global(pruned: DataFrame, terms, df_lookup) -> DataFrame:
-    """Attach df_global to the pruned segment rows.
+    """Attach df_global to the pruned segment rows. ``df_lookup`` is
+    either a dict term -> global df (TermDfClient.lookup: driver point
+    reads, no Spark job), injected as a literal map with ZERO extra plan
+    nodes or exchanges, or None: the sum of the term's per-shard ``df``
+    over the pruned rows themselves (adds one small exchange)."""
+    if df_lookup is None:
+        dfg = pruned.groupBy("term").agg(F.sum("df").cast("long").alias("df_global"))
+        return pruned.join(F.broadcast(dfg), "term")
+    if not isinstance(df_lookup, dict):
+        raise TypeError(f"df_lookup must be a dict or None, not {type(df_lookup).__name__}")
+    # terms absent from the dict map to NULL; if such a term turns
+    # out to HAVE segment rows, the scoring kernel raises rather
+    # than silently over-weighting it with df=0 (a term with no
+    # rows never reaches the kernel, so a FULL dictionary is
+    # always safe even for query terms missing from the corpus)
+    present = [t for t in terms if t in df_lookup]
+    if not present:
+        return pruned.withColumn("df_global", F.lit(None).cast("long"))
+    mapping = F.create_map(
+        *[x for t in present for x in (F.lit(t), F.lit(int(df_lookup[t])))]
+    )
+    return pruned.withColumn("df_global", mapping[F.col("term")])
 
-    ``df_lookup`` may be:
-    - a plain ``dict[str, int]`` (term -> global df): the query-server
-      fast path — injected as a literal map, ZERO extra plan nodes or
-      exchanges (TermDfClient fills it from driver point reads of the
-      term-sorted dictionary, no Spark job);
-    - a DataFrame (term, df_global), e.g. the on-disk dictionary: a
-      tiny pushed-filter scan + broadcast join inside the same job;
-    - None: df_global = sum of the term's per-shard ``df`` aggregated
-      from the pruned rows themselves (general fallback; adds one
-      small exchange).
-    """
-    if isinstance(df_lookup, dict):
-        # terms absent from the dict map to NULL; if such a term turns
-        # out to HAVE segment rows, the scoring kernel raises rather
-        # than silently over-weighting it with df=0 (a term with no
-        # rows never reaches the kernel, so a FULL dictionary is
-        # always safe even for query terms missing from the corpus)
-        present = [t for t in terms if t in df_lookup]
-        if not present:
-            return pruned.withColumn("df_global", F.lit(None).cast("long"))
-        mapping = F.create_map(
-            *[x for t in present for x in (F.lit(t), F.lit(int(df_lookup[t])))]
-        )
-        return pruned.withColumn("df_global", mapping[F.col("term")])
-    if df_lookup is not None:
-        dfg = df_lookup.select("term", "df_global").filter(F.col("term").isin(list(terms)))
-        # LEFT join: a term with postings but no dictionary row must
-        # reach the kernel as null df (-> explicit raise), never be
-        # silently dropped by an inner join (stale/partial dictionary)
-        return pruned.join(F.broadcast(dfg), "term", "left")
-    dfg = pruned.groupBy("term").agg(F.sum("df").cast("long").alias("df_global"))
-    return pruned.join(F.broadcast(dfg), "term")
+
+_NO_DF = object()  # _per_shard attaches no df_global
+
+
+def _per_shard(
+    segments: DataFrame,
+    terms: list[str],
+    cols: list[str],
+    kernel,
+    schema: str,
+    n_shards: int | None,
+    df_lookup=_NO_DF,
+) -> DataFrame:
+    """The plan of every segment query: ``kernel(rows)`` once per shard
+    over that shard's segment rows of ``terms`` (row dicts, df_global
+    attached when a ``df_lookup`` is passed); the frames it returns,
+    None skipped, make up the result, of ``schema``.
+
+    The term filter reaches the parquet scan, whose row-group term
+    statistics skip the groups no term can lie in. ``cols`` is projected
+    EXPLICITLY: mapInPandas consumes its child's whole schema, so
+    Catalyst cannot prune for us, and a BM25 query would carry pos_blob
+    (often the largest column) through the exchange and Arrow.
+    ``n_shards`` caps the parallelism at the shard count (else
+    spark.sql.shuffle.partitions schedules mostly-empty tasks); over a
+    frame already hash-partitioned that way, e.g. a cached
+    ``repartition(n_shards, "shard")``, Spark drops the exchange."""
+    if not terms:
+        return segments.sparkSession.createDataFrame([], schema)
+    pruned = segments.filter(F.col("term").isin(terms)).select(*cols)
+    if df_lookup is not _NO_DF:
+        pruned = _with_df_global(pruned, terms, df_lookup)
+    rep = pruned.repartition(n_shards, "shard") if n_shards else pruned.repartition("shard")
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        by_shard: dict[int, list[dict]] = {}
+        for pdf in batches:
+            for rec in pdf.to_dict("records"):
+                by_shard.setdefault(int(rec["shard"]), []).append(rec)
+        for rows in by_shard.values():
+            frame = kernel(rows)
+            if frame is not None:
+                yield frame
+
+    return rep.mapInPandas(run, schema)
 
 
 def wand_topk(
@@ -411,21 +454,9 @@ def wand_topk(
 ) -> DataFrame:
     """(doc_id, score) exact BM25 top-k from the segment table.
 
-    ``pre_partitioned=True`` is the cached-frame fast path: the CALLER
-    asserts ``segments`` is already hash-partitioned by ``shard``
-    (e.g. ``.repartition(n_shards, "shard").cache()`` done once, as
-    bench.py does; cli serve reads no frame, see serve_topk). The per-query
-    repartition exchange is then skipped entirely: term filter,
-    projection and df_global attach are narrow, so the query runs as
-    ONE stage (mapInPandas over the cached partitions) plus the
-    TakeOrdered reduce. Correctness REQUIRES the assertion — a shard
-    split across partitions would split a doc's term contributions
-    into separate local top-ks and underscore it; do not pass this for
-    an arbitrary DataFrame.
-
-    ``n_shards`` caps the query-side parallelism at the shard count —
-    without it the repartition uses spark.sql.shuffle.partitions and
-    schedules mostly-empty tasks (pure latency).
+    ``n_docs`` / ``avgdl`` default to ``dstats``' count and mean
+    ``doc_len`` (one job); ``df_lookup`` is a dict term -> df_global or
+    None (_with_df_global); ``n_shards`` as in _per_shard.
 
     ``terms`` overrides the default trigram tokenization of ``query``
     — the hook for alternate analyzers (e.g. the Lisp analyzer's
@@ -435,42 +466,20 @@ def wand_topk(
     (champions.champion_theta) — enables essential-term block pruning
     in every shard kernel; results are identical with or without it
     (the bound only skips blocks that provably can't affect the
-    top-k)."""
-    spark = segments.sparkSession
+    top-k).
+
+    ``pre_partitioned`` is ignored: Spark itself drops the exchange over
+    a frame already partitioned by shard (bench.py's cached frame)."""
     if terms is None:
         terms = sorted(set(tokenize(query, n)))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    if n_docs is None or avgdl is None:
+    if terms and (n_docs is None or avgdl is None):
         row = dstats.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
         n_docs, avgdl = int(row["n"]), float(row["a"])
-
-    # the term filter reaches the parquet scan, whose row-group term
-    # statistics skip the groups no query term can lie in (index.py)
-    pruned = segments.filter(F.col("term").isin(terms))
-    # EXPLICIT column pruning: mapInPandas consumes its child's whole
-    # schema, so Catalyst cannot prune for us — without this select the
-    # repartition shuffles pos_blob (positions — often the LARGEST
-    # column, unused by BM25 scoring) and cf/bucket through the
-    # exchange and Arrow on every query. For a 1M-doc head term that is
-    # several MB of dead weight per query.
-    pruned = pruned.select(*SCORE_COLS)
-
-    withg = _with_df_global(pruned, terms, df_lookup)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for rows in _shard_rows(batches).values():
-            yield shard_topk(rows, n_docs, avgdl, k, theta0)
-
-    if pre_partitioned:
-        rep = withg
-    else:
-        rep = (
-            withg.repartition(n_shards, "shard")
-            if n_shards
-            else withg.repartition("shard")
-        )
-    local = rep.mapInPandas(run, "doc_id long, score double")
+    local = _per_shard(
+        segments, terms, SCORE_COLS,
+        lambda rows: _shard_request(rows, "bm25", terms, n_docs, avgdl, k, theta0),
+        "doc_id long, score double", n_shards, df_lookup,
+    )
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -492,47 +501,33 @@ def wand_topk_batch(
     sort). This is the batch-evaluation shape: at 10^12 docs the scan
     dominates, and it amortizes across the whole query set.
 
-    ``pre_partitioned=True`` skips the repartition — the same contract
-    as wand_topk: the caller guarantees no shard's rows are split
-    across partitions (a cached shard-partitioned segment frame).
-    Whole shards sharing a partition is fine: the kernel keys its
-    state by shard."""
+    ``n_docs`` and ``avgdl`` are required; ``df_lookup`` and
+    ``n_shards`` are as in wand_topk, and ``pre_partitioned`` is ignored
+    as there."""
     from pyspark.sql import Window
 
-    spark = segments.sparkSession
+    if n_docs is None or avgdl is None:
+        raise ValueError("wand_topk_batch needs n_docs and avgdl")
     q_terms = {qid: sorted(set(tokenize(q, n))) for qid, q in queries.items()}
     all_terms = sorted({t for ts in q_terms.values() for t in ts})
-    if not all_terms:
-        return spark.createDataFrame([], "query_id string, doc_id long, score double")
-    assert n_docs is not None and avgdl is not None
-    pruned = _with_df_global(
-        segments.filter(F.col("term").isin(all_terms)).select(*SCORE_COLS),
-        all_terms,
-        df_lookup,
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for shard_rows in _shard_rows(batches).values():
-            rows = _rows_by_term(shard_rows)
-            # decode every needed term once, share across queries
-            cache: dict[str, tuple] = {}
-            for qid, terms in q_terms.items():
-                sub = [rows[t] for t in terms if t in rows]
-                if not sub:
-                    continue
+    def kernel(shard_rows: list[dict]) -> pd.DataFrame | None:
+        rows = _rows_by_term(shard_rows)
+        # decode every needed term once, share across queries
+        cache: dict[str, tuple] = {}
+        frames = []
+        for qid, terms in q_terms.items():
+            sub = [rows[t] for t in terms if t in rows]
+            if sub:
                 frame = shard_topk_cached(sub, n_docs, avgdl, k, cache)
                 frame.insert(0, "query_id", qid)
-                yield frame
+                frames.append(frame)
+        return pd.concat(frames) if frames else None
 
-    if pre_partitioned:
-        rep = pruned
-    else:
-        rep = (
-            pruned.repartition(n_shards, "shard")
-            if n_shards
-            else pruned.repartition("shard")
-        )
-    local = rep.mapInPandas(run, "query_id string, doc_id long, score double")
+    local = _per_shard(
+        segments, all_terms, SCORE_COLS, kernel,
+        "query_id string, doc_id long, score double", n_shards, df_lookup,
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local.withColumn("rnk", F.row_number().over(w))
@@ -586,8 +581,8 @@ def serve_topk(
     pyarrow (index.read_segment_rows: only the row groups of the
     shard's files whose term range can hold a term; position streams
     only when a phrase request is in the batch), attaches df_global
-    from ``df_lookup``, and runs shard_topk or _shard_phrase_bm25 per
-    request, cut to a local top-k. The first k per request under
+    from ``df_lookup``, and runs _shard_request per request (the
+    one-shot entries' shard kernel: a local top-k). The first k per request under
     (score DESC, doc_id ASC) are kept, exact because every doc lives
     in one shard.
 
@@ -597,7 +592,7 @@ def serve_topk(
     df_lookup entry makes the kernel raise "df_lookup has no entry"
     instead of scoring it with no df."""
     from searty_spark.index import read_segment_rows
-    from searty_spark.phrase_seg import PHRASE_COLS, _shard_phrase_bm25
+    from searty_spark.phrase_seg import PHRASE_COLS
 
     out: list[list[list]] = [[] for _ in requests]
     terms = sorted({t for _, toks, _ in requests for t in toks})
@@ -615,13 +610,7 @@ def serve_topk(
             sub = [r for r in rows if r["term"] in want]
             if not sub:
                 continue
-            if mode == "phrase":
-                frame = _shard_phrase_bm25(
-                    _rows_by_term(sub), toks, n_docs, avgdl
-                ).sort_values(["score", "doc_id"], ascending=[False, True])
-                frame = frame.head(k)
-            else:
-                frame = shard_topk(sub, n_docs, avgdl, k, theta0)
+            frame = _shard_request(sub, mode, toks, n_docs, avgdl, k, theta0)
             for d, sc in zip(frame["doc_id"].tolist(), frame["score"].tolist()):
                 found.append((i, d, sc))
     for i, d, sc in sorted(found, key=lambda r: (r[0], -r[2], r[1])):

@@ -169,7 +169,7 @@ def test_serve_batch_starts_no_job_and_matches_single_requests(
     got = _replies(capsys)
 
     seg = load_segments(spark, d)
-    dic = spark.read.parquet(f"{d}/dictionary")
+    dic = {r["term"]: r["df_global"] for r in spark.read.parquet(f"{d}/dictionary").collect()}
 
     def bm25(q):
         return [[r["doc_id"], r["score"]] for r in wand_topk(
@@ -359,7 +359,7 @@ def test_serve_on_disjoint_partials_equals_wand_topk(spark, partials, jobs_of, c
              ("bm25", partials["bad"]), ("batch", json.dumps(["the shared", *partials["good"]]))]
     assert jobs_of(lambda: _run(srv, items, len(items))) == 0
     got = _replies(capsys)
-    dic = spark.read.parquet(f"{d}/dictionary")
+    dic = {r["term"]: r["df_global"] for r in spark.read.parquet(f"{d}/dictionary").collect()}
 
     def bm25(q):
         return [[r["doc_id"], r["score"]] for r in wand_topk(

@@ -198,19 +198,97 @@ def test_wand_query_never_reads_or_shuffles_positions(spark, disk_index):
     contract."""
     from searty_spark.index import load_segments, load_stats
     from searty_spark.phrase_seg import docs_with_all_terms_segments
-    from searty_spark.wand import wand_topk
+    from searty_spark.tokenize import tokenize
+    from searty_spark.wand import TermDfClient, wand_topk
 
     stats = load_stats(disk_index)
     seg = load_segments(spark, disk_index)
     q = wand_topk(
         seg, None, "shared", k=10,
         n_docs=stats["n_docs"], avgdl=stats["avgdl"], n_shards=2,
-        df_lookup=spark.read.parquet(f"{disk_index}/dictionary"),
+        df_lookup=TermDfClient(spark, disk_index).lookup(sorted(set(tokenize("shared")))),
     )
     plan = _plan(q)
     assert "pos_blob" not in plan, plan
     plan2 = _plan(docs_with_all_terms_segments(seg, ["sha", "har"], n_shards=2))
     assert "pos_blob" not in plan2, plan2
+
+
+def _shard_exchanges(df) -> list[str]:
+    """The shuffles by ``shard`` in ``df``'s executed plan (run it
+    first), not counting those inside a cached relation's own plan."""
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            yield from walk(node.executedPlan())
+            return
+        if name.endswith("QueryStage"):  # AQE stages hold their exchange
+            yield from walk(node.plan())
+            return
+        if name == "Exchange":
+            yield node.simpleString(20)
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    return [s for s in walk(df._jdf.queryExecution().executedPlan())
+            if "hashpartitioning(shard" in s]
+
+
+def test_shard_partitioned_frame_needs_no_exchange(spark, small_corpus):
+    """Every segment-query entry repartitions by shard, and Spark drops
+    that exchange over a frame already hash-partitioned by shard into
+    n_shards partitions (a cached ``repartition(n_shards, "shard")``,
+    as bench.py keeps). Over the uncached frame the exchange is there.
+    Both frames give the same rows."""
+    from searty_spark.phrase_seg import (
+        docs_with_all_terms_segments,
+        phrase_bm25_topk_segments,
+        phrase_ranges_segments,
+    )
+    from searty_spark.segments import build_segments
+    from searty_spark.wand import wand_topk, wand_topk_batch
+
+    p = build_postings(small_corpus, with_doc_len=True)
+    s = doc_stats(small_corpus)
+    cold = build_segments(p, s, n_shards=4, n_buckets=8)
+    warm = cold.repartition(4, "shard").cache()
+    warm.count()
+    row = s.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
+    st = {"n_docs": int(row["n"]), "avgdl": float(row["a"]), "n_shards": 4}
+    df_map = {
+        r["term"]: int(r["df"])
+        for r in cold.groupBy("term").agg(F.sum("df").alias("df")).collect()
+    }
+    calls = [
+        lambda seg, q=q, k=k, dfl=dfl: wand_topk(seg, None, q, k=k, df_lookup=dfl, **st)
+        for q, k in [("shared", 10), ("shared phrase", 5), ("module query", 20)]
+        for dfl in (df_map, None)
+    ] + [
+        lambda seg: wand_topk_batch(
+            seg, {"a": "shared", "b": "module query"}, k=5, df_lookup=df_map, **st),
+        lambda seg: docs_with_all_terms_segments(seg, ["sha", "har"], n_shards=4),
+    ] + [
+        call
+        for q in ["shared phrase", "the module"]
+        for call in (
+            lambda seg, q=q: phrase_ranges_segments(seg, q, n_shards=4),
+            lambda seg, q=q: phrase_bm25_topk_segments(seg, q, k=10, **st),
+        )
+    ]
+    try:
+        for call in calls:
+            q_cold, q_warm = call(cold), call(warm)
+            got_cold = [tuple(r) for r in q_cold.collect()]
+            got_warm = [tuple(r) for r in q_warm.collect()]
+            assert got_warm == got_cold
+            # an empty scan lets AQE drop every later stage ("the
+            # module" has no phrase match); each entry has a case with rows
+            assert _shard_exchanges(q_cold) or not got_cold, _plan(q_cold)
+            assert _shard_exchanges(q_warm) == [], _plan(q_warm)
+    finally:
+        warm.unpersist()
 
 
 def test_redact_pii_is_one_projection_no_shuffle(spark, small_corpus):

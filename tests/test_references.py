@@ -1,8 +1,9 @@
 """The benchmark drivers and scripts reach into searty_spark by name
 (imports, and the functions perfbench/spans.py wraps), and the suite
 runs few of them. This scan resolves every such name against the
-package, so deleting or renaming a function cannot leave one of them
-dangling. Spark-free: importing the modules starts no JVM."""
+package, and binds every call of a resolved function to its signature,
+so deleting or renaming a function or a parameter cannot leave one of
+them dangling. Spark-free: importing the modules starts no JVM."""
 
 import ast
 import importlib
@@ -27,9 +28,12 @@ def _ours(module: str | None) -> bool:
 def _dangling(path: Path) -> list[str]:
     """``"name (line)"`` for every searty_spark import, and every
     attribute read through an alias of a searty_spark module, in
-    ``path`` that does not resolve."""
+    ``path`` that does not resolve; ``"name(): why (line)"`` for every
+    call of a resolved function or class whose positional count or
+    keyword names its signature does not accept (calls that spread
+    ``*args`` or ``**kwargs`` are skipped)."""
     tree = ast.parse(path.read_text(), str(path))
-    bad, aliases = [], {}
+    bad, aliases, names = [], {}, {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
@@ -48,7 +52,13 @@ def _dangling(path: Path) -> list[str]:
                 obj = getattr(mod, a.name)
                 if inspect.ismodule(obj):
                     aliases[a.asname or a.name] = obj
+                else:
+                    names[a.asname or a.name] = obj
+    called = {}  # id of a call's func node -> the object it resolved to
     for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+            if node.func.id in names:
+                called[id(node.func)] = names[node.func.id]
         if not (isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load)):
             continue
         chain, base = [], node
@@ -66,6 +76,23 @@ def _dangling(path: Path) -> list[str]:
                 bad.append(f"{base.id}.{'.'.join(chain)} ({node.lineno})")
                 break
             obj = getattr(obj, attr)
+        else:
+            called[id(node)] = obj
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and id(node.func) in called):
+            continue
+        if any(isinstance(a, ast.Starred) for a in node.args) or any(
+            kw.arg is None for kw in node.keywords
+        ):
+            continue
+        try:
+            sig = inspect.signature(called[id(node.func)])
+        except (TypeError, ValueError):  # not a callable with a signature
+            continue
+        try:
+            sig.bind(*node.args, **{kw.arg: kw.value for kw in node.keywords})
+        except TypeError as e:
+            bad.append(f"{ast.unparse(node.func)}(): {e} ({node.lineno})")
     return sorted(set(bad))
 
 
@@ -84,10 +111,15 @@ def test_scan_reports_missing_names(tmp_path):
         "from searty_spark.index import write_index, no_such_function\n"
         "wand.wand_topk_batch, wand.TermDfClient.lookup\n"
         "wand.no_such_kernel, champions.ChampionClient.no_such_method\n"
+        "write_index(docs, out, n_shards=2), wand.wand_topk(s, d, q, pre_partitioned=True)\n"
+        "write_index(docs, out, no_such_keyword=1)\n"
+        "wand.wand_topk(1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13)\n"
     )
     assert _dangling(probe) == [
         "champions.ChampionClient.no_such_method (5)",
         "searty_spark.index.no_such_function (3)",
         "searty_spark.no_such_module (2)",
         "wand.no_such_kernel (5)",
+        "wand.wand_topk(): too many positional arguments (8)",
+        "write_index(): got an unexpected keyword argument 'no_such_keyword' (7)",
     ]

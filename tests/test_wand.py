@@ -60,28 +60,6 @@ def test_dict_df_lookup_missing_indexed_term_raises(spark, small_corpus):
         ).collect()
 
 
-def test_dataframe_df_lookup_missing_indexed_term_raises(spark, small_corpus):
-    """A stale dictionary DataFrame missing an indexed term must raise
-    in the kernel, not silently drop the term's postings."""
-    import pytest
-
-    from searty_spark.build import build_postings, doc_stats
-    from searty_spark.segments import build_segments
-    from searty_spark.wand import wand_topk
-
-    p = build_postings(small_corpus, with_doc_len=True)
-    s = doc_stats(small_corpus)
-    row = s.groupBy().agg({"doc_len": "avg", "*": "count"}).collect()[0]
-    seg = build_segments(p, s, n_shards=2, n_buckets=4)
-    stale = spark.createDataFrame([("zzz", 1)], "term string, df_global long")
-    with pytest.raises(Exception, match="no entry for term"):
-        wand_topk(
-            seg, None, "shared", k=5,
-            n_docs=int(row["count(1)"]), avgdl=float(row["avg(doc_len)"]),
-            n_shards=2, df_lookup=stale,
-        ).collect()
-
-
 def test_duplicate_term_rows_disjoint_sum_overlap_raise(spark, small_corpus, oracle_index):
     """Unmerged partial indexes: duplicate (shard, term) segment rows
     with DISJOINT doc sets score exactly (per-row impacts sum to true
@@ -122,30 +100,28 @@ def test_duplicate_term_rows_disjoint_sum_overlap_raise(spark, small_corpus, ora
         ).collect()
 
 
-def test_wand_pre_partitioned_identity(spark, small_corpus):
-    """The warm-server fast path (caller-maintained shard partitioning,
-    per-query exchange skipped) must be frame-identical to the default
-    path for every query/k."""
-    from searty_spark.build import build_postings, doc_stats
-    from searty_spark.segments import build_segments
-    from searty_spark.wand import wand_topk
+def test_missing_stats_or_dataframe_lookup_raise_in_the_driver(seg, jobs_of):
+    """wand_topk_batch and phrase_bm25_topk_segments need n_docs and
+    avgdl: without them they raise ValueError before any Spark job
+    (a check that ``python -O`` keeps), not a TypeError inside a
+    Python worker. A df_lookup that is neither a dict nor None is
+    refused the same way."""
+    from searty_spark.phrase_seg import phrase_bm25_topk_segments
+    from searty_spark.wand import wand_topk_batch
 
-    from pyspark.sql import functions as F
+    seg_df, dstats = seg
+    calls = [
+        lambda: wand_topk_batch(seg_df, {"q": "shared phrase"}, n_docs=150),
+        lambda: phrase_bm25_topk_segments(seg_df, "shared phrase", avgdl=10.0),
+    ]
+    for call in calls:
+        def expect_value_error():
+            with pytest.raises(ValueError, match="needs n_docs and avgdl"):
+                call()
+        assert jobs_of(expect_value_error) == 0
 
-    p = build_postings(small_corpus, with_doc_len=True)
-    s = doc_stats(small_corpus)
-    seg = build_segments(p, s, n_shards=4, n_buckets=8)
-    warm = seg.repartition(4, "shard").cache()
-    warm.count()
-    row = s.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["a"])
-    for q, k in [("shared", 10), ("shared phrase", 5), ("module query", 20)]:
-        base = [tuple(r) for r in wand_topk(
-            seg, None, q, k=k, n_docs=n_docs, avgdl=avgdl, n_shards=4
-        ).collect()]
-        fast = [tuple(r) for r in wand_topk(
-            warm, None, q, k=k, n_docs=n_docs, avgdl=avgdl, n_shards=4,
-            pre_partitioned=True,
-        ).collect()]
-        assert fast == base, q
-    warm.unpersist()
+    def expect_type_error():
+        with pytest.raises(TypeError, match="df_lookup must be a dict or None"):
+            wand_topk(seg_df, None, "shared", n_docs=150, avgdl=10.0,
+                      df_lookup=dstats)
+    assert jobs_of(expect_type_error) == 0
