@@ -68,3 +68,37 @@ def test_phrase_bm25_df_equals_segments(spark, small_corpus, seg_df, query):
             cnt += 1
             i = j + 1
         assert cnt == n, f"query={query!r} doc={d}"
+
+
+def test_phrase_pre_partitioned_identity(spark, small_corpus):
+    """Both phrase segment paths called as bench.py calls them (a
+    shard-partitioned frame and ``pre_partitioned=True``, a keyword
+    accepted and ignored) must equal the default."""
+    from pyspark.sql import functions as F
+
+    from searty_spark.phrase_seg import phrase_bm25_topk_segments
+
+    p = build_postings(small_corpus, with_doc_len=True)
+    s = doc_stats(small_corpus)
+    seg = build_segments(p, s, n_shards=4, n_buckets=8)
+    warm = seg.repartition(4, "shard").cache()
+    warm.count()
+    row = s.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
+    n_docs, avgdl = int(row["n"]), float(row["a"])
+    try:
+        for q in ["shared phrase", "the module"]:
+            base_r = [tuple(r) for r in phrase_ranges_segments(seg, q, n_shards=4).collect()]
+            fast_r = [tuple(r) for r in phrase_ranges_segments(
+                warm, q, n_shards=4, pre_partitioned=True
+            ).collect()]
+            assert fast_r == base_r, q
+            base_b = [tuple(r) for r in phrase_bm25_topk_segments(
+                seg, q, k=10, n_docs=n_docs, avgdl=avgdl, n_shards=4
+            ).collect()]
+            fast_b = [tuple(r) for r in phrase_bm25_topk_segments(
+                warm, q, k=10, n_docs=n_docs, avgdl=avgdl, n_shards=4,
+                pre_partitioned=True,
+            ).collect()]
+            assert fast_b == base_b, q
+    finally:
+        warm.unpersist()

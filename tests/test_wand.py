@@ -125,3 +125,31 @@ def test_missing_stats_or_dataframe_lookup_raise_in_the_driver(seg, jobs_of):
             wand_topk(seg_df, None, "shared", n_docs=150, avgdl=10.0,
                       df_lookup=dstats)
     assert jobs_of(expect_type_error) == 0
+
+
+def test_wand_pre_partitioned_identity(spark, small_corpus):
+    """bench.py keeps a shard-partitioned frame and passes
+    ``pre_partitioned=True``; the keyword is accepted and ignored, so
+    that call must be frame-identical to the default path for every
+    query/k."""
+    from pyspark.sql import functions as F
+
+    p = build_postings(small_corpus, with_doc_len=True)
+    s = doc_stats(small_corpus)
+    seg = build_segments(p, s, n_shards=4, n_buckets=8)
+    warm = seg.repartition(4, "shard").cache()
+    warm.count()
+    row = s.agg(F.count("*").alias("n"), F.avg("doc_len").alias("a")).collect()[0]
+    n_docs, avgdl = int(row["n"]), float(row["a"])
+    try:
+        for q, k in [("shared", 10), ("shared phrase", 5), ("module query", 20)]:
+            base = [tuple(r) for r in wand_topk(
+                seg, None, q, k=k, n_docs=n_docs, avgdl=avgdl, n_shards=4
+            ).collect()]
+            fast = [tuple(r) for r in wand_topk(
+                warm, None, q, k=k, n_docs=n_docs, avgdl=avgdl, n_shards=4,
+                pre_partitioned=True,
+            ).collect()]
+            assert fast == base, q
+    finally:
+        warm.unpersist()
