@@ -397,10 +397,11 @@ class ChampionClient:
     """Per-query champion fetch + driver-side hot-term cache — the same
     deployment shape as wand.TermDfClient: a cold championed term is a
     pyarrow point read of the term-sorted sidecar in the driver
-    (index.TermTable), no Spark job, and repeats hit the cache. The
-    championed term names (at most write_champions' ``max_terms``
-    strings) load once per process per sidecar state, so a query whose
-    terms have no list reads nothing."""
+    (index.TermTable, through index's row-group cache), no Spark job,
+    and repeats hit this client's cache of int64 arrays, at most one
+    entry per championed term. The championed term names (at most
+    write_champions' ``max_terms`` strings) load once per process per
+    sidecar state, so a query whose terms have no list reads nothing."""
 
     def __init__(self, spark: SparkSession, index_dir: str, verify: bool = True):
         """``verify=True`` (default) recomputes the segment fingerprint

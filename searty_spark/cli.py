@@ -172,11 +172,15 @@ class _Server:
     """cmd_serve's warm state and its answering loop."""
 
     def __init__(self, spark, index_dir: str, k: int):
-        """Bounded term->df client, champion client and the index path:
-        no segment row or document is read or cached at startup (each
-        batch point-reads the rows it needs; the first :regex caches
-        the segments and documents it scans), so startup and memory are
-        O(1) in index size."""
+        """Term->df client, champion client and the index path.
+        Startup reads no segment row, dictionary row or document: only
+        parquet footers and the championed term names (at most
+        write_champions' max_terms). Between batches, decoded rows live
+        only in index's per-process row-group cache, within
+        index.GROUP_CACHE_BYTES: the df client keeps no per-term state
+        and the champion client at most one entry per championed term.
+        Only the first :regex caches the segments and documents it
+        scans."""
         from searty_spark.champions import ChampionClient
         from searty_spark.index import load_stats
         from searty_spark.wand import TermDfClient

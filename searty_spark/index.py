@@ -39,12 +39,22 @@ serve path) both use to skip groups: the analogue of the reference's
 token_id PK index seek (ref lib/database/database.go:508-526). The
 ``bucket`` column (pmod(xxhash64(term), n_buckets)) stays a stored
 column and the encode and merge grouping key, not a directory.
+
+TermTable's decoded row groups, indexed by term, live in one
+per-process LRU cache bounded by GROUP_CACHE_BYTES and keyed on the
+file's (path, st_mtime_ns, st_size) like the footer cache: the
+analogue of the page cache that keeps the reference's SQLite pages
+warm across queries. group_cache_info() reports its hits, misses,
+evictions and size.
 """
 
 from __future__ import annotations
 
+import collections
 import functools
 import json
+import sys
+import threading
 import time
 from pathlib import Path
 
@@ -146,11 +156,92 @@ def _footer_at(path: str, mtime_ns: int, size: int):
 
 
 def _cached_footer(f: Path):
-    """A file's parquet footer, cached per process under its
-    (path, st_mtime_ns, st_size): a file rewritten in place is read
-    fresh, and the cache holds at most 1,024 footers."""
+    """A file's (path, st_mtime_ns, st_size) and its parquet footer,
+    cached per process under that key: a file rewritten in place is
+    read fresh, and the cache holds at most 1,024 footers."""
     st = f.stat()
-    return _footer_at(str(f), st.st_mtime_ns, st.st_size)
+    key = (str(f), st.st_mtime_ns, st.st_size)
+    return key, _footer_at(*key)
+
+
+# Byte budget of the per-process cache of decoded row groups
+# (_group_rows), as _held_bytes counts them. Serving a perfbench index
+# (1,000 documents) fills ~24 MB of it (~21 MB by tracemalloc: 30
+# groups, the segment groups once per column set), so no group of it
+# is decoded twice.
+GROUP_CACHE_BYTES = 64 << 20
+
+GroupCacheInfo = collections.namedtuple(
+    "GroupCacheInfo", "hits misses evictions bytes groups"
+)
+
+_GROUPS: collections.OrderedDict = collections.OrderedDict()  # key -> (rows, bytes), LRU first
+_GROUP_COUNTS = {"hits": 0, "misses": 0, "evictions": 0, "bytes": 0}
+_GROUP_LOCK = threading.Lock()
+
+
+def group_cache_info() -> GroupCacheInfo:
+    """The decoded row-group cache's hits, misses (row groups decoded),
+    evictions, bytes held and groups held, like functools' cache_info."""
+    with _GROUP_LOCK:
+        return GroupCacheInfo(**_GROUP_COUNTS, groups=len(_GROUPS))
+
+
+def _held_bytes(by_term: dict[str, list[dict]]) -> int:
+    """What ``by_term`` holds in Python objects: its dicts, lists and
+    values, list elements included. Objects shared between rows are
+    counted once per reference, so this errs high."""
+    size = sys.getsizeof
+    n = size(by_term)
+    for t, rows in by_term.items():
+        n += size(t) + size(rows)
+        for r in rows:
+            n += size(r)
+            for v in r.values():
+                n += size(v)
+                if isinstance(v, list):
+                    n += sum(map(size, v))
+    return n
+
+
+def _group_rows(key: tuple, md, g: int, columns: tuple) -> dict[str, list[dict]]:
+    """Row group ``g`` of the file with footer ``md`` and
+    _cached_footer ``key``, as term -> its rows (every row, duplicates
+    included) of ``term`` and ``columns``. Groups are cached per
+    process, least recently used evicted first, under
+    (path, st_mtime_ns, st_size, g, columns) while the cache's
+    _held_bytes stay within GROUP_CACHE_BYTES; a group larger than the
+    whole budget is returned uncached. The returned rows are the
+    cache's own: callers copy before changing them."""
+    import pyarrow.parquet as pq
+
+    gkey = (*key, g, columns)
+    with _GROUP_LOCK:
+        hit = _GROUPS.get(gkey)
+        if hit is not None:
+            _GROUPS.move_to_end(gkey)
+            _GROUP_COUNTS["hits"] += 1
+            return hit[0]
+        _GROUP_COUNTS["misses"] += 1
+    # decode OUTSIDE the lock, so readers of warm groups never wait on
+    # a cold one; a racing decode of the same group is kept once
+    with pq.ParquetFile(key[0], metadata=md) as pf:
+        # one small group: pyarrow's thread pool only adds CPU
+        tbl = pf.read_row_group(g, columns=["term", *columns], use_threads=False)
+    by_term: dict[str, list[dict]] = {}
+    for r in tbl.to_pylist():
+        by_term.setdefault(r["term"], []).append(r)
+    n = _held_bytes(by_term)
+    if n <= GROUP_CACHE_BYTES:
+        with _GROUP_LOCK:
+            if gkey not in _GROUPS:
+                _GROUPS[gkey] = (by_term, n)
+                _GROUP_COUNTS["bytes"] += n
+                while _GROUP_COUNTS["bytes"] > GROUP_CACHE_BYTES:
+                    _, (_, m) = _GROUPS.popitem(last=False)
+                    _GROUP_COUNTS["bytes"] -= m
+                    _GROUP_COUNTS["evictions"] += 1
+    return by_term
 
 
 class TermTable:
@@ -158,28 +249,31 @@ class TermTable:
     job, all in the driver: the dictionary, the champion sidecar and a
     segment shard directory (read_segment_rows, for wand.serve_topk).
     The footers' per-row-group term min/max, read once here, pick the
-    groups a term can lie in; a read decodes only those, so memory
-    follows the groups a request touches, never the table. On
+    groups a term can lie in, and a read touches only those. On
     write_term_sorted's layout the ranges are disjoint and a term
     touches at most one group. Any other layout (unsorted or multi-file,
     from an older or foreign writer) stays exact and only loses that
     bound; a group without term statistics is read for every term.
-    Footers come from the per-process cache (_cached_footer)."""
+    Footers (_cached_footer) and decoded groups (_group_rows) come from
+    per-process caches shared by every TermTable, so a warm read
+    decodes nothing and memory stays within GROUP_CACHE_BYTES plus the
+    groups of one read."""
 
     def __init__(self, path: str, columns: list[str]):
         import itertools
 
-        self._columns = columns
-        self._groups = []  # (lo, hi, file, footer, row group); hi None = unbounded
+        self._columns = tuple(columns)
+        # (lo, hi, footer key, footer, row group); hi None = unbounded
+        self._groups = []
         for f in sorted(Path(path).iterdir()):
             if not f.is_file() or f.name.startswith(("_", ".")):
                 continue
-            md = _cached_footer(f)
+            key, md = _cached_footer(f)
             col = md.schema.names.index("term")
             for g in range(md.num_row_groups):
                 st = md.row_group(g).column(col).statistics
                 ok = st is not None and st.has_min_max
-                self._groups.append((st.min if ok else "", st.max if ok else None, f, md, g))
+                self._groups.append((st.min if ok else "", st.max if ok else None, key, md, g))
         self._groups.sort(key=lambda x: x[0])
         # running max of the upper bounds: the walk down from a term's
         # insertion point stops once no group below can reach the term
@@ -190,20 +284,17 @@ class TermTable:
 
     def rows(self, terms) -> dict[str, tuple]:
         """term -> its ``columns`` values, for the terms in the table."""
-        out: dict[str, tuple] = {}
-        for tbl in self.tables(terms):
-            for r in tbl.to_pylist():
-                out[r["term"]] = tuple(r[c] for c in self._columns)
-        return out
+        return {r["term"]: tuple(r[c] for c in self._columns) for r in self._matches(terms)}
 
-    def tables(self, terms):
+    def dicts(self, terms) -> list[dict]:
         """Every row whose term is in ``terms`` (duplicates included),
-        as ("term", *columns) tables, one per row group read."""
-        import bisect
+        each a fresh dict of ``term`` and ``columns``: the caller may
+        set keys on it (its list values are shared; don't mutate them)."""
+        return [dict(r) for r in self._matches(terms)]
 
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+    def _matches(self, terms):
+        """The cached rows behind rows() and dicts(), never to be changed."""
+        import bisect
 
         want: dict[int, list[str]] = {}
         for t in set(terms):
@@ -213,12 +304,10 @@ class TermTable:
                     want.setdefault(j, []).append(t)
                 j -= 1
         for j, ts in sorted(want.items()):
-            _, _, f, md, g = self._groups[j]
-            with pq.ParquetFile(f, metadata=md) as pf:
-                # one small group: pyarrow's thread pool only adds CPU
-                tbl = pf.read_row_group(g, columns=["term", *self._columns],
-                                        use_threads=False)
-            yield tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(ts, pa.string())))
+            _, _, key, md, g = self._groups[j]
+            by_term = _group_rows(key, md, g, self._columns)
+            for t in sorted(ts):  # the file's order on a sorted layout
+                yield from by_term.get(t, ())
 
 
 def read_segment_rows(
@@ -227,20 +316,19 @@ def read_segment_rows(
     """The segment rows of one shard for ``terms``, read with pyarrow
     straight from ``segments/shard=S/`` (no Spark): the serve path's
     point read, run in the driver by wand.serve_topk. Row-group term
-    statistics skip groups as TermTable does, and footers are cached
-    per process. EVERY matching row comes back, including several rows
-    for one term from unmerged partial indexes copied in beside the
-    shard's file, so the kernels' duplicate checks still see them. Each
-    row is a dict of ``columns`` (``shard`` from the directory)."""
+    statistics skip groups as TermTable does, and footers and decoded
+    groups are cached per process. EVERY matching row comes back,
+    including several rows for one term from unmerged partial indexes
+    copied in beside the shard's file, so the kernels' duplicate checks
+    still see them. Each row is a fresh dict of ``columns`` (``shard``
+    from the directory)."""
     d = Path(index_dir) / "segments" / f"shard={shard}"
     if not d.is_dir():
         return []
     cols = [c for c in columns if c not in ("shard", "term")]
-    rows = []
-    for tbl in TermTable(str(d), cols).tables(terms):
-        for r in tbl.to_pylist():
-            r["shard"] = shard
-            rows.append(r)
+    rows = TermTable(str(d), cols).dicts(terms)
+    for r in rows:
+        r["shard"] = shard
     return rows
 
 
@@ -255,7 +343,7 @@ def _done_units(out_dir: str) -> set[str]:
     return {json.loads(line)["unit"] for line in p.read_text().splitlines() if line}
 
 
-_CKPT_LOCK = __import__("threading").Lock()
+_CKPT_LOCK = threading.Lock()
 
 
 def _commit(out_dir: str, unit: str, **metrics) -> None:
@@ -286,7 +374,6 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     """Warm one reusable Python worker per core in the background (see
     write_index). Thread-safe: job descriptions/groups are thread-local
     in Spark, so the prewarm job never relabels the caller's jobs."""
-    import threading
 
     def _go():
         try:

@@ -325,46 +325,26 @@ def _shard_request(
 
 
 class TermDfClient:
-    """Per-query term->df_global fetch from the on-disk dictionary with
-    a driver-side hot-term cache — the query-server deployment shape. A
-    cold term is a pyarrow point read in the driver (index.TermTable:
-    the dictionary is term-sorted, and the footers' term ranges pick
-    the one small row group a term can lie in), so no lookup starts a
-    Spark job and the dictionary never moves to the driver whole.
-    ``lookup(terms)`` returns a plain dict usable as ``df_lookup`` —
-    terms absent from the dictionary are omitted, which is safe: the
-    dictionary is derived from the segment rows, so an absent term has
-    no postings and never reaches the scoring kernel. ``spark`` is
-    unused; it stays for the callers' sake."""
-
-    _ABSENT = object()
+    """Per-query term->df_global fetch from the on-disk dictionary — the
+    query-server deployment shape. A lookup is a pyarrow point read in
+    the driver (index.TermTable: the dictionary is term-sorted, and the
+    footers' term ranges pick the one small row group a term can lie
+    in), so no lookup starts a Spark job and the dictionary never moves
+    to the driver whole. Repeats are answered from index's byte-bounded
+    cache of decoded row groups; the client itself keeps no per-term
+    state. ``lookup(terms)`` returns a plain dict usable as
+    ``df_lookup`` — terms absent from the dictionary are omitted, which
+    is safe: the dictionary is derived from the segment rows, so an
+    absent term has no postings and never reaches the scoring kernel.
+    ``spark`` is unused; it stays for the callers' sake."""
 
     def __init__(self, spark, index_dir: str):
-        import threading
-
         from searty_spark.index import TermTable
 
         self._table = TermTable(f"{index_dir}/dictionary", ["df_global"])
-        self._cache: dict[str, object] = {}
-        # lookup() may be called from concurrent threads; the lock makes
-        # read-check-fetch-update explicitly safe rather than relying on
-        # the GIL
-        self._lock = threading.Lock()
 
     def lookup(self, terms) -> dict[str, int]:
-        with self._lock:
-            missing = [t for t in terms if t not in self._cache]
-        if missing:
-            # the read runs OUTSIDE the lock, so concurrent callers
-            # with warm terms never wait on a cold read
-            rows = self._table.rows(missing)
-            with self._lock:
-                for t in missing:
-                    self._cache.setdefault(t, int(rows[t][0]) if t in rows else self._ABSENT)
-        with self._lock:
-            return {
-                t: v for t in terms if (v := self._cache.get(t)) is not self._ABSENT
-            }
+        return {t: int(df) for t, (df,) in self._table.rows(terms).items()}
 
 
 def _with_df_global(pruned: DataFrame, terms, df_lookup) -> DataFrame:
@@ -579,8 +559,9 @@ def serve_topk(
     shards of the index at ``index_dir`` (stats.json's ``stats``). For
     each shard it point-reads the rows of the batch's terms with
     pyarrow (index.read_segment_rows: only the row groups of the
-    shard's files whose term range can hold a term; position streams
-    only when a phrase request is in the batch), attaches df_global
+    shard's files whose term range can hold a term, each decoded once
+    per process while index's row-group cache holds it; position
+    streams only when a phrase request is in the batch), attaches df_global
     from ``df_lookup``, and runs _shard_request per request (the
     one-shot entries' shard kernel: a local top-k). The first k per request under
     (score DESC, doc_id ASC) are kept, exact because every doc lives

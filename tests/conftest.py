@@ -69,3 +69,17 @@ def groups_read(monkeypatch):
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
     return n
+
+
+@pytest.fixture
+def group_cache(monkeypatch):
+    """index's per-process cache of decoded row groups, emptied for
+    this test (the shared one comes back after it); yields the index
+    module, whose GROUP_CACHE_BYTES the test may monkeypatch."""
+    import collections
+
+    from searty_spark import index
+
+    monkeypatch.setattr(index, "_GROUPS", collections.OrderedDict())
+    monkeypatch.setattr(index, "_GROUP_COUNTS", dict.fromkeys(index._GROUP_COUNTS, 0))
+    return index

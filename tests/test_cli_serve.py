@@ -199,6 +199,34 @@ def test_serve_batch_starts_no_job_and_matches_single_requests(
     assert {r["batched"] for r in _replies(capsys).values()} == {1}
 
 
+def test_repeated_batch_decodes_no_group_and_starts_no_job(
+    spark, served, jobs_of, groups_read, capsys
+):
+    """The same batch answered twice on one server: the repeat decodes
+    no row group (segments and dictionary come from index's group
+    cache) and starts no Spark job, and both answers equal each
+    request's answer alone."""
+    from searty_spark import cli
+    from searty_spark.index import group_cache_info
+
+    srv = cli._Server(spark, served, 5)
+    items = [("bm25", "shared"), ("phrase", "shared phrase"), ("bm25", "module query"),
+             ("bm25", "@@"), ("batch", '["module", "the shared"]')]
+    _run(srv, items, len(items))
+    first = _replies(capsys)
+    before, misses = groups_read[0], group_cache_info().misses
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 0
+    second = _replies(capsys)
+    assert groups_read[0] == before and group_cache_info().misses == misses
+    _run(srv, items, 1)
+    alone = _replies(capsys)
+    assert sorted(first) == sorted(second) == sorted(alone) == list(range(len(items)))
+    for seq in first:
+        assert first[seq]["results"] == second[seq]["results"] == alone[seq]["results"]
+        assert first[seq]["batched"] == second[seq]["batched"] == len(items)
+    assert first[0]["results"] and first[1]["results"]
+
+
 def test_cold_term_df_lookup_starts_no_job(spark, served, jobs_of):
     """TermDfClient reads the term-sorted dictionary in the driver: a
     cold lookup starts no Spark job and equals the dictionary's rows,

@@ -3,7 +3,8 @@ without Spark: for any term list it returns exactly the rows a full
 pyarrow read of the shard's directory holds for those terms —
 duplicates from unmerged partial indexes included — skips row groups
 by their term statistics, and reads a file rewritten in place fresh
-despite the per-process footer cache."""
+despite the per-process footer and row-group caches. A warm read
+decodes no row group, and each read returns rows of its own."""
 
 import shutil
 
@@ -137,3 +138,24 @@ def test_rewritten_file_is_read_fresh(index_dir):
     shutil.copy(index_dir / "segments" / "shard=1" / "part-00000.parquet", f)
     assert _read(index_dir, 0, terms) == _full(index_dir, 0, set(terms))
     assert {dict(r)["shard"] for r in _read(index_dir, 0, terms)} == {0}
+
+
+def test_repeated_read_decodes_no_group(index_dir, groups_read, group_cache):
+    q = ["sha", "日本語", "zzzz", "...", TERMS[0], TERMS[-1]]
+    for shard in range(N_SHARDS):
+        cold = _read(index_dir, shard, q)
+        before = groups_read[0]
+        assert _read(index_dir, shard, q) == cold == _full(index_dir, shard, set(q))
+        assert groups_read[0] == before, shard
+    info = group_cache.group_cache_info()
+    assert info.misses == groups_read[0] > 0 and info.hits == info.misses
+
+
+def test_mutating_a_returned_row_changes_no_later_read(index_dir, group_cache):
+    want = _full(index_dir, 0, set(TERMS))
+    for r in read_segment_rows(str(index_dir), 0, TERMS, PHRASE_COLS):
+        r["shard"] = 7
+        r["df_global"] = 1
+        r["df"] = -1
+        del r["blob"]
+    assert _read(index_dir, 0, TERMS) == want

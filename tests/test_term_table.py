@@ -3,7 +3,10 @@ wand.TermDfClient and champions.ChampionClient), without Spark: a
 lookup equals a full-table filter, and on the term-sorted layout a
 k-term lookup decodes at most k row groups. An unsorted multi-file
 table (an older build, a foreign writer) keeps the exact answer and
-loses only the bound."""
+loses only the bound. Decoded groups come from index's byte-bounded
+LRU cache: a warm lookup decodes nothing, the cache stays within
+GROUP_CACHE_BYTES, and the per-term clients keep no state of their
+own."""
 
 import random
 
@@ -11,6 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from searty_spark.champions import ChampionClient
+from searty_spark.index import TermTable
 from searty_spark.wand import TermDfClient
 
 # trigrams of every shape the tokenizer emits: ASCII, punctuation and
@@ -142,3 +146,138 @@ def test_concurrent_lookups_agree_with_the_table(tmp_path):
         sys.setswitchinterval(prev)
     assert not any(t.is_alive() for t in threads)
     assert wrong == []
+
+
+def _write_dictionary(tmp_path, name="dictionary", row_group_size=2):
+    tbl = _dictionary(TERMS)
+    (tmp_path / name).mkdir()
+    pq.write_table(tbl, tmp_path / name / "part-00000.parquet", row_group_size=row_group_size)
+    return str(tmp_path / name), _full(tbl)
+
+
+def test_repeated_lookup_decodes_no_group(tmp_path, groups_read, group_cache):
+    path, full = _write_dictionary(tmp_path)
+    q = ["sha", "日本語", "zzzz", TERMS[0], TERMS[-1]]
+    want = {t: full[t] for t in q if t in full}
+    assert TermTable(path, ["df_global"]).rows(q) == {t: (v,) for t, v in want.items()}
+    cold = group_cache.group_cache_info()
+    assert cold.misses == groups_read[0] == cold.groups > 0 and cold.hits == 0
+    # a new client over the same file: every group comes from the cache
+    assert TermDfClient(None, str(tmp_path)).lookup(q) == want
+    warm = group_cache.group_cache_info()
+    assert groups_read[0] == cold.misses and warm.misses == cold.misses
+    assert warm.hits == cold.groups and warm.bytes == cold.bytes > 0
+
+
+def test_tables_with_other_columns_get_their_own_columns(tmp_path, group_cache):
+    path, full = _write_dictionary(tmp_path)
+    tok = {t: sum(t.encode()) for t in TERMS}
+    q = TERMS[::3] + ABSENT
+    a = TermTable(path, ["df_global"])
+    b = TermTable(path, ["token_id"])
+    c = TermTable(path, ["token_id", "df_global"])
+    for _ in range(2):  # cold, then warm
+        assert a.rows(q) == {t: (full[t],) for t in q if t in full}
+        assert b.rows(q) == {t: (tok[t],) for t in q if t in full}
+        assert c.dicts(q) == [
+            {"term": t, "token_id": tok[t], "df_global": full[t]} for t in sorted(q) if t in full
+        ]
+
+
+def test_mutating_a_returned_row_changes_no_later_read(tmp_path, group_cache):
+    path, full = _write_dictionary(tmp_path)
+    t = TermTable(path, ["df_global"])
+    first = t.dicts(TERMS)
+    for r in first:
+        r["df_global"] = -1
+        r["shard"] = 9
+        del r["term"]
+    assert t.dicts(TERMS) == [{"term": x, "df_global": full[x]} for x in TERMS]
+    assert TermDfClient(None, str(tmp_path)).lookup(TERMS) == full
+
+
+def test_cache_stays_within_its_budget_and_evicts_lru_first(
+    tmp_path, groups_read, group_cache, monkeypatch
+):
+    """Single-term reads over a 14-group table, with the budget
+    monkeypatched to just under four groups' bytes: after each read the
+    cache holds at most GROUP_CACHE_BYTES, every answer equals the
+    table's, and which reads decode a group is exactly what an LRU
+    model of the same group sizes predicts."""
+    import collections
+
+    path, full = _write_dictionary(tmp_path)
+    groups = [TERMS[i:i + 2] for i in range(0, len(TERMS), 2)]
+    TermTable(path, ["df_global"]).rows(TERMS)  # learn each group's size
+    size = [b for _, b in group_cache._GROUPS.values()]
+    assert len(size) == len(groups)
+    monkeypatch.setattr(group_cache, "_GROUPS", collections.OrderedDict())
+    monkeypatch.setattr(group_cache, "_GROUP_COUNTS", dict.fromkeys(group_cache._GROUP_COUNTS, 0))
+    budget = sum(size[:4]) - 1
+    monkeypatch.setattr(group_cache, "GROUP_CACHE_BYTES", budget)
+
+    model: collections.OrderedDict = collections.OrderedDict()
+    evictions = 0
+    rng = random.Random(17)
+
+    def read(g):
+        nonlocal evictions
+        t = rng.choice(groups[g])
+        before = groups_read[0]
+        assert TermDfClient(None, str(tmp_path)).lookup([t]) == {t: full[t]}
+        hit = g in model
+        assert groups_read[0] - before == (0 if hit else 1), (g, list(model))
+        if hit:
+            model.move_to_end(g)
+        else:
+            model[g] = size[g]
+            while sum(model.values()) > budget:
+                model.popitem(last=False)
+                evictions += 1
+        info = group_cache.group_cache_info()
+        assert info.bytes == sum(model.values()) <= budget
+        assert info.groups == len(model) and info.evictions == evictions
+
+    for g in (0, 1, 2, 0, 3):
+        read(g)
+    # group 1 was the least recently used when group 3 came in
+    assert list(model) == [2, 0, 3] and evictions == 1
+    for _ in range(200):
+        read(rng.randrange(len(groups)))
+    assert evictions > 10
+
+
+def test_group_larger_than_the_budget_is_answered_uncached(
+    tmp_path, groups_read, group_cache, monkeypatch
+):
+    path, full = _write_dictionary(tmp_path, row_group_size=len(TERMS))
+    monkeypatch.setattr(group_cache, "GROUP_CACHE_BYTES", 1000)
+    for _ in range(3):
+        before = groups_read[0]
+        assert TermDfClient(None, str(tmp_path)).lookup(TERMS + ABSENT) == full
+        assert groups_read[0] - before == 1
+    info = group_cache.group_cache_info()
+    assert info.misses == 3 and (info.groups, info.bytes, info.evictions) == (0, 0, 0)
+
+
+def test_term_df_client_keeps_no_per_term_state(tmp_path, group_cache):
+    """20,000 lookups of distinct terms, present or absent, leave the
+    client's and its table's state as they were: repeats are the
+    group cache's, whose bytes stay within the budget."""
+    path, full = _write_dictionary(tmp_path)
+    client = TermDfClient(None, str(tmp_path))
+
+    def state():
+        return set(vars(client)), id(client._table), {
+            k: (id(v), len(v)) for k, v in vars(client._table).items()
+        }
+
+    before = state()
+    rng = random.Random(3)
+    queries = TERMS + [f"{i:05d}{rng.choice(TERMS)}" for i in range(20_000 - len(TERMS))]
+    for t in queries:
+        assert client.lookup([t]) == ({t: full[t]} if t in full else {})
+    assert state() == before and before[0] == {"_table"}
+    info = group_cache.group_cache_info()
+    assert info.groups == len(range(0, len(TERMS), 2))
+    assert info.bytes <= group_cache.GROUP_CACHE_BYTES
