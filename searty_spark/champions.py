@@ -394,14 +394,14 @@ def _sidecar_state_key(index_dir: str) -> tuple:
 
 
 class ChampionClient:
-    """Per-query champion fetch + driver-side hot-term cache — the same
-    deployment shape as wand.TermDfClient: a cold championed term is a
-    pyarrow point read of the term-sorted sidecar in the driver
-    (index.TermTable, through index's row-group cache), no Spark job,
-    and repeats hit this client's cache of int64 arrays, at most one
-    entry per championed term. The championed term names (at most
-    write_champions' ``max_terms`` strings) load once per process per
-    sidecar state, so a query whose terms have no list reads nothing."""
+    """Per-query champion fetch — the same deployment shape as
+    wand.TermDfClient: a championed term is a pyarrow point read of the
+    term-sorted sidecar in the driver (index.TermTable), no Spark job,
+    and repeats are answered from index's byte-bounded cache of decoded
+    row groups; the client keeps no per-term state. The championed term
+    names (at most write_champions' ``max_terms`` strings) load once
+    per process per sidecar state, so a query whose terms have no list
+    reads nothing."""
 
     def __init__(self, spark: SparkSession, index_dir: str, verify: bool = True):
         """``verify=True`` (default) recomputes the segment fingerprint
@@ -416,8 +416,6 @@ class ChampionClient:
         Both the verdict and the term names are memoized per process
         under _sidecar_state_key; the verification runs on Spark (the
         stamps are JVM xxhash64 sums), everything else in the driver."""
-        import threading
-
         import pyarrow.parquet as pq
 
         from searty_spark.index import TermTable
@@ -437,8 +435,6 @@ class ChampionClient:
                         pq.read_table(p, columns=["term"])["term"].to_pylist()
                     )
                 self._names = _NAMES_CACHE[key]
-        self._cache: dict[str, tuple] = {}
-        self._lock = threading.Lock()
 
     def _verified(self, spark: SparkSession, index_dir: str, key: tuple) -> bool:
         meta_p = Path(index_dir) / "champions_meta.json"
@@ -463,12 +459,11 @@ class ChampionClient:
         return ok
 
     def lookup(self, terms) -> dict[str, tuple]:
-        with self._lock:
-            missing = [t for t in terms if t in self._names and t not in self._cache]
-        if missing:
-            rows = self._table.rows(missing)
-            with self._lock:
-                for t, arrays in rows.items():
-                    self._cache[t] = tuple(np.asarray(a, dtype=np.int64) for a in arrays)
-        with self._lock:
-            return {t: self._cache[t] for t in terms if t in self._cache}
+        wanted = [t for t in terms if t in self._names]
+        if not wanted:
+            return {}
+        rows = self._table.rows(wanted)
+        return {
+            t: tuple(np.asarray(a, dtype=np.int64) for a in rows[t])
+            for t in wanted if t in rows
+        }

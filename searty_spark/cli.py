@@ -177,8 +177,8 @@ class _Server:
         parquet footers and the championed term names (at most
         write_champions' max_terms). Between batches, decoded rows live
         only in index's per-process row-group cache, within
-        index.GROUP_CACHE_BYTES: the df client keeps no per-term state
-        and the champion client at most one entry per championed term.
+        index.GROUP_CACHE_BYTES: the df and champion clients keep no
+        per-term state.
         Only the first :regex caches the segments and documents it
         scans."""
         from searty_spark.champions import ChampionClient

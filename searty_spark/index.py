@@ -40,12 +40,13 @@ token_id PK index seek (ref lib/database/database.go:508-526). The
 ``bucket`` column (pmod(xxhash64(term), n_buckets)) stays a stored
 column and the encode and merge grouping key, not a directory.
 
-TermTable's decoded row groups, indexed by term, live in one
-per-process LRU cache bounded by GROUP_CACHE_BYTES and keyed on the
-file's (path, st_mtime_ns, st_size) like the footer cache: the
-analogue of the page cache that keeps the reference's SQLite pages
-warm across queries. group_cache_info() reports its hits, misses,
-evictions and size.
+TermTable's decoded row groups live in one per-process LRU cache
+bounded by GROUP_CACHE_BYTES and keyed on the file's
+(path, st_mtime_ns, st_size) and the group, like the footer cache:
+the analogue of the page cache that keeps the reference's SQLite
+pages warm across queries. A group is held as Arrow; a term's rows
+are converted to Python on its first lookup and kept with the group.
+group_cache_info() reports its hits, misses, evictions and size.
 """
 
 from __future__ import annotations
@@ -165,17 +166,18 @@ def _cached_footer(f: Path):
 
 
 # Byte budget of the per-process cache of decoded row groups
-# (_group_rows), as _held_bytes counts them. Serving a perfbench index
-# (1,000 documents) fills ~24 MB of it (~21 MB by tracemalloc: 30
-# groups, the segment groups once per column set), so no group of it
-# is decoded twice.
+# (_group): each _Group's Arrow buffers plus the _held_bytes of the
+# rows converted from it. Serving a perfbench index (1,000 documents)
+# holds ~9 MB of it after 300 serve_tail requests (18 groups: ~2 MB of
+# Arrow, ~7 MB of rows), so no group of it is decoded twice. A stream
+# whose groups do not fit pays a decode per read, as with no cache.
 GROUP_CACHE_BYTES = 64 << 20
 
 GroupCacheInfo = collections.namedtuple(
     "GroupCacheInfo", "hits misses evictions bytes groups"
 )
 
-_GROUPS: collections.OrderedDict = collections.OrderedDict()  # key -> (rows, bytes), LRU first
+_GROUPS: collections.OrderedDict = collections.OrderedDict()  # key -> _Group, LRU first
 _GROUP_COUNTS = {"hits": 0, "misses": 0, "evictions": 0, "bytes": 0}
 _GROUP_LOCK = threading.Lock()
 
@@ -187,61 +189,112 @@ def group_cache_info() -> GroupCacheInfo:
         return GroupCacheInfo(**_GROUP_COUNTS, groups=len(_GROUPS))
 
 
-def _held_bytes(by_term: dict[str, list[dict]]) -> int:
-    """What ``by_term`` holds in Python objects: its dicts, lists and
-    values, list elements included. Objects shared between rows are
-    counted once per reference, so this errs high."""
+def _held_bytes(term: str, rows: list[dict]) -> int:
+    """What ``term`` and its ``rows`` hold in Python objects: the
+    string, the list, the dicts and their values, list elements
+    included. Objects shared between rows are counted once per
+    reference, so this errs high."""
     size = sys.getsizeof
-    n = size(by_term)
-    for t, rows in by_term.items():
-        n += size(t) + size(rows)
-        for r in rows:
-            n += size(r)
-            for v in r.values():
-                n += size(v)
-                if isinstance(v, list):
-                    n += sum(map(size, v))
+    n = size(term) + size(rows)
+    for r in rows:
+        n += size(r)
+        for v in r.values():
+            n += size(v)
+            if isinstance(v, list):
+                n += sum(map(size, v))
     return n
 
 
-def _group_rows(key: tuple, md, g: int, columns: tuple) -> dict[str, list[dict]]:
-    """Row group ``g`` of the file with footer ``md`` and
-    _cached_footer ``key``, as term -> its rows (every row, duplicates
-    included) of ``term`` and ``columns``. Groups are cached per
-    process, least recently used evicted first, under
-    (path, st_mtime_ns, st_size, g, columns) while the cache's
-    _held_bytes stay within GROUP_CACHE_BYTES; a group larger than the
-    whole budget is returned uncached. The returned rows are the
-    cache's own: callers copy before changing them."""
+class _Group:
+    """One decoded row group: its Arrow table (``term`` and
+    ``columns``) and the rows of each term looked up so far, converted
+    to Python once: term -> its rows as dicts, [] if the group has
+    none. ``nbytes`` counts both."""
+
+    __slots__ = ("columns", "tbl", "rows", "nbytes")
+
+    def __init__(self, tbl, columns: frozenset):
+        # a fresh decode shares no buffer, and get_total_buffer_size
+        # costs a 25th of nbytes
+        self.columns, self.tbl, self.rows = columns, tbl, {}
+        self.nbytes = tbl.get_total_buffer_size()
+
+
+def _evict() -> None:
+    """Drop least recently used groups until the cache is within
+    GROUP_CACHE_BYTES; the caller holds _GROUP_LOCK."""
+    while _GROUP_COUNTS["bytes"] > GROUP_CACHE_BYTES:
+        _, old = _GROUPS.popitem(last=False)
+        _GROUP_COUNTS["bytes"] -= old.nbytes
+        _GROUP_COUNTS["evictions"] += 1
+
+
+def _group(gkey: tuple, md, columns: frozenset) -> _Group:
+    """Row group ``gkey`` = (*_cached_footer key, row group) of the
+    file with footer ``md``, decoded with at least ``term`` and
+    ``columns``. Groups are cached per process under that key, least
+    recently used evicted first; a cached group lacking a column is
+    decoded again with the union of both column sets and replaces it.
+    A group whose Arrow buffers exceed the whole budget is returned
+    uncached."""
     import pyarrow.parquet as pq
 
-    gkey = (*key, g, columns)
     with _GROUP_LOCK:
-        hit = _GROUPS.get(gkey)
-        if hit is not None:
+        grp = _GROUPS.get(gkey)
+        if grp is not None and columns <= grp.columns:
             _GROUPS.move_to_end(gkey)
             _GROUP_COUNTS["hits"] += 1
-            return hit[0]
+            return grp
         _GROUP_COUNTS["misses"] += 1
+        if grp is not None:
+            columns |= grp.columns
     # decode OUTSIDE the lock, so readers of warm groups never wait on
-    # a cold one; a racing decode of the same group is kept once
-    with pq.ParquetFile(key[0], metadata=md) as pf:
+    # a cold one
+    with pq.ParquetFile(gkey[0], metadata=md) as pf:
         # one small group: pyarrow's thread pool only adds CPU
-        tbl = pf.read_row_group(g, columns=["term", *columns], use_threads=False)
-    by_term: dict[str, list[dict]] = {}
-    for r in tbl.to_pylist():
-        by_term.setdefault(r["term"], []).append(r)
-    n = _held_bytes(by_term)
-    if n <= GROUP_CACHE_BYTES:
+        tbl = pf.read_row_group(gkey[3], columns=["term", *sorted(columns)], use_threads=False)
+    grp = _Group(tbl, columns)
+    if grp.nbytes <= GROUP_CACHE_BYTES:
         with _GROUP_LOCK:
-            if gkey not in _GROUPS:
-                _GROUPS[gkey] = (by_term, n)
-                _GROUP_COUNTS["bytes"] += n
-                while _GROUP_COUNTS["bytes"] > GROUP_CACHE_BYTES:
-                    _, (_, m) = _GROUPS.popitem(last=False)
-                    _GROUP_COUNTS["bytes"] -= m
-                    _GROUP_COUNTS["evictions"] += 1
-    return by_term
+            old = _GROUPS.get(gkey)
+            if old is not None and columns <= old.columns:
+                return old  # a racing decode got there first
+            if old is not None:
+                _GROUP_COUNTS["bytes"] -= old.nbytes
+                del _GROUPS[gkey]
+            _GROUPS[gkey] = grp
+            _GROUP_COUNTS["bytes"] += grp.nbytes
+            _evict()
+    return grp
+
+
+def _group_rows(gkey: tuple, md, columns: frozenset, terms) -> dict[str, list[dict]]:
+    """term -> its rows in row group ``gkey`` (every row, duplicates
+    included, in file order; [] if none) for each of ``terms``, as
+    dicts of ``term`` and at least ``columns``. The group (_group) and
+    each term's rows are decoded and converted once while the cache
+    holds them; a term's first lookup costs one is_in over the group
+    and a conversion of its rows alone. The rows are the cache's own:
+    callers copy before changing them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    grp = _group(gkey, md, columns)
+    new = [t for t in terms if t not in grp.rows]
+    if new:
+        tbl = grp.tbl
+        found: dict[str, list[dict]] = {t: [] for t in new}
+        for r in tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(new, pa.string()))).to_pylist():
+            found[r["term"]].append(r)
+        n = {t: _held_bytes(t, rows) for t, rows in found.items()}
+        with _GROUP_LOCK:
+            for t, rows in found.items():
+                if grp.rows.setdefault(t, rows) is rows:
+                    grp.nbytes += n[t]
+                    if _GROUPS.get(gkey) is grp:
+                        _GROUP_COUNTS["bytes"] += n[t]
+            _evict()
+    return {t: grp.rows[t] for t in terms}
 
 
 class TermTable:
@@ -254,16 +307,17 @@ class TermTable:
     touches at most one group. Any other layout (unsorted or multi-file,
     from an older or foreign writer) stays exact and only loses that
     bound; a group without term statistics is read for every term.
-    Footers (_cached_footer) and decoded groups (_group_rows) come from
-    per-process caches shared by every TermTable, so a warm read
-    decodes nothing and memory stays within GROUP_CACHE_BYTES plus the
-    groups of one read."""
+    Footers (_cached_footer) and decoded groups with their converted
+    rows (_group_rows) come from per-process caches shared by every
+    TermTable, whatever its columns, so a warm read decodes nothing and
+    memory stays within GROUP_CACHE_BYTES plus the groups of one read."""
 
     def __init__(self, path: str, columns: list[str]):
         import itertools
 
         self._columns = tuple(columns)
-        # (lo, hi, footer key, footer, row group); hi None = unbounded
+        self._names = ("term", *columns)
+        # (lo, hi, (*footer key, row group), footer); hi None = unbounded
         self._groups = []
         for f in sorted(Path(path).iterdir()):
             if not f.is_file() or f.name.startswith(("_", ".")):
@@ -273,7 +327,7 @@ class TermTable:
             for g in range(md.num_row_groups):
                 st = md.row_group(g).column(col).statistics
                 ok = st is not None and st.has_min_max
-                self._groups.append((st.min if ok else "", st.max if ok else None, key, md, g))
+                self._groups.append((st.min if ok else "", st.max if ok else None, (*key, g), md))
         self._groups.sort(key=lambda x: x[0])
         # running max of the upper bounds: the walk down from a term's
         # insertion point stops once no group below can reach the term
@@ -290,7 +344,7 @@ class TermTable:
         """Every row whose term is in ``terms`` (duplicates included),
         each a fresh dict of ``term`` and ``columns``: the caller may
         set keys on it (its list values are shared; don't mutate them)."""
-        return [dict(r) for r in self._matches(terms)]
+        return [{c: r[c] for c in self._names} for r in self._matches(terms)]
 
     def _matches(self, terms):
         """The cached rows behind rows() and dicts(), never to be changed."""
@@ -303,11 +357,12 @@ class TermTable:
                 if self._groups[j][1] is None or self._groups[j][1] >= t:
                     want.setdefault(j, []).append(t)
                 j -= 1
+        columns = frozenset(self._columns)
         for j, ts in sorted(want.items()):
-            _, _, key, md, g = self._groups[j]
-            by_term = _group_rows(key, md, g, self._columns)
+            _, _, gkey, md = self._groups[j]
+            by_term = _group_rows(gkey, md, columns, ts)
             for t in sorted(ts):  # the file's order on a sorted layout
-                yield from by_term.get(t, ())
+                yield from by_term[t]
 
 
 def read_segment_rows(

@@ -14,6 +14,7 @@ import pytest
 
 from searty_spark.index import _footer_at, read_segment_rows
 from searty_spark.phrase_seg import PHRASE_COLS
+from searty_spark.wand import SCORE_COLS
 from test_term_table import ABSENT, TERMS
 
 N_SHARDS = 3
@@ -159,3 +160,25 @@ def test_mutating_a_returned_row_changes_no_later_read(index_dir, group_cache):
         r["df"] = -1
         del r["blob"]
     assert _read(index_dir, 0, TERMS) == want
+
+
+def test_score_and_phrase_reads_share_one_group(index_dir, groups_read, group_cache):
+    """A segment group is cached once whatever columns are asked: a
+    score read after a phrase read decodes nothing, and a phrase read
+    after a score read decodes the group once more with both column
+    sets and replaces it. Each read gets exactly its own columns."""
+    n_groups = sum(
+        pq.ParquetFile(f).num_row_groups
+        for f in (index_dir / "segments" / "shard=1").glob("part-*.parquet")
+    )
+    score = read_segment_rows(str(index_dir), 1, TERMS, SCORE_COLS)
+    assert {frozenset(r) for r in score} == {frozenset(SCORE_COLS)}
+    assert groups_read[0] == n_groups
+    phrase = read_segment_rows(str(index_dir), 1, TERMS, PHRASE_COLS)
+    assert {frozenset(r) for r in phrase} == {frozenset(PHRASE_COLS)}
+    assert groups_read[0] == 2 * n_groups
+    assert read_segment_rows(str(index_dir), 1, TERMS, SCORE_COLS) == score
+    assert groups_read[0] == 2 * n_groups
+    assert sorted(_key(r) for r in phrase) == _full(index_dir, 1, set(TERMS))
+    info = group_cache.group_cache_info()
+    assert info.groups == n_groups and info.misses == 2 * n_groups

@@ -199,17 +199,17 @@ def test_mutating_a_returned_row_changes_no_later_read(tmp_path, group_cache):
 def test_cache_stays_within_its_budget_and_evicts_lru_first(
     tmp_path, groups_read, group_cache, monkeypatch
 ):
-    """Single-term reads over a 14-group table, with the budget
-    monkeypatched to just under four groups' bytes: after each read the
-    cache holds at most GROUP_CACHE_BYTES, every answer equals the
-    table's, and which reads decode a group is exactly what an LRU
+    """Reads of one group's terms over a 14-group table, with the
+    budget monkeypatched to just under four groups' bytes: after each
+    read the cache holds at most GROUP_CACHE_BYTES, every answer equals
+    the table's, and which reads decode a group is exactly what an LRU
     model of the same group sizes predicts."""
     import collections
 
     path, full = _write_dictionary(tmp_path)
     groups = [TERMS[i:i + 2] for i in range(0, len(TERMS), 2)]
     TermTable(path, ["df_global"]).rows(TERMS)  # learn each group's size
-    size = [b for _, b in group_cache._GROUPS.values()]
+    size = [grp.nbytes for grp in group_cache._GROUPS.values()]
     assert len(size) == len(groups)
     monkeypatch.setattr(group_cache, "_GROUPS", collections.OrderedDict())
     monkeypatch.setattr(group_cache, "_GROUP_COUNTS", dict.fromkeys(group_cache._GROUP_COUNTS, 0))
@@ -222,9 +222,10 @@ def test_cache_stays_within_its_budget_and_evicts_lru_first(
 
     def read(g):
         nonlocal evictions
-        t = rng.choice(groups[g])
         before = groups_read[0]
-        assert TermDfClient(None, str(tmp_path)).lookup([t]) == {t: full[t]}
+        assert TermDfClient(None, str(tmp_path)).lookup(groups[g]) == {
+            t: full[t] for t in groups[g]
+        }
         hit = g in model
         assert groups_read[0] - before == (0 if hit else 1), (g, list(model))
         if hit:
@@ -251,7 +252,8 @@ def test_group_larger_than_the_budget_is_answered_uncached(
     tmp_path, groups_read, group_cache, monkeypatch
 ):
     path, full = _write_dictionary(tmp_path, row_group_size=len(TERMS))
-    monkeypatch.setattr(group_cache, "GROUP_CACHE_BYTES", 1000)
+    # below the group's Arrow buffers: 27 terms and their df_global
+    monkeypatch.setattr(group_cache, "GROUP_CACHE_BYTES", 100)
     for _ in range(3):
         before = groups_read[0]
         assert TermDfClient(None, str(tmp_path)).lookup(TERMS + ABSENT) == full
@@ -281,3 +283,47 @@ def test_term_df_client_keeps_no_per_term_state(tmp_path, group_cache):
     info = group_cache.group_cache_info()
     assert info.groups == len(range(0, len(TERMS), 2))
     assert info.bytes <= group_cache.GROUP_CACHE_BYTES
+
+
+def test_cold_lookup_converts_only_its_terms(tmp_path, groups_read, group_cache):
+    """A group is decoded once and held as Arrow; a lookup converts the
+    rows of its own terms alone, and a later lookup of other terms in
+    the same group decodes nothing."""
+    path, full = _write_dictionary(tmp_path, row_group_size=len(TERMS))
+    table = TermTable(path, ["df_global"])
+    assert table.rows(["sha", "zzzz"]) == {"sha": (full["sha"],)}
+    (grp,) = group_cache._GROUPS.values()
+    assert set(grp.rows) == {"sha", "zzzz"} and grp.rows["zzzz"] == []
+    one = group_cache.group_cache_info()
+    assert one.misses == groups_read[0] == 1 and one.bytes == grp.nbytes
+    assert table.rows(TERMS) == {t: (full[t],) for t in TERMS}
+    assert groups_read[0] == 1 and set(grp.rows) == set(TERMS) | {"zzzz"}
+    assert group_cache.group_cache_info().bytes == grp.nbytes > one.bytes
+
+
+def test_champion_client_keeps_no_per_term_state(tmp_path, groups_read, group_cache):
+    """Champion lookups leave the client as it was: a repeat is
+    answered from index's group cache and decodes nothing."""
+    terms = TERMS[::2]
+    side = pa.table({
+        "term": pa.array(terms, pa.string()),
+        "doc_ids": [[i, i + 10] for i in range(len(terms))],
+        "tfs": [[i + 1, 1] for i in range(len(terms))],
+        "dls": [[50, 60 + i] for i in range(len(terms))],
+    })
+    (tmp_path / "champions").mkdir()
+    pq.write_table(side, tmp_path / "champions" / "part-00000.parquet", row_group_size=2)
+    cc = ChampionClient(None, str(tmp_path), verify=False)
+    before = {k: id(v) for k, v in vars(cc).items()}
+    first = cc.lookup(TERMS + ABSENT)
+    assert {t: [a.tolist() for a in v] for t, v in first.items()} == {
+        r["term"]: [r["doc_ids"], r["tfs"], r["dls"]] for r in side.to_pylist()
+    }
+    n = groups_read[0]
+    again = cc.lookup(TERMS + ABSENT)
+    assert groups_read[0] == n and list(again) == list(first)
+    assert all(
+        all(x.dtype == "int64" and (x == y).all() for x, y in zip(again[t], first[t]))
+        for t in first
+    )
+    assert {k: id(v) for k, v in vars(cc).items()} == before
