@@ -83,9 +83,18 @@ def _encode_core(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 def varbyte_decode(data: np.ndarray | bytes) -> np.ndarray:
     """Decode a varbyte stream back into a uint64 array."""
+    return varbyte_decode_runs(data, np.empty(0, dtype=np.int64))[0]
+
+
+def varbyte_decode_runs(
+    data: np.ndarray | bytes, starts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a stream that is several varbyte runs joined, the run i
+    beginning at byte ``starts[i]``: -> (values, the index of each
+    run's first value), from one pass over the bytes."""
     b = np.frombuffer(bytes(data), dtype=np.uint8) if not isinstance(data, np.ndarray) else data
     if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
     is_end = (b & _CONT) == 0
     # value id of each byte: number of terminators strictly before it
     vid = np.zeros(b.size, dtype=np.int64)
@@ -96,7 +105,7 @@ def varbyte_decode(data: np.ndarray | bytes) -> np.ndarray:
     shift = (ends[vid] - np.arange(b.size)) * 7
     vals = np.zeros(nvals, dtype=np.uint64)
     np.add.at(vals, vid, (b & np.uint8(0x7F)).astype(np.uint64) << shift.astype(np.uint64))
-    return vals
+    return vals, vid[starts]
 
 
 def encode_posting_list(

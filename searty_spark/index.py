@@ -166,10 +166,11 @@ def _cached_footer(f: Path):
 
 
 # Byte budget of the per-process cache of decoded row groups
-# (_group): each _Group's Arrow buffers plus the _held_bytes of the
-# rows converted from it. Serving a perfbench index (1,000 documents)
-# holds ~9 MB of it after 300 serve_tail requests (18 groups: ~2 MB of
-# Arrow, ~7 MB of rows), so no group of it is decoded twice. A stream
+# (_group): each _Group's Arrow buffers, its term -> row-indices map
+# and the _held_bytes of the rows converted from it. Serving a
+# perfbench index (1,000 documents) holds ~11 MB of it after 300
+# serve_tail requests (18 groups: ~2 MB of Arrow, ~2.6 MB of maps,
+# ~7 MB of rows), so no group of it is decoded twice. A stream
 # whose groups do not fit pays a decode per read, as with no cache.
 GROUP_CACHE_BYTES = 64 << 20
 
@@ -207,17 +208,27 @@ def _held_bytes(term: str, rows: list[dict]) -> int:
 
 class _Group:
     """One decoded row group: its Arrow table (``term`` and
-    ``columns``) and the rows of each term looked up so far, converted
-    to Python once: term -> its rows as dicts, [] if the group has
-    none. ``nbytes`` counts both."""
+    ``columns``), the row indices of each of its terms (every one, so
+    duplicate rows of unmerged partials and unsorted layouts stay
+    exact), and the rows of each term looked up so far, converted to
+    Python once: term -> its rows as dicts, [] if the group has none.
+    ``nbytes`` counts all three."""
 
-    __slots__ = ("columns", "tbl", "rows", "nbytes")
+    __slots__ = ("columns", "tbl", "at", "rows", "nbytes")
 
     def __init__(self, tbl, columns: frozenset):
-        # a fresh decode shares no buffer, and get_total_buffer_size
-        # costs a 25th of nbytes
         self.columns, self.tbl, self.rows = columns, tbl, {}
-        self.nbytes = tbl.get_total_buffer_size()
+        self.at: dict[str, list[int]] = {}
+        names = tbl["term"].to_numpy().tolist()
+        for i, t in enumerate(names):
+            self.at.setdefault(t, []).append(i)
+        size = sys.getsizeof
+        # a fresh decode shares no buffer, and get_total_buffer_size
+        # costs a 25th of nbytes; an index int is counted at 28 bytes
+        self.nbytes = (
+            tbl.get_total_buffer_size() + size(self.at) + 28 * len(names)
+            + sum(map(size, self.at)) + sum(map(size, self.at.values()))
+        )
 
 
 def _evict() -> None:
@@ -273,18 +284,17 @@ def _group_rows(gkey: tuple, md, columns: frozenset, terms) -> dict[str, list[di
     included, in file order; [] if none) for each of ``terms``, as
     dicts of ``term`` and at least ``columns``. The group (_group) and
     each term's rows are decoded and converted once while the cache
-    holds them; a term's first lookup costs one is_in over the group
-    and a conversion of its rows alone. The rows are the cache's own:
-    callers copy before changing them."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    holds them; a term's first lookup takes its rows' indices from the
+    group's term index and converts those rows alone. The rows are the
+    cache's own: callers copy before changing them."""
     grp = _group(gkey, md, columns)
-    new = [t for t in terms if t not in grp.rows]
+    new = {t for t in terms if t not in grp.rows}
     if new:
-        tbl = grp.tbl
         found: dict[str, list[dict]] = {t: [] for t in new}
-        for r in tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(new, pa.string()))).to_pylist():
+        for i in sorted(i for t in new for i in grp.at.get(t, ())):
+            # a one-row slice is zero-copy; take() copies every column
+            # first, which costs as much as converting the row
+            (r,) = grp.tbl.slice(i, 1).to_pylist()
             found[r["term"]].append(r)
         n = {t: _held_bytes(t, rows) for t, rows in found.items()}
         with _GROUP_LOCK:
@@ -297,12 +307,40 @@ def _group_rows(gkey: tuple, md, columns: frozenset, terms) -> dict[str, list[di
     return {t: grp.rows[t] for t in terms}
 
 
+@functools.lru_cache(maxsize=256)
+def _layout(keys: tuple) -> tuple[tuple, tuple]:
+    """The row groups of the files with _cached_footer ``keys``, sorted
+    by their term lower bound: (lo, hi, (*footer key, row group),
+    footer), hi None = unbounded, and the running max of the upper
+    bounds (the walk down from a term's insertion point stops once no
+    group below can reach the term). Memoized per process on the keys,
+    so the statistics walk runs once per directory state."""
+    import itertools
+
+    groups = []
+    for key in keys:
+        md = _footer_at(*key)
+        col = md.schema.names.index("term")
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(col).statistics
+            ok = st is not None and st.has_min_max
+            groups.append((st.min if ok else "", st.max if ok else None, (*key, g), md))
+    groups.sort(key=lambda x: x[0])
+    reach = itertools.accumulate(
+        (x[1] for x in groups),
+        lambda a, b: None if a is None or b is None else max(a, b),
+    )
+    return tuple(groups), tuple(reach)
+
+
 class TermTable:
     """Point reads of a term-keyed parquet table with pyarrow, no Spark
     job, all in the driver: the dictionary, the champion sidecar and a
     segment shard directory (read_segment_rows, for wand.serve_topk).
-    The footers' per-row-group term min/max, read once here, pick the
-    groups a term can lie in, and a read touches only those. On
+    The footers' per-row-group term min/max pick the groups a term can
+    lie in, and a read touches only those; the sorted layout is built
+    once per directory state (_layout) and found again from a listing
+    and a stat per file. On
     write_term_sorted's layout the ranges are disjoint and a term
     touches at most one group. Any other layout (unsorted or multi-file,
     from an older or foreign writer) stays exact and only loses that
@@ -313,28 +351,16 @@ class TermTable:
     memory stays within GROUP_CACHE_BYTES plus the groups of one read."""
 
     def __init__(self, path: str, columns: list[str]):
-        import itertools
-
         self._columns = tuple(columns)
         self._names = ("term", *columns)
-        # (lo, hi, (*footer key, row group), footer); hi None = unbounded
-        self._groups = []
-        for f in sorted(Path(path).iterdir()):
-            if not f.is_file() or f.name.startswith(("_", ".")):
-                continue
-            key, md = _cached_footer(f)
-            col = md.schema.names.index("term")
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(col).statistics
-                ok = st is not None and st.has_min_max
-                self._groups.append((st.min if ok else "", st.max if ok else None, (*key, g), md))
-        self._groups.sort(key=lambda x: x[0])
-        # running max of the upper bounds: the walk down from a term's
-        # insertion point stops once no group below can reach the term
-        self._reach = list(itertools.accumulate(
-            (x[1] for x in self._groups),
-            lambda a, b: None if a is None or b is None else max(a, b),
-        ))
+        # every call lists and stats the directory, so a file rewritten
+        # or added is seen; the layout of an unchanged one is _layout's
+        keys = tuple(
+            _cached_footer(f)[0]
+            for f in sorted(Path(path).iterdir())
+            if f.is_file() and not f.name.startswith(("_", "."))
+        )
+        self._groups, self._reach = _layout(keys)
 
     def rows(self, terms) -> dict[str, tuple]:
         """term -> its ``columns`` values, for the terms in the table."""

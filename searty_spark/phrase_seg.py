@@ -24,12 +24,11 @@ global reduce.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from searty_spark import NGRAM_N, SCORE_NDIGITS
-from searty_spark.segments import decode_segment_positions, decode_segment_scores
+from searty_spark.segments import _ranges, decode_position_blocks, decode_segment_scores
 from searty_spark.tokenize import tokenize
 from searty_spark.wand import SCORE_COLS, _impacts, _per_shard, _require_df
 from searty_spark.wand import _rows_by_term, _shard_request
@@ -40,79 +39,89 @@ from searty_spark.wand import _rows_by_term, _shard_request
 PHRASE_COLS = SCORE_COLS + ["pos_blob", "pos_block_offset"]
 
 
-def _blocks_for(row: dict, docs: np.ndarray) -> list[int]:
-    """Blocks whose doc range can contain any of ``docs``."""
+def _blocks_for(row: dict, docs: np.ndarray) -> np.ndarray:
+    """Ascending ids of the blocks whose doc range can contain any of
+    ``docs``."""
     last = np.asarray(row["block_last_doc"], dtype=np.int64)
     b = np.unique(np.searchsorted(last, docs))
-    return b[b < last.size].tolist()
+    return b[b < last.size]
 
 
-def _shard_docs_with_all(rows: dict[str, dict], toks: list[str]) -> np.ndarray | None:
+def _shard_docs_with_all(
+    rows: dict[str, dict], toks: list[str]
+) -> tuple[np.ndarray, dict[str, tuple]] | None:
     """Conjunctive doc intersection over the SCORE blobs (cheaper than
     positions), rarest term first, progressively block-pruned with
-    block_last_doc — the phrase twin of WAND's block skipping. None
-    when the shard cannot match (all-or-nothing conjunction)."""
+    block_last_doc — the phrase twin of WAND's block skipping. Returns
+    (the docs holding every term, term -> (doc_ids, tfs, doc_lens) of
+    the blocks it decoded), or None when the shard cannot match
+    (all-or-nothing conjunction). Every later step of a phrase request
+    reads its docs, tfs and doc lengths from that one decode per term:
+    the match docs are a subset of the conjunction's, so their blocks
+    are too."""
     if any(t not in rows for t in toks):
         return None
     uniq_terms = sorted(set(toks), key=lambda t: rows[t]["df"])
     common: np.ndarray | None = None
+    decoded: dict[str, tuple] = {}
     for t in uniq_terms:
         row = rows[t]
-        if common is None:
-            docs, _, _ = decode_segment_scores(row)
-        else:
-            blocks = _blocks_for(row, common)
-            if not blocks:
-                return None
-            docs, _, _ = decode_segment_scores(row, blocks)
-        common = (
-            docs.astype(np.int64)
-            if common is None
-            else np.intersect1d(common, docs.astype(np.int64))
-        )
+        blocks = None if common is None else _blocks_for(row, common)
+        if blocks is not None and not blocks.size:
+            return None
+        docs, tfs, dls = decode_segment_scores(row, blocks)
+        docs = docs.astype(np.int64)
+        decoded[t] = (docs, tfs, dls)
+        common = docs if common is None else np.intersect1d(common, docs, assume_unique=True)
         if common.size == 0:
             return None
-    return common
+    return None if common is None else (common, decoded)
 
 
 def _shard_match_starts(
     rows: dict[str, dict], toks: list[str]
-) -> tuple[np.ndarray, np.ndarray] | None:
+) -> tuple[np.ndarray, np.ndarray, dict[str, tuple]] | None:
     """rows: term -> segment row dict. Returns (doc_ids, starts) of
-    every phrase match start in this shard, sorted by (doc, start), or
+    every phrase match start in this shard, sorted by (doc, start),
+    and the conjunction's per-term decode (_shard_docs_with_all), or
     None when the shard has no match.
 
     Fully vectorized: no Python loop scales with the number of
-    candidate docs or matches. The per-offset (doc, rel) pair streams
-    are concatenated, and a (doc, rel) pair is a phrase start iff it
-    occurs in all len(toks) offset streams (the count-distinct-offsets
-    trick of query.py, here as one lexsort + run-length count — pairs
-    are unique within an offset because positions are unique per doc).
+    candidate docs or matches. Each term's positions decode once, only
+    for the blocks holding surviving candidates, in the flat form
+    (counts, flat_positions); each candidate's positions are gathered
+    from it by repeat/arange index arithmetic. The per-offset (doc,
+    rel) pair streams are concatenated, and a (doc, rel) pair is a
+    phrase start iff it occurs in all len(toks) offset streams (the
+    count-distinct-offsets trick of query.py, here as one lexsort +
+    run-length count — pairs are unique within an offset because
+    positions are unique per doc).
     """
-    common = _shard_docs_with_all(rows, toks)
-    if common is None:
+    conj = _shard_docs_with_all(rows, toks)
+    if conj is None:
         return None
-    uniq_terms = sorted(set(toks), key=lambda t: rows[t]["df"])
+    common, decoded = conj
 
-    # 2) positions decode ONLY for blocks holding surviving candidates
-    decoded = {}
-    for t in uniq_terms:
+    # term -> (candidate doc of each position, the position)
+    gathered: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    for t in set(toks):
         row = rows[t]
+        last = np.asarray(row["block_last_doc"], dtype=np.int64)
         blocks = _blocks_for(row, common)
-        decoded[t] = decode_segment_positions(row, blocks)
-    n_off = len(toks)
-    doc_parts: list[np.ndarray] = []
-    rel_parts: list[np.ndarray] = []
-    for i, t in enumerate(toks):
-        docs, plists = decoded[t]
-        idx = np.searchsorted(docs.astype(np.int64), common)
-        lens = np.fromiter((plists[j].size for j in idx), dtype=np.int64, count=idx.size)
-        doc_parts.append(np.repeat(common, lens))
-        rel_parts.append(
-            np.concatenate([plists[j] for j in idx]).astype(np.int64) - i
-        )
-    doc_all = np.concatenate(doc_parts)
-    rel_all = np.concatenate(rel_parts)
+        counts, flat = decode_position_blocks(row, blocks)
+        # the doc ids of those blocks, from the conjunction's decode of
+        # a superset of them
+        docs = decoded[t][0]
+        held = np.zeros(last.size + 1, dtype=bool)
+        held[blocks] = True
+        docs = docs[held[np.searchsorted(last, docs)]]
+        counts = counts.astype(np.int64)
+        j = np.searchsorted(docs, common)
+        lens = counts[j]
+        before = np.cumsum(counts) - counts  # each doc's first position in flat
+        gathered[t] = (np.repeat(common, lens), flat[_ranges(before[j], lens)].astype(np.int64))
+    doc_all = np.concatenate([gathered[t][0] for t in toks])
+    rel_all = np.concatenate([gathered[t][1] - i for i, t in enumerate(toks)])
     order = np.lexsort((rel_all, doc_all))
     d_s, r_s = doc_all[order], rel_all[order]
     first = np.empty(d_s.size, dtype=bool)
@@ -120,32 +129,31 @@ def _shard_match_starts(
     first[1:] = (d_s[1:] != d_s[:-1]) | (r_s[1:] != r_s[:-1])
     grp_start = np.flatnonzero(first)
     counts = np.diff(np.append(grp_start, d_s.size))
-    keep = grp_start[counts == n_off]
+    keep = grp_start[counts == len(toks)]
     if keep.size == 0:
         return None
-    return d_s[keep], r_s[keep]  # sorted by (doc, start)
+    return d_s[keep], r_s[keep], decoded  # sorted by (doc, start)
 
 
-def _shard_phrase(rows: dict[str, dict], toks: list[str], width: int) -> pd.DataFrame:
-    """(doc_id, start, end) coalesced ranges for one shard.
+def _shard_phrase(
+    rows: dict[str, dict], toks: list[str], width: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """(doc_id, start, end) coalesced ranges for one shard, or None.
 
     Range coalescing exploits that every range has the same width, so
     ends ascend with starts and an island boundary is simply
     ``start > previous end`` within a doc."""
-    empty = pd.DataFrame({"doc_id": [], "start": [], "end": []})
     m = _shard_match_starts(rows, toks)
     if m is None:
-        return empty
-    docs_m, starts_m = m
+        return None
+    docs_m, starts_m, _ = m
     ends_m = starts_m + width
     island = np.empty(docs_m.size, dtype=bool)
     island[0] = True
     island[1:] = (docs_m[1:] != docs_m[:-1]) | (starts_m[1:] > ends_m[:-1])
     isl = np.flatnonzero(island)
     last = np.append(isl[1:], docs_m.size) - 1
-    return pd.DataFrame(
-        {"doc_id": docs_m[isl], "start": starts_m[isl], "end": ends_m[last]}
-    )
+    return docs_m[isl], starts_m[isl], ends_m[last]
 
 
 def phrase_ranges_segments(
@@ -183,9 +191,9 @@ def docs_with_all_terms_segments(
     conjunctive boolean filter."""
     terms = sorted(set(terms))
 
-    def kernel(rows: list[dict]) -> pd.DataFrame | None:
-        common = _shard_docs_with_all(_rows_by_term(rows), terms)
-        return None if common is None else pd.DataFrame({"doc_id": common})
+    def kernel(rows: list[dict]) -> tuple[np.ndarray] | None:
+        conj = _shard_docs_with_all(_rows_by_term(rows), terms)
+        return None if conj is None else (conj[0],)
 
     # conjunction reads only the score blobs — the position streams
     # stay on disk
@@ -194,24 +202,21 @@ def docs_with_all_terms_segments(
 
 def _shard_phrase_bm25(
     rows: dict[str, dict], toks: list[str], n_docs: int, avgdl: float
-) -> pd.DataFrame:
-    """(doc_id, score, n_matches) for one shard: phrase-matching docs
-    scored with BM25 over the phrase's distinct trigrams. Every match
-    doc contains every term (conjunctive match), so each term's impact
-    is gathered by one searchsorted into its block-pruned decode — no
-    per-doc Python."""
-    empty = pd.DataFrame({"doc_id": [], "score": [], "n_matches": []})
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_id, score, n_matches) numpy columns for one shard, in doc
+    order: phrase-matching docs scored with BM25 over the phrase's
+    distinct trigrams. Every match doc contains every term (conjunctive
+    match), so each term's impacts are gathered by one searchsorted
+    into the conjunction's decode of that term — no block decodes
+    twice in a request, and no per-doc Python."""
     m = _shard_match_starts(rows, toks)
     if m is None:
-        return empty
-    docs_m, _ = m
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64), np.empty(0, dtype=np.int64)
+    docs_m, _, decoded = m
     mdocs, counts = np.unique(docs_m, return_counts=True)
     scores = np.zeros(mdocs.size, dtype=np.float64)
     for t in sorted(set(toks)):
-        row = rows[t]
-        blocks = _blocks_for(row, mdocs)
-        docs, tfs, dls = decode_segment_scores(row, blocks)
-        docs = docs.astype(np.int64)
+        docs, tfs, dls = decoded[t]
         idx = np.searchsorted(docs, mdocs)
         # clip before gathering: idx == len(docs) (match doc beyond every
         # decoded posting — corrupted/inconsistent index) must surface as
@@ -220,14 +225,8 @@ def _shard_phrase_bm25(
             docs[np.minimum(idx, docs.size - 1)], mdocs
         ):
             raise AssertionError("phrase match doc missing from term postings")
-        scores += _impacts(tfs, dls, n_docs, avgdl, _require_df(row))[idx]
-    return pd.DataFrame(
-        {
-            "doc_id": mdocs,
-            "score": np.round(scores, SCORE_NDIGITS),
-            "n_matches": counts.astype(np.int64),
-        }
-    )
+        scores += _impacts(tfs[idx], dls[idx], n_docs, avgdl, _require_df(rows[t]))
+    return mdocs, np.round(scores, SCORE_NDIGITS), counts.astype(np.int64)
 
 
 def phrase_bm25_topk_segments(
@@ -243,8 +242,9 @@ def phrase_bm25_topk_segments(
 ) -> DataFrame:
     """(doc_id, score, n_matches) — ranked phrase search over the
     compressed segments: identical output to query.phrase_bm25_topk.
-    The phrase intersection prunes to match docs first; BM25 impacts
-    then decode only the blocks holding those docs. ``n_docs`` and
+    The phrase intersection prunes to match docs first; their BM25
+    impacts are gathered from the intersection's own decode of each
+    term, so no block decodes twice. ``n_docs`` and
     ``avgdl`` are required; ``df_lookup`` (a dict or None) and
     ``n_shards`` are as in wand.wand_topk, and ``pre_partitioned`` is
     ignored as there."""

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from searty_spark import BM25_B, BM25_K1
-from searty_spark.codec import varbyte_decode, varbyte_encode
+from searty_spark.codec import varbyte_decode, varbyte_decode_runs, varbyte_encode
 
 BLOCK_SIZE = 128
 
@@ -102,14 +102,10 @@ def _grouped_delta(flat: np.ndarray, counts: np.ndarray) -> np.ndarray:
 def _grouped_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Inverse of :func:`_grouped_delta`, vectorized: subtract from each
     group the running total just before its first element."""
-    if deltas.size == 0:
-        return deltas.astype(np.uint64)
-    cs = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
-    starts = starts[starts < deltas.size]
-    grp_base = np.where(starts > 0, cs[np.maximum(starts - 1, 0)], 0).astype(np.uint64)
-    reps = np.diff(np.concatenate([starts, [deltas.size]])).astype(np.int64)
-    return cs - np.repeat(grp_base, reps)
+    cs = np.zeros(deltas.size + 1, dtype=np.uint64)
+    np.cumsum(deltas, dtype=np.uint64, out=cs[1:])
+    counts = counts.astype(np.int64)
+    return cs[1:] - np.repeat(cs[np.cumsum(counts) - counts], counts)
 
 
 def encode_score_block(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> bytes:
@@ -377,38 +373,85 @@ def _encode_flat(
     )
 
 
+def _join_blocks(blob: bytes, offsets, blocks) -> tuple[bytes, np.ndarray]:
+    """The bytes of ``blocks`` (ascending block ids; all when None) of a
+    blob whose blocks begin at ``offsets``, joined, and the byte at
+    which each block begins in them. A run of adjacent blocks is one
+    slice."""
+    offs = np.asarray(offsets, dtype=np.int64)
+    if blocks is None:
+        return blob, offs
+    sel = np.asarray(blocks, dtype=np.int64)
+    if sel.size == 0:
+        return b"", sel
+    bounds = np.append(offs, len(blob))
+    lo, hi = bounds[sel], bounds[sel + 1]
+    if sel[-1] - sel[0] == sel.size - 1:
+        return blob[lo[0] : hi[-1]], lo - lo[0]
+    lens = hi - lo
+    data = b"".join([blob[a:b] for a, b in zip(lo.tolist(), hi.tolist())])
+    return data, np.cumsum(lens) - lens
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The index ranges starts[i] .. starts[i] + lens[i] - 1 of every
+    i, concatenated, from one repeat and one arange."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(int(lens.sum()))
+
+
+def _block_values(data: bytes, starts: np.ndarray):
+    """ONE varbyte_decode of joined blocks, each a count header ``n``
+    and then its values: -> (values, each header's index, each block's
+    n, the index of each block's first n values after its header)."""
+    vals, heads = varbyte_decode_runs(data, starts)
+    n = vals[heads].astype(np.int64)
+    return vals, heads, n, _ranges(heads + 1, n)
+
+
 def decode_segment_scores(row, blocks=None):
-    """Segment row -> (doc_ids, tfs, doc_lens) for selected blocks."""
-    blob = row["blob"]
-    offsets = list(row["block_offset"]) + [len(blob)]
-    sel = range(len(offsets) - 1) if blocks is None else blocks
-    docs, tfs, dls = [], [], []
-    for b in sel:
-        d, t, l = decode_score_block(blob[offsets[b] : offsets[b + 1]])
-        docs.append(d)
-        tfs.append(t)
-        dls.append(l)
-    if not docs:
-        z = np.empty(0, dtype=np.uint64)
-        return z, z.copy(), z.copy()
-    return np.concatenate(docs), np.concatenate(tfs), np.concatenate(dls)
+    """Segment row -> (doc_ids, tfs, doc_lens), uint64 arrays in doc
+    order, of the ascending ``blocks`` (every block when None).
+
+    The selected blocks' bytes are joined and decoded by ONE
+    varbyte_decode; each block's count header splits the values into
+    its doc deltas, tfs and doc lengths, and one grouped cumsum
+    restores the doc ids (a block's first doc is stored absolute)."""
+    data, starts = _join_blocks(row["blob"], row["block_offset"], blocks)
+    vals, _, n, first = _block_values(data, starts)
+    step = np.repeat(n, n)
+    return (
+        _grouped_cumsum(vals[first], n),
+        vals[first + step],
+        vals[first + 2 * step],
+    )
+
+
+def decode_position_blocks(row, blocks=None):
+    """Segment row -> (counts, flat_positions) of the ascending
+    ``blocks`` (every block when None), from ONE varbyte_decode: each
+    doc's position count in doc order, and all their positions
+    concatenated in that order. With the doc ids of the same blocks
+    (decode_segment_scores) this is the flat posting form
+    (doc_ids, counts, flat_positions) the phrase kernels match on."""
+    data, starts = _join_blocks(row["pos_blob"], row["pos_block_offset"], blocks)
+    vals, heads, _, first = _block_values(data, starts)
+    counts = vals[first]
+    # every value that is neither a block header nor a count is a
+    # position, delta-coded within its doc
+    is_pos = np.ones(vals.size, dtype=bool)
+    is_pos[heads] = False
+    is_pos[first] = False
+    return counts, _grouped_cumsum(vals[is_pos], counts)
 
 
 def decode_segment_positions(row, blocks=None):
-    """Segment row -> (doc_ids, list-of-position-arrays per doc)."""
-    pos_blob = row["pos_blob"]
-    offsets = list(row["pos_block_offset"]) + [len(pos_blob)]
-    sel = range(len(offsets) - 1) if blocks is None else blocks
-    doc_ids, _, _ = decode_segment_scores(row, blocks)
-    plists: list[np.ndarray] = []
-    for b in sel:
-        counts, flat = decode_pos_block(pos_blob[offsets[b] : offsets[b + 1]])
-        bounds = np.cumsum(counts).astype(np.int64)
-        prev = 0
-        for e in bounds:
-            plists.append(flat[prev:e])
-            prev = int(e)
-    return doc_ids, plists
+    """Segment row -> (doc_ids, one position array per doc): the list
+    form of the flat decode, for merge and the tests."""
+    docs = decode_segment_scores(row, blocks)[0]
+    counts, flat = decode_position_blocks(row, blocks)
+    if counts.size == 0:
+        return docs, []
+    return docs, np.split(flat, np.cumsum(counts[:-1]).astype(np.int64))
 
 
 def build_segments(

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from searty_spark import BM25_B, BM25_K1, NGRAM_N, SCORE_NDIGITS
-from searty_spark.segments import bm25_impact, decode_score_block
+from searty_spark.segments import bm25_impact, decode_segment_scores
 from searty_spark.tokenize import tokenize
 
 # the columns BM25 scoring actually reads — everything the score
@@ -60,21 +60,6 @@ def _impacts(tfs, dls, n_docs: int, avgdl: float, df_global: int) -> np.ndarray:
     return idf * tf * (BM25_K1 + 1.0) / denom
 
 
-def _decode_blocks(row: dict, blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    blob = row["blob"]
-    offs = list(row["block_offset"]) + [len(blob)]
-    ds, ts, ls = [], [], []
-    for b in blocks:
-        d, t, l = decode_score_block(blob[offs[b] : offs[b + 1]])
-        ds.append(d)
-        ts.append(t)
-        ls.append(l)
-    if not ds:
-        z = np.empty(0, dtype=np.uint64)
-        return z, z.copy(), z.copy()
-    return np.concatenate(ds), np.concatenate(ts), np.concatenate(ls)
-
-
 def _require_df(row: dict) -> int:
     v = row["df_global"]
     if v is None or v != v:  # None or NaN (nulls arrive as NaN via Arrow)
@@ -86,8 +71,9 @@ def _require_df(row: dict) -> int:
 
 
 def _term_scores(row: dict, n_docs: int, avgdl: float, blocks=None):
-    blocks = blocks if blocks is not None else range(len(row["block_offset"]))
-    docs, tfs, dls = _decode_blocks(row, blocks)
+    """(doc_ids, exact impacts) of the ascending ``blocks`` of one term
+    row (every block when None), from one decode."""
+    docs, tfs, dls = decode_segment_scores(row, blocks)
     return docs.astype(np.int64), _impacts(tfs, dls, n_docs, avgdl, _require_df(row))
 
 
@@ -106,11 +92,7 @@ def _check_duplicate_term_rows(rows: list[dict]) -> None:
         if n < 2:
             continue
         all_docs = np.concatenate(
-            [
-                _decode_blocks(r, range(len(r["block_offset"])))[0]
-                for r in rows
-                if r["term"] == term
-            ]
+            [decode_segment_scores(r)[0] for r in rows if r["term"] == term]
         ).astype(np.int64)
         if np.unique(all_docs).size != all_docs.size:
             raise ValueError(
@@ -138,7 +120,7 @@ def _rows_by_term(rows: list[dict]) -> dict[str, dict]:
 
 def _gather_add(
     r: dict,
-    blocks: list[int],
+    blocks: np.ndarray,
     cdocs: np.ndarray,
     cscores: np.ndarray,
     n_docs: int,
@@ -165,10 +147,17 @@ def _candidate_blocks(r: dict, cdocs: np.ndarray) -> np.ndarray:
     return np.unique(first_needed[first_needed < last.size])
 
 
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
+    return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+
+
 def shard_topk(
     rows: list[dict], n_docs: int, avgdl: float, k: int, theta0: float = 0.0
-) -> pd.DataFrame:
-    """Exact MaxScore top-k for one shard's query-term segment rows.
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact MaxScore top-k for one shard's query-term segment rows:
+    (doc_ids int64, scores rounded to SCORE_NDIGITS), at most k, in
+    (score DESC, doc_id ASC) order. Each term row's selected blocks
+    decode in one call (segments.decode_segment_scores).
 
     ``theta0`` is an optional EXTERNAL lower bound on the global
     kth-best total score (champions.champion_theta) — with it, the
@@ -185,7 +174,7 @@ def shard_topk(
     accepted when their doc sets are disjoint — then per-row scoring
     sums to exact BM25 — and rejected otherwise."""
     if not rows:
-        return pd.DataFrame({"doc_id": [], "score": []})
+        return _no_hits()
     if len({r["term"] for r in rows}) != len(rows):
         _check_duplicate_term_rows(rows)
     bubs = [
@@ -224,15 +213,11 @@ def shard_topk(
     else:
         sk = np.setdiff1d(np.arange(bub0.size), keep0)
         skipped.append((rows[0], sk, float(bub0[sk].max())))
-        if keep0.size:
-            seed_docs, seed_sc = _term_scores(rows[0], n_docs, avgdl, keep0.tolist())
-        else:
-            seed_docs = np.empty(0, dtype=np.int64)
-            seed_sc = np.empty(0, dtype=np.float64)
+        seed_docs, seed_sc = _term_scores(rows[0], n_docs, avgdl, keep0)
     # decoded seed impacts are exact per-doc partials -> valid bound
     theta = max(theta, _kth(seed_sc, k) - PAD)
     if n_terms == 1:
-        return _topk_frame(seed_docs, seed_sc, k)
+        return _topk(seed_docs, seed_sc, k)
 
     # --- split essential / non-essential by cumulative bound (asc)
     cum = np.cumsum(ubs[::-1])[::-1]  # cum[i] = ubs[i] + ubs[i+1] + ...
@@ -260,13 +245,13 @@ def shard_topk(
             sk = np.setdiff1d(np.arange(bub.size), keep)
             skipped.append((r, sk, float(bub[sk].max())))
             if keep.size:
-                parts.append(_term_scores(r, n_docs, avgdl, keep.tolist()))
+                parts.append(_term_scores(r, n_docs, avgdl, keep))
     all_docs = np.concatenate([p[0] for p in parts])
     all_sc = np.concatenate([p[1] for p in parts])
     if all_docs.size == 0:
         # every essential block provably scores below the global kth
         # best: this shard contributes nothing to the top-k
-        return pd.DataFrame({"doc_id": [], "score": []})
+        return _no_hits()
     docs, inv = np.unique(all_docs, return_inverse=True)
     scores = np.zeros(docs.size, dtype=np.float64)
     np.add.at(scores, inv, all_sc)
@@ -284,12 +269,12 @@ def shard_topk(
     for r, sk, _ in skipped:
         needed = np.intersect1d(_candidate_blocks(r, cdocs), sk)
         if needed.size:
-            cscores = _gather_add(r, needed.tolist(), cdocs, cscores, n_docs, avgdl)
+            cscores = _gather_add(r, needed, cdocs, cscores, n_docs, avgdl)
     for r in non_essential:
         blocks = _candidate_blocks(r, cdocs)
         if blocks.size:
-            cscores = _gather_add(r, blocks.tolist(), cdocs, cscores, n_docs, avgdl)
-    return _topk_frame(cdocs, cscores, k)
+            cscores = _gather_add(r, blocks, cdocs, cscores, n_docs, avgdl)
+    return _topk(cdocs, cscores, k)
 
 
 def _kth(scores: np.ndarray, k: int) -> float:
@@ -301,27 +286,29 @@ def _kth(scores: np.ndarray, k: int) -> float:
     return float(np.partition(scores, -k)[-k])
 
 
-def _topk_frame(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+def _topk(docs: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     r = np.round(scores, SCORE_NDIGITS)
     order = np.lexsort((docs, -r))[:k]
-    return pd.DataFrame({"doc_id": docs[order].astype(np.int64), "score": r[order]})
+    return docs[order].astype(np.int64), r[order]
 
 
 def _shard_request(
     rows: list[dict], mode: str, toks: list[str], n_docs: int, avgdl: float,
     k: int, theta0: float = 0.0,
-) -> pd.DataFrame:
-    """One request's local top-k on one shard, in (score DESC, doc_id
-    ASC) order: mode "bm25" is shard_topk over ``rows`` (theta0 as
-    there), mode "phrase" is _shard_phrase_bm25 over the trigram
-    sequence ``toks`` — (doc_id, score, n_matches) — cut to k. The
-    one-shot entries and serve_topk both answer through it."""
+) -> tuple[np.ndarray, ...]:
+    """One request's local top-k on one shard as numpy columns, at most
+    k, in (score DESC, doc_id ASC) order: mode "bm25" is shard_topk
+    over ``rows`` (theta0 as there) -> (doc_id, score); mode "phrase"
+    is _shard_phrase_bm25 over the trigram sequence ``toks``, which
+    decodes each term's blocks once -> (doc_id, score, n_matches).
+    The one-shot entries and serve_topk both answer through it."""
     if mode != "phrase":
         return shard_topk(rows, n_docs, avgdl, k, theta0)
     from searty_spark.phrase_seg import _shard_phrase_bm25
 
-    f = _shard_phrase_bm25(_rows_by_term(rows), toks, n_docs, avgdl)
-    return f.iloc[np.lexsort((f["doc_id"].to_numpy(), -f["score"].to_numpy()))[:k]]
+    docs, scores, n_matches = _shard_phrase_bm25(_rows_by_term(rows), toks, n_docs, avgdl)
+    order = np.lexsort((docs, -scores))[:k]
+    return docs[order], scores[order], n_matches[order]
 
 
 class TermDfClient:
@@ -386,8 +373,9 @@ def _per_shard(
 ) -> DataFrame:
     """The plan of every segment query: ``kernel(rows)`` once per shard
     over that shard's segment rows of ``terms`` (row dicts, df_global
-    attached when a ``df_lookup`` is passed); the frames it returns,
-    None skipped, make up the result, of ``schema``.
+    attached when a ``df_lookup`` is passed). The kernel returns numpy
+    columns in ``schema``'s order, or None; they become the result's
+    rows here, the one place a kernel's output meets pandas.
 
     The term filter reaches the parquet scan, whose row-group term
     statistics skip the groups no term can lie in. ``cols`` is projected
@@ -404,6 +392,7 @@ def _per_shard(
     if df_lookup is not _NO_DF:
         pruned = _with_df_global(pruned, terms, df_lookup)
     rep = pruned.repartition(n_shards, "shard") if n_shards else pruned.repartition("shard")
+    names = [c.split()[0] for c in schema.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         by_shard: dict[int, list[dict]] = {}
@@ -411,9 +400,9 @@ def _per_shard(
             for rec in pdf.to_dict("records"):
                 by_shard.setdefault(int(rec["shard"]), []).append(rec)
         for rows in by_shard.values():
-            frame = kernel(rows)
-            if frame is not None:
-                yield frame
+            cols = kernel(rows)
+            if cols is not None:
+                yield pd.DataFrame(dict(zip(names, cols)))
 
     return rep.mapInPandas(run, schema)
 
@@ -491,18 +480,17 @@ def wand_topk_batch(
     q_terms = {qid: sorted(set(tokenize(q, n))) for qid, q in queries.items()}
     all_terms = sorted({t for ts in q_terms.values() for t in ts})
 
-    def kernel(shard_rows: list[dict]) -> pd.DataFrame | None:
+    def kernel(shard_rows: list[dict]) -> tuple[np.ndarray, ...] | None:
         rows = _rows_by_term(shard_rows)
         # decode every needed term once, share across queries
         cache: dict[str, tuple] = {}
-        frames = []
+        parts = []
         for qid, terms in q_terms.items():
             sub = [rows[t] for t in terms if t in rows]
             if sub:
-                frame = shard_topk_cached(sub, n_docs, avgdl, k, cache)
-                frame.insert(0, "query_id", qid)
-                frames.append(frame)
-        return pd.concat(frames) if frames else None
+                docs, scores = shard_topk_cached(sub, n_docs, avgdl, k, cache)
+                parts.append((np.full(docs.size, qid, dtype=object), docs, scores))
+        return tuple(map(np.concatenate, zip(*parts))) if parts else None
 
     local = _per_shard(
         segments, all_terms, SCORE_COLS, kernel,
@@ -519,10 +507,10 @@ def wand_topk_batch(
 
 def shard_topk_cached(
     rows: list[dict], n_docs: int, avgdl: float, k: int, cache: dict
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray]:
     """shard_topk variant sharing decoded term scores across queries
     (exhaustive TAAT per query — the decode, not the arithmetic, is the
-    cost being amortized)."""
+    cost being amortized); returns shard_topk's (doc_id, score)."""
     parts = []
     for r in rows:
         key = r["term"]
@@ -534,7 +522,7 @@ def shard_topk_cached(
     docs, inv = np.unique(all_docs, return_inverse=True)
     scores = np.zeros(docs.size, dtype=np.float64)
     np.add.at(scores, inv, all_sc)
-    return _topk_frame(docs, scores, k)
+    return _topk(docs, scores, k)
 
 
 def serve_topk(
@@ -563,9 +551,10 @@ def serve_topk(
     per process while index's row-group cache holds it; position
     streams only when a phrase request is in the batch), attaches df_global
     from ``df_lookup``, and runs _shard_request per request (the
-    one-shot entries' shard kernel: a local top-k). The first k per request under
-    (score DESC, doc_id ASC) are kept, exact because every doc lives
-    in one shard.
+    one-shot entries' shard kernel: a local top-k as numpy arrays, no
+    frame). The first k per request under (score DESC, doc_id ASC) of
+    the shards' arrays are kept, exact because every doc lives in one
+    shard.
 
     ``df_lookup`` maps the requests' dictionary terms to df_global
     (TermDfClient.lookup). Every query term's rows are read, whether
@@ -581,7 +570,7 @@ def serve_topk(
         return out
     cols = PHRASE_COLS if any(m == "phrase" for m, _, _ in requests) else SCORE_COLS
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    found: list[tuple[int, int, float]] = []
+    found: list[list[tuple]] = [[] for _ in requests]  # per request: shards' (doc_id, score)
     for shard in range(stats["n_shards"]):
         rows = read_segment_rows(index_dir, shard, terms, cols)
         for r in rows:
@@ -589,12 +578,12 @@ def serve_topk(
         for i, (mode, toks, theta0) in enumerate(requests):
             want = set(toks)
             sub = [r for r in rows if r["term"] in want]
-            if not sub:
-                continue
-            frame = _shard_request(sub, mode, toks, n_docs, avgdl, k, theta0)
-            for d, sc in zip(frame["doc_id"].tolist(), frame["score"].tolist()):
-                found.append((i, d, sc))
-    for i, d, sc in sorted(found, key=lambda r: (r[0], -r[2], r[1])):
-        if len(out[i]) < k:
-            out[i].append([d, sc])
+            if sub:
+                found[i].append(_shard_request(sub, mode, toks, n_docs, avgdl, k, theta0)[:2])
+    for i, parts in enumerate(found):
+        if parts:
+            docs = np.concatenate([p[0] for p in parts])
+            scores = np.concatenate([p[1] for p in parts])
+            order = np.lexsort((docs, -scores))[:k]
+            out[i] = [list(x) for x in zip(docs[order].tolist(), scores[order].tolist())]
     return out

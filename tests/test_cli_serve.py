@@ -199,6 +199,53 @@ def test_serve_batch_starts_no_job_and_matches_single_requests(
     assert {r["batched"] for r in _replies(capsys).values()} == {1}
 
 
+def test_serve_batch_builds_no_pandas_frame(spark, served, jobs_of, monkeypatch, capsys):
+    """The serve kernels return numpy arrays: with pandas.DataFrame made
+    to raise, a mixed BM25 and phrase batch (theta0-seeded, no-hit and
+    multi-term requests included) is answered with no frame built and
+    no Spark job, and every answer equals its single-request
+    function's."""
+    import pandas as pd
+
+    from searty_spark import cli
+    from searty_spark.index import load_segments, load_stats
+    from searty_spark.phrase_seg import phrase_bm25_topk_segments
+    from searty_spark.wand import wand_topk
+
+    d, k = served, 5
+    st = load_stats(d)
+    items = [("bm25", "shared"), ("phrase", "shared phrase"), ("bm25", "module query"),
+             ("phrase", "spark"), ("bm25", "@@"), ("batch", '["module", "the shared"]')]
+    seg = load_segments(spark, d)
+    dic = {r["term"]: r["df_global"] for r in spark.read.parquet(f"{d}/dictionary").collect()}
+    common = dict(k=k, n_docs=st["n_docs"], avgdl=st["avgdl"], n_shards=st["n_shards"],
+                  df_lookup=dic)
+
+    def want(mode, q):
+        f = phrase_bm25_topk_segments(seg, q, **common) if mode == "phrase" else wand_topk(
+            seg, None, q, **common)
+        return [[r["doc_id"], r["score"]] for r in f.collect()]
+
+    wants = [[want("bm25", q) for q in json.loads(arg)] if mode == "batch" else want(mode, arg)
+             for mode, arg in items]
+    srv = cli._Server(spark, d, k)
+    frames = []
+
+    def no_frame(*args, **kwargs):
+        frames.append(args)
+        raise AssertionError("a pandas DataFrame was built on the serve path")
+
+    monkeypatch.setattr(pd, "DataFrame", no_frame)
+    assert jobs_of(lambda: _run(srv, items, len(items))) == 0
+    got = _replies(capsys)
+    monkeypatch.undo()
+    assert frames == []
+    assert sorted(got) == list(range(len(items)))
+    for seq, w in enumerate(wants):
+        assert got[seq]["results"] == w, got[seq]
+    assert wants[0] and wants[1] and wants[4] == []
+
+
 def test_repeated_batch_decodes_no_group_and_starts_no_job(
     spark, served, jobs_of, groups_read, capsys
 ):

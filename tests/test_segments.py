@@ -14,6 +14,7 @@ from searty_spark.segments import (
     _grouped_delta,
     build_segments,
     decode_pos_block,
+    decode_position_blocks,
     decode_score_block,
     decode_segment_positions,
     decode_segment_scores,
@@ -138,3 +139,62 @@ def test_shard_df_sums_to_global(small_corpus, oracle_index, seg_df):
         per_term[r["term"]] = per_term.get(r["term"], 0) + r["df"]
     for t, df in per_term.items():
         assert df == len(oracle_index.postings[t]), t
+
+
+def _per_block_decode(row, blocks):
+    """The block-at-a-time reference for the one-call decodes: each
+    block's bytes through decode_score_block / decode_pos_block."""
+    blob, pblob = row["blob"], row["pos_blob"]
+    offs = list(row["block_offset"]) + [len(blob)]
+    poffs = list(row["pos_block_offset"]) + [len(pblob)]
+    cols: list[list[np.ndarray]] = [[], [], [], [], []]
+    for b in blocks:
+        for c, v in zip(cols, decode_score_block(blob[offs[b] : offs[b + 1]])):
+            c.append(v)
+        counts, flat = decode_pos_block(pblob[poffs[b] : poffs[b + 1]])
+        cols[3].append(counts)
+        cols[4].append(flat)
+    return [np.concatenate(c) if c else np.empty(0, dtype=np.uint64) for c in cols]
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_one_call_decode_equals_per_block_decode(seed):
+    """decode_segment_scores / decode_position_blocks decode the
+    selected blocks with one varbyte call; for random terms, block
+    sizes (down to one posting per block) and block subsets (none, one,
+    all, runs, non-contiguous), with doc ids, tfs and positions that
+    take several varbyte bytes, they equal the per-block decode, and
+    decode_segment_positions' list form equals the flat form."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for t in range(4):
+        n = int(rng.integers(1, 400))
+        docs = np.sort(rng.choice(10**7, n, replace=False))
+        tfs = rng.integers(1, 6, n)
+        rows.append(pd.DataFrame({
+            "shard": 0, "bucket": 0, "term": f"t{t}", "doc_id": docs, "tf": tfs,
+            "positions": [np.sort(rng.choice(2 * 10**5, k, replace=False)) for k in tfs],
+            "doc_len": rng.integers(1, 70_000, n),
+        }))
+    block_size = int(rng.choice([1, 2, 7, 128]))
+    out = encode_segment_rows(pd.concat(rows, ignore_index=True), block_size=block_size)
+    for _, rec in out.iterrows():
+        row = rec.to_dict()
+        nb = len(row["block_offset"])
+        subsets = [None, [], [0], [nb - 1], list(range(nb)),
+                   list(range(nb // 3, nb // 3 + max(1, nb // 2)))]
+        subsets += [sorted(rng.choice(nb, int(rng.integers(1, nb + 1)), replace=False).tolist())
+                    for _ in range(3)]
+        subsets += [list(range(0, nb, 2)), list(range(1, nb, 3))]
+        for blocks in subsets:
+            ref = _per_block_decode(row, range(nb) if blocks is None else blocks)
+            got = list(decode_segment_scores(row, blocks)) + list(
+                decode_position_blocks(row, blocks)
+            )
+            for g, w in zip(got, ref):
+                assert g.dtype == w.dtype == np.uint64 and g.tolist() == w.tolist(), blocks
+            docs, counts, flat = got[0], got[3], got[4]
+            d2, plists = decode_segment_positions(row, blocks)
+            assert d2.tolist() == docs.tolist() and len(plists) == docs.size == counts.size
+            assert [p.size for p in plists] == counts.tolist()
+            assert (np.concatenate(plists) if plists else flat).tolist() == flat.tolist()

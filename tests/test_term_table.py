@@ -169,6 +169,25 @@ def test_repeated_lookup_decodes_no_group(tmp_path, groups_read, group_cache):
     assert warm.hits == cold.groups and warm.bytes == cold.bytes > 0
 
 
+def test_unchanged_directory_layout_is_walked_once(tmp_path):
+    """A TermTable over a directory whose files are unchanged reuses
+    the sorted group layout: the second one walks no row-group
+    statistics. A file rewritten in place gets a new layout."""
+    from searty_spark.index import _layout
+
+    path, full = _write_dictionary(tmp_path)
+    TermTable(path, ["df_global"])
+    before = _layout.cache_info()
+    t = TermTable(path, ["token_id", "df_global"])
+    after = _layout.cache_info()
+    assert after.misses == before.misses and after.hits == before.hits + 1
+    assert {x: v for x, (_, v) in t.rows(TERMS).items()} == full
+    few = TERMS[:5]
+    pq.write_table(_dictionary(few), f"{path}/part-00000.parquet", row_group_size=1)
+    assert TermDfClient(None, str(tmp_path)).lookup(TERMS) == _full(_dictionary(few))
+    assert _layout.cache_info().misses == after.misses + 1
+
+
 def test_tables_with_other_columns_get_their_own_columns(tmp_path, group_cache):
     path, full = _write_dictionary(tmp_path)
     tok = {t: sum(t.encode()) for t in TERMS}
@@ -299,6 +318,23 @@ def test_cold_lookup_converts_only_its_terms(tmp_path, groups_read, group_cache)
     assert table.rows(TERMS) == {t: (full[t],) for t in TERMS}
     assert groups_read[0] == 1 and set(grp.rows) == set(TERMS) | {"zzzz"}
     assert group_cache.group_cache_info().bytes == grp.nbytes > one.bytes
+
+
+def test_every_row_of_a_term_in_one_group_comes_back(tmp_path, group_cache):
+    """A row group holding several rows of one term, apart (an unsorted
+    foreign layout), answers every one of them in file order, on the
+    cold read and on the warm one."""
+    d = tmp_path / "t"
+    d.mkdir()
+    terms = ["mod", "abc", "mod", "zzz", "abc", "mod"]
+    pq.write_table(pa.table({"term": terms, "df_global": list(range(6))}),
+                   d / "part-00000.parquet")
+    for _ in range(2):
+        got = TermTable(str(d), ["df_global"]).dicts(["mod", "zzz", "nope"])
+        assert [(r["term"], r["df_global"]) for r in got] == [
+            ("mod", 0), ("mod", 2), ("mod", 5), ("zzz", 3)
+        ]
+    assert group_cache.group_cache_info().misses == 1
 
 
 def test_champion_client_keeps_no_per_term_state(tmp_path, groups_read, group_cache):
